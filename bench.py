@@ -19,6 +19,7 @@ _REPO = Path(__file__).resolve().parent
 if str(_REPO) not in sys.path:
     sys.path.insert(0, str(_REPO))
 
+from snackfs_spark import memo  # noqa: E402
 from snackfs_spark.registry import load_all  # noqa: E402
 from snackfs_spark.session import get_spark  # noqa: E402
 
@@ -440,6 +441,36 @@ def _subtotals(timings: dict[str, float]) -> dict[str, float]:
     }
 
 
+def _time_query(name: str, run) -> tuple[float, float, int]:
+    """Best-of-3 wall time of ``run()``: returns (best, first rep, shared
+    relations built during the first rep). The first rep pays one-time
+    codegen/plan compilation for the query's unique expressions; later
+    reps are steady state (three samples because host timing variance on
+    shared boxes is large — factor-3 swings observed run-to-run on
+    identical plans). A shared-relation build in rep 2 or 3 (an LRU
+    eviction) would hide inside best-of-3, so it prints an ALARM line
+    naming the query to stderr — before main()'s stdout JSON line."""
+    best = float("inf")
+    first = 0.0
+    first_builds = 0
+    for rep in range(3):
+        pre_builds = memo.build_count()
+        start = time.perf_counter()
+        run()
+        elapsed = time.perf_counter() - start
+        rep_builds = memo.build_count() - pre_builds
+        if rep == 0:
+            first, first_builds = elapsed, rep_builds
+        elif rep_builds:
+            print(
+                f"ALARM {name}: rep {rep + 1} rebuilt {rep_builds} "
+                "shared relation(s)",
+                file=sys.stderr,
+            )
+        best = min(best, elapsed)
+    return best, first, first_builds
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -465,10 +496,8 @@ def main() -> None:
     fsmodel.content_df(spark, sf_dir).count()
     fsmodel.locks_df(spark, sf_dir).count()
 
-    from snackfs_spark import memo
-
     timings: dict[str, float] = {}
-    # One-time SessionMemo build cost billed to each memo family's FIRST
+    # One-time shared-relation build cost billed to each relation's FIRST
     # toucher (r11 VERDICT #1: best-of-3 discarded every shared build, so
     # e.g. text_bigram_prob recorded 0.018 s against a ~1.1 s memo build).
     # Detection: the memo build counter advances during rep 1 iff this
@@ -477,24 +506,15 @@ def main() -> None:
     # over- rather than under-statement of the shared cost.
     builds: dict[str, float] = {}
     for name in (n for grp in rounds for n in grp):
-        # best of 3: the first run pays one-time codegen/plan compilation
-        # for the query's unique expressions; later runs are steady state
-        # (three samples because host timing variance on shared boxes is
-        # large — factor-3 swings observed run-to-run on identical plans).
-        best = float("inf")
-        first = 0.0
-        pre_builds = memo.build_count()
-        for rep in range(3):
-            start = time.perf_counter()
-            df = registry[name].fn(spark, sf_dir)
-            # noop sink: full distributed execution of the plan, no
-            # driver-side result transfer billed to the operator.
-            df.write.mode("overwrite").format("noop").save()
-            elapsed = time.perf_counter() - start
-            if rep == 0:
-                first = elapsed
-                first_touches = memo.build_count() - pre_builds
-            best = min(best, elapsed)
+        # noop sink: full distributed execution of the plan, no
+        # driver-side result transfer billed to the operator.
+        best, first, first_touches = _time_query(
+            name,
+            lambda: registry[name].fn(spark, sf_dir)
+            .write.mode("overwrite")
+            .format("noop")
+            .save(),
+        )
         timings[name] = round(best, 3)
         if first_touches > 0 and first > best:
             builds[name] = round(first - best, 3)

@@ -1,28 +1,48 @@
-"""Bounded, thread-safe per-session memo for shared lazy pipelines.
+"""Per-session memo for shared relations: the ``@shared`` decorator.
 
-Several operator families (the MinHash candidate graph in dedup.py, the
-BM25 ranking relations in textstats.py) memoize a localCheckpointed
-DataFrame pipeline per (applicationId, sf_dir) so a bench session pays
-the expensive scan once. The raw module-level dict version had two
-defects (r8 ADVICE):
+Several operator families build one expensive relation that many
+queries read: the MinHash candidate graph and the prefix-filter truth
+set in dedup.py, the BM25 rankings in textstats.py, the basket relation
+in mining.py, and so on. Each such builder is a function
+``(spark, sf_dir) -> value`` decorated with ``@shared``; the decorator
+builds the value once per Spark application and fixture directory and
+hands the same object to every later caller.
 
-  1. unbounded growth — a long-lived session touching many sf_dirs
-     retained checkpointed RDD references for the process lifetime;
-  2. a first-population race — two concurrent first calls could both
-     build the pipeline, leaking the losing checkpoint.
+One decision lives here for every relation:
 
-``SessionMemo`` fixes both: an LRU bounded at ``maxsize`` keys (evicted
-entries simply drop their DataFrame references — Spark's ContextCleaner
-reclaims the local-checkpoint blocks once the RDDs are unreferenced and
-garbage-collected) and a lock around get-or-build so exactly one
-pipeline is constructed and retained per key. Builds happen under the
-lock; that is cheap because every memoized pipeline uses
-``localCheckpoint(eager=False)`` — construction is driver-side plan
-assembly, materialization happens lazily on first action.
+  - the key is ``(spark.sparkContext.applicationId, sf_dir)``, so a
+    restarted session never sees another session's (now invalid)
+    checkpoints, and the ``(spark, sf_dir)`` signature — checked when
+    the function is decorated — keeps the value a pure function of the
+    engine code and ``sf_dir``;
+  - each relation is an LRU bounded at ``MAXSIZE`` keys. An evicted
+    entry only drops its references; Spark's ContextCleaner reclaims the
+    checkpoint blocks once the RDDs are garbage-collected. Unbounded, a
+    long-lived session touching many sf_dirs would retain every
+    checkpoint for the process lifetime;
+  - each relation has its own lock held around get-or-build, so racing
+    first calls build exactly once (a losing build would leak its
+    checkpoint). Builds run under the lock; that is cheap because the
+    builders mostly assemble lazy ``localCheckpoint(eager=False)``
+    plans. A lock per relation, not one global lock, lets a build call
+    another shared relation (cluster labels -> candidate edges, prefix
+    filter -> distinct shingles, PCA iterate -> quantized corpus, ...)
+    without deadlocking, as long as those calls never form a cycle;
+  - every build is counted per relation name under one module lock;
+    ``build_count()`` is the monotone total bench harnesses diff around
+    a query to bill one-time builds to the first toucher;
+  - the relation is registered under ``module.qualname`` so tests can
+    inspect or clear one relation by name (``relation(name)``).
+
+How a value is materialized stays with each builder: bounded relations
+call ``localCheckpoint`` directly, corpus-proportional ones go through
+``materialize_shared``.
 """
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
 import threading
 from collections import OrderedDict
@@ -30,6 +50,10 @@ from collections.abc import Callable
 from typing import TypeVar
 
 T = TypeVar("T")
+
+# Keys (session, sf_dir) each relation retains. A bench or test session
+# touches at most a few fixture directories.
+MAXSIZE = 4
 
 
 def materialize_shared(df, spark):
@@ -48,7 +72,10 @@ def materialize_shared(df, spark):
                    posture, zero extra I/O, plan truncation for free.
       - "reliable": lazy reliable checkpoint into SNACKFS_CHECKPOINT_DIR
                    (HDFS/object-store path on a cluster) — survives
-                   executor loss, bounded only by durable storage.
+                   executor loss, bounded only by durable storage. With
+                   neither that variable nor a SparkContext checkpoint
+                   dir set, raises ValueError here rather than letting
+                   the first action fail far from the misconfiguration.
       - "none"     : no materialization — full lineage kept, every
                    consumer recomputes; the safe fallback when the
                    relation exceeds what either checkpoint store holds.
@@ -60,11 +87,16 @@ def materialize_shared(df, spark):
     if mode == "local":
         return df.localCheckpoint(eager=False)
     if mode == "reliable":
-        ckdir = os.environ.get("SNACKFS_CHECKPOINT_DIR")
-        if ckdir:
-            sc = spark.sparkContext
-            if sc._jsc.sc().getCheckpointDir().isEmpty():
-                sc.setCheckpointDir(ckdir)
+        sc = spark.sparkContext
+        if sc._jsc.sc().getCheckpointDir().isEmpty():
+            ckdir = os.environ.get("SNACKFS_CHECKPOINT_DIR")
+            if not ckdir:
+                raise ValueError(
+                    "SNACKFS_MEMO_MATERIALIZE=reliable needs a checkpoint "
+                    "dir: set SNACKFS_CHECKPOINT_DIR or call "
+                    "SparkContext.setCheckpointDir"
+                )
+            sc.setCheckpointDir(ckdir)
         return df.checkpoint(eager=False)
     if mode == "none":
         return df
@@ -73,36 +105,27 @@ def materialize_shared(df, spark):
     )
 
 
-class SessionMemo:
-    """get_or_build cache keyed by (applicationId, sf_dir)."""
+class _Relation:
+    """One shared relation: its builder, the LRU of built values keyed
+    by (applicationId, sf_dir), and its build count (under _count_lock)."""
 
-    # every instance registers here so tests that probe a property the
-    # memo would short-circuit (e.g. bit-identity across partition
-    # counts, which needs the pipeline REBUILT per config) can drop all
-    # cached pipelines at once via clear_all_memos().
-    _instances: list["SessionMemo"] = []
-    # Monotone count of cache MISSES (pipeline builds) across every
-    # instance since process start. bench.py snapshots it around each
-    # query's first rep to bill shared-memo build cost to the first
-    # toucher (r11 VERDICT #1: best-of-3 timing silently excluded every
-    # one-time build from the recorded total).
-    _build_events: int = 0
-
-    def __init__(self, maxsize: int = 4) -> None:
-        self._maxsize = maxsize
+    def __init__(self, build: Callable[..., object]) -> None:
+        self._build = build
         self._lock = threading.Lock()
         self._entries: OrderedDict[tuple[str, str], object] = OrderedDict()
-        SessionMemo._instances.append(self)
+        self.builds = 0
 
-    def get_or_build(self, key: tuple[str, str], build: Callable[[], T]) -> T:
+    def get(self, spark, sf_dir: str):
+        key = (spark.sparkContext.applicationId, sf_dir)
         with self._lock:
             if key in self._entries:
                 self._entries.move_to_end(key)
-                return self._entries[key]  # type: ignore[return-value]
-            value = build()
-            SessionMemo._build_events += 1
+                return self._entries[key]
+            value = self._build(spark, sf_dir)
+            with _count_lock:
+                self.builds += 1
             self._entries[key] = value
-            while len(self._entries) > self._maxsize:
+            while len(self._entries) > MAXSIZE:
                 self._entries.popitem(last=False)
             return value
 
@@ -115,17 +138,53 @@ class SessionMemo:
             self._entries.clear()
 
 
+_RELATIONS: dict[str, _Relation] = {}
+# One lock for every relation's build count: the per-relation locks do
+# not serialize builds of DIFFERENT relations, so build_count()'s sum
+# needs its own guard.
+_count_lock = threading.Lock()
+
+
+def shared(fn: Callable[..., T]) -> Callable[..., T]:
+    """Memoize ``fn(spark, sf_dir)`` per (Spark application, sf_dir);
+    see the module docstring. The undecorated builder stays reachable as
+    ``__wrapped__``."""
+    params = list(inspect.signature(fn).parameters)
+    if params != ["spark", "sf_dir"]:
+        raise TypeError(
+            f"@shared {fn.__qualname__}{params}: expected (spark, sf_dir)"
+        )
+    name = f"{fn.__module__}.{fn.__qualname__}"
+    if name in _RELATIONS:
+        raise ValueError(f"duplicate shared relation {name!r}")
+    rel = _RELATIONS[name] = _Relation(fn)
+
+    @functools.wraps(fn)
+    def wrapper(spark, sf_dir):
+        return rel.get(spark, sf_dir)
+
+    return wrapper
+
+
+def relation(name: str) -> _Relation:
+    """The registered relation ``module.qualname`` (``len()`` = cached
+    keys, ``.clear()`` drops them)."""
+    return _RELATIONS[name]
+
+
 def build_count() -> int:
-    """Total SessionMemo pipeline builds (cache misses) so far in this
-    process. A pure monotone counter: bench.py diffs it around a query's
-    first rep to detect that the query was the FIRST TOUCHER of one or
-    more shared memoized relations, whose one-time build cost best-of-N
-    timing would otherwise discard."""
-    return SessionMemo._build_events
+    """Total shared-relation builds (cache misses) so far in this
+    process. A pure monotone counter: bench harnesses diff it around a
+    query to detect that the query was the FIRST TOUCHER of one or more
+    shared relations, whose one-time build cost best-of-N timing would
+    otherwise discard."""
+    with _count_lock:
+        return sum(rel.builds for rel in _RELATIONS.values())
 
 
 def clear_all_memos() -> None:
-    """Drop every SessionMemo's cached pipelines (test hook — see the
-    determinism suite; production/bench sessions never call this)."""
-    for m in SessionMemo._instances:
-        m.clear()
+    """Drop every shared relation's cached values (test hook — see the
+    determinism suite; production/bench sessions never call this). The
+    build counter is never rewound."""
+    for rel in list(_RELATIONS.values()):
+        rel.clear()

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from snackfs_spark.memo import SessionMemo
+from snackfs_spark.memo import shared
 from snackfs_spark.registry import register
 from snackfs_spark.sources.tables import load_table
 
@@ -159,9 +159,6 @@ def _kmeans_vectors(spark: SparkSession, sf_dir: str, *extra: str) -> DataFrame:
     )
 
 
-_KMEANS_CENTS_MEMO = SessionMemo(maxsize=4)
-
-
 def kmeans_cents(spark: SparkSession, sf_dir: str, iters: int) -> DataFrame:
     """The FINAL centroid relation of the deterministic Lloyd's loop
     (seed = first K vectors, iters-1 recenter rounds) — O(k*dim) rows.
@@ -169,20 +166,24 @@ def kmeans_cents(spark: SparkSession, sf_dir: str, iters: int) -> DataFrame:
     assignment query and the label-agreement eval share one centroid
     chain instead of re-running the recenter aggregates per consumer
     (the candidate_edges_df pattern); deeper test runs build fresh."""
-
-    def build() -> DataFrame:
-        v = _kmeans_vectors(spark, sf_dir)
-        cents = v.filter(F.col("vec_id") < KMEANS_K).select(
-            F.col("vec_id").alias("cid"), F.col("ev").alias("cv")
-        )
-        for _ in range(iters - 1):
-            cents = _recenter(_assign(v, cents))
-        return cents.localCheckpoint(eager=False)
-
     if iters == KMEANS_ITERS:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        return _KMEANS_CENTS_MEMO.get_or_build(key, build)
-    return build()
+        return _kmeans_cents_registered(spark, sf_dir)
+    return _kmeans_cents_build(spark, sf_dir, iters)
+
+
+@shared
+def _kmeans_cents_registered(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _kmeans_cents_build(spark, sf_dir, KMEANS_ITERS)
+
+
+def _kmeans_cents_build(spark: SparkSession, sf_dir: str, iters: int) -> DataFrame:
+    v = _kmeans_vectors(spark, sf_dir)
+    cents = v.filter(F.col("vec_id") < KMEANS_K).select(
+        F.col("vec_id").alias("cid"), F.col("ev").alias("cv")
+    )
+    for _ in range(iters - 1):
+        cents = _recenter(_assign(v, cents))
+    return cents.localCheckpoint(eager=False)
 
 
 def kmeans_assign(spark: SparkSession, sf_dir: str, iters: int) -> DataFrame:
@@ -1038,37 +1039,25 @@ def emb_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select((F.col("k0") + 1).cast("long").alias("pos"), F.col("loading").cast("long"))
 
 
-_PCA_XQ_MEMO = SessionMemo(maxsize=4)
-_PCA_V_MEMO = SessionMemo(maxsize=4)
-
-
+@shared
 def _pca_xq_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The integer-milli quantized corpus (q column only), checkpointed
     once per (session, sf_dir) and shared by the PCA rounds and the
     anisotropy Gram folds."""
-
-    def build() -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings")
-        return emb.select(
-            F.transform(
-                F.col("embedding"),
-                lambda x: F.bround(x.cast("double") * 1000).cast("long"),
-            ).alias("q")
-        ).localCheckpoint(eager=False)
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _PCA_XQ_MEMO.get_or_build(key, build)
+    emb = load_table(spark, sf_dir, "embeddings")
+    return emb.select(
+        F.transform(
+            F.col("embedding"),
+            lambda x: F.bround(x.cast("double") * 1000).cast("long"),
+        ).alias("q")
+    ).localCheckpoint(eager=False)
 
 
+@shared
 def _pca_iterate_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 1-row (v: array<bigint>) relation after PCA_ROUNDS power
     iterations — the exact chain the PCA and anisotropy oracles share."""
-
-    def build() -> DataFrame:
-        return _pca_rounds(spark, _pca_xq_df(spark, sf_dir))
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _PCA_V_MEMO.get_or_build(key, build)
+    return _pca_rounds(spark, _pca_xq_df(spark, sf_dir))
 
 
 def _pca_rounds(spark: SparkSession, xq: DataFrame) -> DataFrame:

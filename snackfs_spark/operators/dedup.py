@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from snackfs_spark.functions import md5_bucket
-from snackfs_spark.memo import SessionMemo, materialize_shared
+from snackfs_spark.memo import materialize_shared, shared
 from snackfs_spark.registry import register
 from snackfs_spark.sources.tables import fan_out, load_table
 
@@ -230,9 +230,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CAND_EDGES_MEMO = SessionMemo(maxsize=4)
-
-
+@shared
 def candidate_edges_df(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -243,30 +241,21 @@ def candidate_edges_df(
     prefix-filter pattern (r7 VERDICT #6): in a bench session three
     graph operators would otherwise each re-run the shingle ->
     signature -> band pipeline; semantics and hashes unchanged (the
-    expression is identical to dedup_minhash_lsh's). Bounded + locked
-    via SessionMemo (r8 ADVICE: no unbounded growth across sf_dirs,
-    no first-population race leaking a losing checkpoint)."""
-
-    def build() -> tuple[DataFrame, DataFrame]:
-        cand = dedup_minhash_lsh(spark, sf_dir).localCheckpoint(eager=False)
-        und = (
-            cand.union(
-                cand.select(
-                    F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-                )
+    expression is identical to dedup_minhash_lsh's)."""
+    cand = dedup_minhash_lsh(spark, sf_dir).localCheckpoint(eager=False)
+    und = (
+        cand.union(
+            cand.select(
+                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
             )
-            .distinct()
-            .localCheckpoint(eager=False)
         )
-        return (cand, und)
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _CAND_EDGES_MEMO.get_or_build(key, build)
-
-
-_DISTINCT_SHINGLES_MEMO = SessionMemo(maxsize=4)
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    return (cand, und)
 
 
+@shared
 def distinct_shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DISTINCT (doc_id, shingle) relation behind a shared lazy
     localCheckpoint (optimization r11): dedup_prefix_filter,
@@ -281,19 +270,12 @@ def distinct_shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     SNACKFS_MEMO_MATERIALIZE policy (r11 VERDICT #3: localCheckpoint is
     the local-mode default; a cluster sets "reliable" + a durable
     checkpoint dir, or "none" when the shingle table exceeds it)."""
-
-    def build() -> DataFrame:
-        return materialize_shared(
-            shingles_df(spark, sf_dir, distinct=True), spark
-        )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _DISTINCT_SHINGLES_MEMO.get_or_build(key, build)
+    return materialize_shared(
+        shingles_df(spark, sf_dir, distinct=True), spark
+    )
 
 
-_CLUSTER_LABELS_MEMO = SessionMemo(maxsize=4)
-
-
+@shared
 def cluster_labels_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Converged min-label connected components over the shared MinHash
     candidate graph — the (doc_id, label) relation dedup_cluster_canonical
@@ -306,49 +288,44 @@ def cluster_labels_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     lock; the returned relation is an eager localCheckpoint, so consumers
     see a materialized, lineage-free table. Semantics identical: the
     expression is exactly the loop dedup_cluster_canonical inlined."""
-
-    def build() -> DataFrame:
-        # The shared candidate relation — already (lazily) checkpointed;
-        # every propagation round joins against it.
-        pairs, _ = candidate_edges_df(spark, sf_dir)
-        edges = pairs.select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        ).unionAll(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+    # The shared candidate relation — already (lazily) checkpointed;
+    # every propagation round joins against it.
+    pairs, _ = candidate_edges_df(spark, sf_dir)
+    edges = pairs.select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    ).unionAll(
+        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+    )
+    # Iterate ONLY over nodes that touch an edge: singletons (the
+    # vast majority of any corpus) can never change label, so the
+    # loop runs on the candidate graph (≈ #near-dup docs), not the
+    # corpus.
+    labels = (
+        edges.select(F.col("src").alias("doc_id"))
+        .distinct()
+        .select("doc_id", F.col("doc_id").alias("label"))
+        .localCheckpoint(eager=True)
+    )
+    for _ in range(12):  # >> any real near-dup component diameter
+        prop = edges.join(labels, edges["src"] == labels["doc_id"]).select(
+            F.col("dst").alias("doc_id"), "label"
         )
-        # Iterate ONLY over nodes that touch an edge: singletons (the
-        # vast majority of any corpus) can never change label, so the
-        # loop runs on the candidate graph (≈ #near-dup docs), not the
-        # corpus.
-        labels = (
-            edges.select(F.col("src").alias("doc_id"))
-            .distinct()
-            .select("doc_id", F.col("doc_id").alias("label"))
+        new_labels = (
+            labels.unionAll(prop)
+            .groupBy("doc_id")
+            .agg(F.min("label").alias("label"))
             .localCheckpoint(eager=True)
         )
-        for _ in range(12):  # >> any real near-dup component diameter
-            prop = edges.join(labels, edges["src"] == labels["doc_id"]).select(
-                F.col("dst").alias("doc_id"), "label"
-            )
-            new_labels = (
-                labels.unionAll(prop)
-                .groupBy("doc_id")
-                .agg(F.min("label").alias("label"))
-                .localCheckpoint(eager=True)
-            )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "doc_id")
-                .filter(F.col("n.label") < F.col("o.label"))
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                break
-        return labels
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _CLUSTER_LABELS_MEMO.get_or_build(key, build)
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), "doc_id")
+            .filter(F.col("n.label") < F.col("o.label"))
+            .count()
+        )
+        labels = new_labels
+        if changed == 0:
+            break
+    return labels
 
 
 def verify_jaccard_pairs(
@@ -951,14 +928,6 @@ PREFIX_JACCARD_T = 0.5
 PREFIX_T_NUM, PREFIX_T_DEN = 1, 2
 assert PREFIX_T_NUM / PREFIX_T_DEN == PREFIX_JACCARD_T
 
-# (applicationId, sf_dir) -> lazily-checkpointed verified pair relation;
-# shared by dedup_prefix_filter (its result) and dedup_lsh_tuning (its
-# truth set) so a bench session computes the expensive candidate join
-# once. Keyed by applicationId so a restarted session never sees another
-# session's (now-invalid) checkpoint.
-_PREFIX_FILTER_MEMO = SessionMemo(maxsize=4)
-
-
 @register(
     "dedup_prefix_filter",
     oracle=(
@@ -1004,6 +973,7 @@ _PREFIX_FILTER_MEMO = SessionMemo(maxsize=4)
     """
     ),
 )
+@shared
 def dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Similarity join via PREFIX FILTERING (AllPairs/PPJoin family) —
     the exact-recall alternative to MinHash LSH for near-dup candidate
@@ -1029,15 +999,7 @@ def dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a bench session both headline queries would otherwise pay the
     ~full candidate join twice (r7 VERDICT #6). The memo is a lazy
     localCheckpoint — materialized by whichever query runs first,
-    reused by the other; semantics and hashes unchanged. Bounded +
-    locked via SessionMemo (r8 ADVICE)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _PREFIX_FILTER_MEMO.get_or_build(
-        key, lambda: _dedup_prefix_filter_build(spark, sf_dir)
-    )
-
-
-def _dedup_prefix_filter_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    reused by the other; semantics and hashes unchanged."""
     sh = distinct_shingles_df(spark, sf_dir)
     from pyspark.sql import Window
 

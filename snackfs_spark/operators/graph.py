@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from snackfs_spark.functions import md5_fp
-from snackfs_spark.memo import SessionMemo
+from snackfs_spark.memo import shared
 from snackfs_spark.registry import register
 from snackfs_spark.sources.tables import fan_out, load_table
 
@@ -45,9 +45,7 @@ PR_TOP = 50        # rows returned (full tie-break => deterministic)
 TRI_TOP = 50
 
 
-_TOKEN_GRAPH_MEMO = SessionMemo(maxsize=4)
-
-
+@shared
 def _token_graph(spark: SparkSession, sf_dir: str):
     """(vocab, edges, out_deg) for the token bigram graph. One corpus
     scan builds the distinct-pair relation; everything returned is
@@ -58,13 +56,6 @@ def _token_graph(spark: SparkSession, sf_dir: str):
     jaccard link prediction, …) each rebuilt the graph, re-running the
     corpus scan + vocab top-k + distinct-edge shuffle; now the battery
     extracts the graph once."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _TOKEN_GRAPH_MEMO.get_or_build(
-        key, lambda: _token_graph_build(spark, sf_dir)
-    )
-
-
-def _token_graph_build(spark: SparkSession, sf_dir: str):
     docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
     words = F.split(F.col("text"), " ")
     toks = docs.select(F.explode(words).alias("w")).filter(F.col("w") != "")
@@ -947,49 +938,51 @@ def _lpa_oracle(rounds: int = LPA_ROUNDS) -> str:
     )
 
 
-_LPA_LABELS_MEMO = SessionMemo(maxsize=4)
-
-
 def lpa_labels_df(spark: SparkSession, sf_dir: str, rounds: int) -> DataFrame:
     """The converged (doc_id, lbl) relation after `rounds` synchronous
     LPA rounds — memoized per (session, sf_dir) at the registered round
     count so the LPA query and the modularity audit share ONE
     propagation loop (the cluster_labels_df pattern); deeper test runs
     build fresh."""
+    if rounds == LPA_ROUNDS:
+        return _lpa_labels_registered(spark, sf_dir)
+    return _lpa_labels_build(spark, sf_dir, rounds)
+
+
+@shared
+def _lpa_labels_registered(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _lpa_labels_build(spark, sf_dir, LPA_ROUNDS)
+
+
+def _lpa_labels_build(spark: SparkSession, sf_dir: str, rounds: int) -> DataFrame:
     from snackfs_spark.operators.dedup import candidate_edges_df
 
-    def build() -> DataFrame:
-        _, und = candidate_edges_df(spark, sf_dir)
-        labels = und.select(F.col("doc_a").alias("doc_id")).distinct().select(
-            "doc_id", F.col("doc_id").alias("lbl")
+    _, und = candidate_edges_df(spark, sf_dir)
+    labels = und.select(F.col("doc_a").alias("doc_id")).distinct().select(
+        "doc_id", F.col("doc_id").alias("lbl")
+    )
+    for _ in range(rounds):
+        cnt = (
+            und.join(
+                labels.select(F.col("doc_id").alias("doc_b"), "lbl").hint(
+                    "shuffle_hash"
+                ),
+                "doc_b",
+            )
+            .groupBy(F.col("doc_a").alias("doc_id"), "lbl")
+            .agg(F.count(F.lit(1)).cast("long").alias("c"))
         )
-        for _ in range(rounds):
-            cnt = (
-                und.join(
-                    labels.select(F.col("doc_id").alias("doc_b"), "lbl").hint(
-                        "shuffle_hash"
-                    ),
-                    "doc_b",
-                )
-                .groupBy(F.col("doc_a").alias("doc_id"), "lbl")
-                .agg(F.count(F.lit(1)).cast("long").alias("c"))
+        labels = (
+            cnt.groupBy("doc_id")
+            .agg(
+                F.min(
+                    F.struct((-F.col("c")).alias("nc"), F.col("lbl"))
+                ).alias("m")
             )
-            labels = (
-                cnt.groupBy("doc_id")
-                .agg(
-                    F.min(
-                        F.struct((-F.col("c")).alias("nc"), F.col("lbl"))
-                    ).alias("m")
-                )
-                .select("doc_id", F.col("m.lbl").alias("lbl"))
-                .localCheckpoint(eager=False)
-            )
-        return labels
-
-    if rounds == LPA_ROUNDS:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        return _LPA_LABELS_MEMO.get_or_build(key, build)
-    return build()
+            .select("doc_id", F.col("m.lbl").alias("lbl"))
+            .localCheckpoint(eager=False)
+        )
+    return labels
 
 
 @register("graph_label_propagation", oracle=_lpa_oracle())

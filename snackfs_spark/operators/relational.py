@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from snackfs_spark.functions import dsum, dsum_lattice, money, rate
 from snackfs_spark.functions import ts_str
-from snackfs_spark.memo import SessionMemo, materialize_shared
+from snackfs_spark.memo import materialize_shared, shared
 from snackfs_spark.registry import register
 from snackfs_spark.sources.tables import fan_out, load_table
 
@@ -2542,9 +2542,7 @@ _HLL_ALPHA = "(0.7213e0 / (1.0e0 + 1.079e0 / 256.0e0))"  # alpha_256 in forced-
                                                   # different scale rules)
 
 
-_TYPE_USER_PAIRS_MEMO = SessionMemo(maxsize=4)
-
-
+@shared
 def type_user_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized distinct (event_type, user_id) relation (optimization
     r11, the candidate_edges_df pattern): FOUR sketch queries
@@ -2556,50 +2554,38 @@ def type_user_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct count. Materialization strategy: SNACKFS_MEMO_MATERIALIZE
     (r11 VERDICT #3 — "local" default, "reliable"/"none" on a cluster
     where user-proportional state must survive executor loss)."""
-
-    def build() -> DataFrame:
-        ev = fan_out(load_table(spark, sf_dir, "events"), spark)
-        return materialize_shared(
-            ev.select("event_type", "user_id").distinct(), spark
-        )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _TYPE_USER_PAIRS_MEMO.get_or_build(key, build)
+    ev = fan_out(load_table(spark, sf_dir, "events"), spark)
+    return materialize_shared(
+        ev.select("event_type", "user_id").distinct(), spark
+    )
 
 
-_HLL_REGS_MEMO = SessionMemo(maxsize=4)
-
-
+@shared
 def hll_type_regs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized per-(event_type, bucket) HLL register relation (MAX
     rank per register, <= |types| x m rows) built from
     type_user_pairs_df — the identical expression approx_distinct_hll,
     approx_distinct_hll_merged and approx_overlap_hll each re-derived
     per call."""
-
-    def build() -> DataFrame:
-        pairs = type_user_pairs_df(spark, sf_dir)
-        v = F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
-        ).cast("long")
-        w = F.col("v").bitwiseAND(F.lit((1 << HLL_WBITS) - 1))
-        r = F.when(w > 0, F.lit(HLL_WBITS + 1) - F.length(F.bin(w))).otherwise(
-            F.lit(HLL_WBITS + 1)
+    pairs = type_user_pairs_df(spark, sf_dir)
+    v = F.conv(
+        F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
+    ).cast("long")
+    w = F.col("v").bitwiseAND(F.lit((1 << HLL_WBITS) - 1))
+    r = F.when(w > 0, F.lit(HLL_WBITS + 1) - F.length(F.bin(w))).otherwise(
+        F.lit(HLL_WBITS + 1)
+    )
+    return (
+        pairs.select("event_type", v.alias("v"))
+        .select(
+            "event_type",
+            F.shiftright(F.col("v"), HLL_WBITS).alias("bucket"),
+            r.alias("r"),
         )
-        return (
-            pairs.select("event_type", v.alias("v"))
-            .select(
-                "event_type",
-                F.shiftright(F.col("v"), HLL_WBITS).alias("bucket"),
-                r.alias("r"),
-            )
-            .groupBy("event_type", "bucket")
-            .agg(F.max("r").alias("reg"))
-            .localCheckpoint(eager=False)
-        )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _HLL_REGS_MEMO.get_or_build(key, build)
+        .groupBy("event_type", "bucket")
+        .agg(F.max("r").alias("reg"))
+        .localCheckpoint(eager=False)
+    )
 
 
 @register(

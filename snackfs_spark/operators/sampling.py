@@ -25,7 +25,7 @@ from snackfs_spark.operators.dedup import (
     distinct_shingles_df,
     shingles_df,
 )
-from snackfs_spark.memo import SessionMemo
+from snackfs_spark.memo import shared
 from snackfs_spark.registry import register
 from snackfs_spark.sources.tables import fan_out, load_table
 
@@ -3104,9 +3104,8 @@ def sample_ab_power_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # legs hold to ~10^6 users per arm and trap loudly past that (rule 7).
 MW_BAND_CENTS = 1_000_000  # $10k value-range band for the rank prefix
 
-_ARM_METRIC_MEMO = SessionMemo(maxsize=4)
 
-
+@shared
 def arm_metric_groups_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct per-user value-total metrics with per-arm user counts
     (metric, c0, c1) — the shared sufficient statistic of BOTH
@@ -3114,36 +3113,31 @@ def arm_metric_groups_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     ECDF gap read nothing else. Memoized per (session, sf_dir) so the
     second test skips the events scan and the user-keyed shuffle
     (r11 opt, the kmeans_cents pattern)."""
-
-    def build() -> DataFrame:
-        ev = fan_out(load_table(spark, sf_dir, "events"), spark)
-        u = (
-            ev.groupBy("user_id")
-            .agg(
-                F.sum(F.bround(F.col("value") * 100).cast("long"))
-                .cast("long")
-                .alias("metric")
-            )
-            .select(
-                F.pmod("user_id", F.lit(2)).cast("long").alias("arm"),
-                "metric",
-            )
+    ev = fan_out(load_table(spark, sf_dir, "events"), spark)
+    u = (
+        ev.groupBy("user_id")
+        .agg(
+            F.sum(F.bround(F.col("value") * 100).cast("long"))
+            .cast("long")
+            .alias("metric")
         )
-        return (
-            u.groupBy("metric")
-            .agg(
-                F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
-                .cast("long")
-                .alias("c0"),
-                F.sum(F.when(F.col("arm") == 1, 1).otherwise(0))
-                .cast("long")
-                .alias("c1"),
-            )
-            .localCheckpoint(eager=False)
+        .select(
+            F.pmod("user_id", F.lit(2)).cast("long").alias("arm"),
+            "metric",
         )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _ARM_METRIC_MEMO.get_or_build(key, build)
+    )
+    return (
+        u.groupBy("metric")
+        .agg(
+            F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
+            .cast("long")
+            .alias("c0"),
+            F.sum(F.when(F.col("arm") == 1, 1).otherwise(0))
+            .cast("long")
+            .alias("c1"),
+        )
+        .localCheckpoint(eager=False)
+    )
 
 
 @register(
@@ -3733,9 +3727,6 @@ _PREF_ORACLE = f"""
     """
 
 
-_PREF_RANKED_MEMO = SessionMemo(maxsize=4)
-
-
 def _pref_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The banded two-phase ranking relation (doc_id, source, q, n, rt)
     behind train_preference_pairs, UNcheckpointed so tests/test_plans.py
@@ -3793,6 +3784,11 @@ def _pref_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@shared
+def _pref_ranked_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _pref_ranked(spark, sf_dir).localCheckpoint(eager=False)
+
+
 @register(
     "train_preference_pairs",
     oracle=_PREF_ORACLE,
@@ -3818,10 +3814,7 @@ def train_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     + rank pipeline (measured 1.9x the whole query at 100x). The
     checkpoint is memoized per (session, sf_dir) so the pair-overlap
     audit rides the SAME ranking instead of re-running it (r11)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    r = _PREF_RANKED_MEMO.get_or_build(
-        key, lambda: _pref_ranked(spark, sf_dir).localCheckpoint(eager=False)
-    )
+    r = _pref_ranked_ckpt(spark, sf_dir)
     a = r.alias("a")
     b = r.alias("b")
     return (

@@ -21,7 +21,7 @@ from snackfs_spark.functions import (
     STOPWORD_PERMILLE_SQL,
     md5_bucket,
 )
-from snackfs_spark.memo import SessionMemo
+from snackfs_spark.memo import shared
 from snackfs_spark.registry import register
 from snackfs_spark.sources.tables import fan_out, load_table
 
@@ -809,10 +809,8 @@ def _bigram_oracle() -> str:
     """
 
 
-_BIGRAM_SCORE_MEMO = SessionMemo(maxsize=4)
-
-
 @register("text_bigram_prob", oracle=_bigram_oracle())
+@shared
 def text_bigram_prob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram-LM document scoring: each document's adjacent word pairs
     are scored by the corpus-wide conditional probability
@@ -838,15 +836,6 @@ def text_bigram_prob(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation (perplexity buckets, the AUC/ECE/Brier/isotonic/kappa
     evals, corpus_build_v2, corpus_funnel_report) and each previously
     re-ran the full corpus scan + pair explode + broadcast joins."""
-
-    def build() -> DataFrame:
-        return _bigram_scores(spark, sf_dir).localCheckpoint(eager=False)
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _BIGRAM_SCORE_MEMO.get_or_build(key, build)
-
-
-def _bigram_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
     words = F.split(F.col("text"), " ")
     # adjacent pairs without a self-join: zip words with their tail
@@ -879,9 +868,13 @@ def _bigram_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.sum("q").alias("prob_lattice_sum"),
+    return (
+        scored.groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_bigrams"),
+            F.sum("q").alias("prob_lattice_sum"),
+        )
+        .localCheckpoint(eager=False)
     )
 
 
@@ -986,9 +979,7 @@ def _cell_cum_before(celled: DataFrame) -> DataFrame:
     )
 
 
-_DOC_QUALITY_MEMO = SessionMemo(maxsize=4)
-
-
+@shared
 def doc_quality_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized (doc_id, source, n_chars, q) relation of THE shared
     stopword-permille quality score (functions.STOPWORD_PERMILLE_SPARK,
@@ -1000,37 +991,25 @@ def doc_quality_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     source tournament); they now share one scan behind a lazy
     localCheckpoint. n_chars rides along (a stored column, no extra
     compute) so the skyline consumer needs no second corpus pass."""
-
-    def build() -> DataFrame:
-        docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
-        return docs.select(
-            "doc_id",
-            "source",
-            "n_chars",
-            F.expr(STOPWORD_PERMILLE_SPARK).cast("long").alias("q"),
-        ).localCheckpoint(eager=False)
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _DOC_QUALITY_MEMO.get_or_build(key, build)
+    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    return docs.select(
+        "doc_id",
+        "source",
+        "n_chars",
+        F.expr(STOPWORD_PERMILLE_SPARK).cast("long").alias("q"),
+    ).localCheckpoint(eager=False)
 
 
-_FLUENCY_CELLED_MEMO = SessionMemo(maxsize=4)
-
-
+@shared
 def _fluency_celled_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized doc_quality_df ⋈ bigram-fluency cell join
     (doc_id, source, n_chars, q, avg_q, cell): the shared input of the
     tertile-label family (perplexity buckets, AUC, kappa, reliability
     bins). Each consumer previously re-ran the corpus scan AND the
     doc-keyed fluency join behind a private checkpoint per call."""
-
-    def build() -> DataFrame:
-        return _with_fluency_cell(
-            doc_quality_df(spark, sf_dir), text_bigram_prob(spark, sf_dir)
-        ).localCheckpoint(eager=False)
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _FLUENCY_CELLED_MEMO.get_or_build(key, build)
+    return _with_fluency_cell(
+        doc_quality_df(spark, sf_dir), text_bigram_prob(spark, sf_dir)
+    ).localCheckpoint(eager=False)
 
 
 @register("text_perplexity_buckets", oracle=_ppl_buckets_oracle())
@@ -1464,9 +1443,7 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_BPE_CHAIN_MEMO = SessionMemo(maxsize=4)
-
-
+@shared
 def _bpe_chain(spark: SparkSession, sf_dir: str):
     """Shared K-round BPE chain: returns ([per-round merge rows], final
     re-segmented vocab (word, repr, n)). Both the trainer's output and
@@ -1476,11 +1453,6 @@ def _bpe_chain(spark: SparkSession, sf_dir: str):
     chain, re-materializing the word-count shuffle and all K per-round
     checkpoints; now the chain's lazy checkpoints are shared, so the
     battery folds the vocabulary once."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _BPE_CHAIN_MEMO.get_or_build(key, lambda: _bpe_chain_build(spark, sf_dir))
-
-
-def _bpe_chain_build(spark: SparkSession, sf_dir: str):
     docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
     words = (
         docs.select(F.explode(F.split("text", " ")).alias("word"))
@@ -2070,9 +2042,7 @@ def _retrieval_oracle() -> str:
     """
 
 
-_RANK_REL_MEMO = SessionMemo(maxsize=4)
-
-
+@shared
 def _retrieval_rank_rel(spark: SparkSession, sf_dir: str):
     """Shared BM25 ranking + relevance pipeline for the retrieval-eval
     family: (qsize, topk, rel, nrel) — the Spark mirror of
@@ -2088,20 +2058,14 @@ def _retrieval_rank_rel(spark: SparkSession, sf_dir: str):
     scan once — lazy localCheckpoints, materialized by whichever query
     runs first; semantics and hashes unchanged. The checkpoint hides
     the pipeline from the consumers' plans, so the plan pin targets
-    ``_retrieval_rank_rel_raw``. Bounded + locked via SessionMemo
-    (r8 ADVICE)."""
-
-    def build():
-        qsize, topk, rel, nrel = _retrieval_rank_rel_raw(spark, sf_dir)
-        return (
-            qsize,
-            topk.localCheckpoint(eager=False),
-            rel.localCheckpoint(eager=False),
-            nrel.localCheckpoint(eager=False),
-        )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _RANK_REL_MEMO.get_or_build(key, build)
+    ``_retrieval_rank_rel_raw``."""
+    qsize, topk, rel, nrel = _retrieval_rank_rel_raw(spark, sf_dir)
+    return (
+        qsize,
+        topk.localCheckpoint(eager=False),
+        rel.localCheckpoint(eager=False),
+        nrel.localCheckpoint(eager=False),
+    )
 
 
 def _retrieval_rank_rel_raw(spark: SparkSession, sf_dir: str):
@@ -2694,9 +2658,7 @@ def _ece_oracle() -> str:
     """
 
 
-_RELIABILITY_BINS_MEMO = SessionMemo(maxsize=4)
-
-
+@shared
 def _reliability_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reliability histogram (bin, n, pos, sum_score) both
     calibration evals read — Spark mirror of ``_reliability_bins_ctes``.
@@ -2705,39 +2667,34 @@ def _reliability_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     lazy localCheckpoint: THREE registered queries (ECE, Brier,
     isotonic) consume this identical <= 11-row relation and each
     previously re-ran the celled-corpus scan + label join per call."""
-
-    def build() -> DataFrame:
-        labeled = _fluency_celled_df(spark, sf_dir).select(
-            "doc_id", F.col("q").alias("score_cell"), "cell"
+    labeled = _fluency_celled_df(spark, sf_dir).select(
+        "doc_id", F.col("q").alias("score_cell"), "cell"
+    )
+    cell_label = _cell_cum_before(labeled).select(
+        "cell",
+        F.when(3 * F.col("cum_before") < F.col("n"), F.lit(1))
+        .otherwise(F.lit(0))
+        .alias("label"),
+    )
+    return (
+        labeled.join(F.broadcast(cell_label), "cell")
+        .groupBy((F.col("score_cell") / ECE_BIN).cast("long").alias("bin"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("label").cast("long").alias("pos"),
+            F.sum("score_cell").cast("long").alias("sum_score"),
+            # the two extra moments the Brier decomposition needs; ECE
+            # and isotonic select their columns explicitly, so these
+            # ride along for free
+            F.sum(F.col("score_cell") * F.col("score_cell"))
+            .cast("long")
+            .alias("sum_score2"),
+            F.sum(F.col("score_cell") * F.col("label"))
+            .cast("long")
+            .alias("sum_score_label"),
         )
-        cell_label = _cell_cum_before(labeled).select(
-            "cell",
-            F.when(3 * F.col("cum_before") < F.col("n"), F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("label"),
-        )
-        return (
-            labeled.join(F.broadcast(cell_label), "cell")
-            .groupBy((F.col("score_cell") / ECE_BIN).cast("long").alias("bin"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("label").cast("long").alias("pos"),
-                F.sum("score_cell").cast("long").alias("sum_score"),
-                # the two extra moments the Brier decomposition needs; ECE
-                # and isotonic select their columns explicitly, so these
-                # ride along for free
-                F.sum(F.col("score_cell") * F.col("score_cell"))
-                .cast("long")
-                .alias("sum_score2"),
-                F.sum(F.col("score_cell") * F.col("label"))
-                .cast("long")
-                .alias("sum_score_label"),
-            )
-            .localCheckpoint(eager=False)
-        )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _RELIABILITY_BINS_MEMO.get_or_build(key, build)
+        .localCheckpoint(eager=False)
+    )
 
 
 @register("eval_calibration_ece", oracle=_ece_oracle())
@@ -5023,20 +4980,14 @@ def text_chi2_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HYBRID_RANKED_MEMO = SessionMemo(maxsize=4)
-
-
+@shared
 def _hybrid_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized, lazily checkpointed hybrid ranking shared by the
     ranking-agreement evals (RBO, Kendall tau): one BM25 + dense-rerank
     pipeline per (session, sf_dir) instead of one per eval — the same
     r7 session-memo pattern as the BM25 eval relations (semantics and
     hashes unchanged; the expression is hybrid_search_topk's own)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _HYBRID_RANKED_MEMO.get_or_build(
-        key,
-        lambda: hybrid_search_topk(spark, sf_dir).localCheckpoint(eager=False),
-    )
+    return hybrid_search_topk(spark, sf_dir).localCheckpoint(eager=False)
 
 
 RBO_K = 20                 # evaluation depth = the BM25 top-k

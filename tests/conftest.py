@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import sys
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
@@ -11,6 +12,11 @@ if str(REPO) not in sys.path:
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
+
+
+def stub_session(app_id: str) -> SimpleNamespace:
+    """Just enough of a SparkSession for a memo.shared key (no JVM)."""
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
 
 # ---------------------------------------------------------------------------
 # Testdata dtype contract (r4 VERDICT #7). The driver regenerates

@@ -16,6 +16,8 @@ import re
 from pathlib import Path
 
 import bench
+from snackfs_spark import memo
+from tests.conftest import stub_session
 
 REPO = Path(__file__).resolve().parent.parent
 
@@ -190,3 +192,32 @@ def test_payload_carries_drift_field():
     BENCH_r{N}.json can see how much uniformity was divided out."""
     src = (REPO / "bench.py").read_text()
     assert '"host_drift": drift' in src
+
+
+@memo.shared
+def _bench_probe(spark, sf_dir):
+    return object()
+
+
+def test_later_rep_rebuild_prints_alarm(capsys):
+    """A shared-relation rebuild in rep 2 or 3 (an LRU eviction) is not
+    steady state: _time_query names the query in a stderr ALARM instead
+    of letting the rebuild hide inside best-of-3, and bills only rep 1's
+    builds to the first toucher."""
+    rel = memo.relation(f"{__name__}._bench_probe")
+    rel.clear()
+    s = stub_session("bench-gate")
+
+    reps = []
+
+    def run():
+        reps.append(1)
+        if len(reps) == 3:
+            rel.clear()  # evicted before rep 3
+        _bench_probe(s, "sf")
+
+    _best, _first, first_builds = bench._time_query("q_probe", run)
+    err = capsys.readouterr().err
+    assert first_builds == 1
+    assert "ALARM q_probe: rep 3 rebuilt 1" in err
+    assert "rep 2" not in err

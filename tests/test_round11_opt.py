@@ -10,20 +10,30 @@ the N× rebuild."""
 
 from __future__ import annotations
 
-from snackfs_spark.memo import SessionMemo
+from snackfs_spark import memo
 from snackfs_spark.operators import dedup, textstats
 from tests.conftest import SF_ORACLE
+
+
+def _rel(name: str):
+    """A shared relation by its registry name, relative to operators."""
+    return memo.relation(f"snackfs_spark.operators.{name}")
 
 
 def test_new_memos_are_session_memos():
     from snackfs_spark.operators import graph, mining
 
-    assert isinstance(dedup._CLUSTER_LABELS_MEMO, SessionMemo)
-    assert isinstance(dedup._DISTINCT_SHINGLES_MEMO, SessionMemo)
-    assert isinstance(textstats._BIGRAM_SCORE_MEMO, SessionMemo)
-    assert isinstance(textstats._BPE_CHAIN_MEMO, SessionMemo)
-    assert isinstance(graph._TOKEN_GRAPH_MEMO, SessionMemo)
-    assert isinstance(mining._BASKET_ITEMS_MEMO, SessionMemo)
+    for fn in (
+        dedup.cluster_labels_df,
+        dedup.distinct_shingles_df,
+        textstats.text_bigram_prob,
+        textstats._bpe_chain,
+        graph._token_graph,
+        mining.basket_items_df,
+    ):
+        name = f"{fn.__module__}.{fn.__qualname__}"
+        assert isinstance(memo.relation(name), memo._Relation), name
+        assert hasattr(fn, "__wrapped__"), f"{name} is not @shared"
 
 
 def test_token_graph_and_bpe_chain_built_once_per_session(spark):
@@ -73,14 +83,14 @@ def test_dedup_family_shares_candidate_relation(spark):
     """tf_cosine / containment / rate_curve / ngram_jaccard no longer
     build private copies of the band self-join: after touching them the
     candidate memo holds exactly one entry for this (session, sf_dir)."""
-    dedup._CAND_EDGES_MEMO.clear()
+    _rel("dedup.candidate_edges_df").clear()
     dedup.candidate_edges_df(spark, SF_ORACLE)
-    n_after_first = len(dedup._CAND_EDGES_MEMO)
+    n_after_first = len(_rel("dedup.candidate_edges_df"))
     # building the consumers' DataFrames must not create new entries
     dedup.dedup_tf_cosine(spark, SF_ORACLE)
     dedup.dedup_containment(spark, SF_ORACLE)
     dedup.dedup_ngram_jaccard(spark, SF_ORACLE)
-    assert len(dedup._CAND_EDGES_MEMO) == n_after_first == 1
+    assert len(_rel("dedup.candidate_edges_df")) == n_after_first == 1
 
 
 def test_kmeans_cents_and_pca_iterate_shared(spark):
@@ -92,20 +102,19 @@ def test_kmeans_cents_and_pca_iterate_shared(spark):
     the registered count) must NOT populate the memo."""
     from snackfs_spark.operators import clustering as cl
 
-    cl._KMEANS_CENTS_MEMO.clear()
+    _rel("clustering._kmeans_cents_registered").clear()
     c1 = cl.kmeans_cents(spark, SF_ORACLE, cl.KMEANS_ITERS)
     c2 = cl.kmeans_cents(spark, SF_ORACLE, cl.KMEANS_ITERS)
     assert c1 is c2
-    assert len(cl._KMEANS_CENTS_MEMO) == 1
+    assert len(_rel("clustering._kmeans_cents_registered")) == 1
     deep = cl.kmeans_cents(spark, SF_ORACLE, cl.KMEANS_ITERS + 2)
     assert deep is not c1
-    assert len(cl._KMEANS_CENTS_MEMO) == 1
+    assert len(_rel("clustering._kmeans_cents_registered")) == 1
     x1 = cl._pca_xq_df(spark, SF_ORACLE)
     x2 = cl._pca_xq_df(spark, SF_ORACLE)
     v1 = cl._pca_iterate_df(spark, SF_ORACLE)
     v2 = cl._pca_iterate_df(spark, SF_ORACLE)
     assert x1 is x2 and v1 is v2
-    assert isinstance(cl._KMEANS_CENTS_MEMO, type(cl._PCA_XQ_MEMO))
 
 
 def test_lpa_labels_and_pref_ranking_shared(spark):
@@ -116,18 +125,18 @@ def test_lpa_labels_and_pref_ranking_shared(spark):
     test runs must NOT populate the memo."""
     from snackfs_spark.operators import graph, sampling
 
-    graph._LPA_LABELS_MEMO.clear()
+    _rel("graph._lpa_labels_registered").clear()
     l1 = graph.lpa_labels_df(spark, SF_ORACLE, graph.LPA_ROUNDS)
     l2 = graph.lpa_labels_df(spark, SF_ORACLE, graph.LPA_ROUNDS)
     assert l1 is l2
-    assert len(graph._LPA_LABELS_MEMO) == 1
+    assert len(_rel("graph._lpa_labels_registered")) == 1
     deep = graph.lpa_labels_df(spark, SF_ORACLE, graph.LPA_ROUNDS + 1)
     assert deep is not l1
-    assert len(graph._LPA_LABELS_MEMO) == 1
-    sampling._PREF_RANKED_MEMO.clear()
+    assert len(_rel("graph._lpa_labels_registered")) == 1
+    _rel("sampling._pref_ranked_ckpt").clear()
     sampling.train_preference_pairs(spark, SF_ORACLE)
     sampling.train_pair_overlap(spark, SF_ORACLE)
-    assert len(sampling._PREF_RANKED_MEMO) == 1
+    assert len(_rel("sampling._pref_ranked_ckpt")) == 1
 
 
 def test_two_sample_tests_share_metric_groups(spark):
@@ -136,13 +145,13 @@ def test_two_sample_tests_share_metric_groups(spark):
     events scan + user-keyed metric shuffle)."""
     from snackfs_spark.operators import sampling
 
-    sampling._ARM_METRIC_MEMO.clear()
+    _rel("sampling.arm_metric_groups_df").clear()
     g1 = sampling.arm_metric_groups_df(spark, SF_ORACLE)
     sampling.sample_mann_whitney_u(spark, SF_ORACLE)
     sampling.sample_ks_two_sample(spark, SF_ORACLE)
     g2 = sampling.arm_metric_groups_df(spark, SF_ORACLE)
     assert g1 is g2
-    assert len(sampling._ARM_METRIC_MEMO) == 1
+    assert len(_rel("sampling.arm_metric_groups_df")) == 1
 
 
 def test_quality_score_family_shares_doc_quality_relation(spark):
@@ -154,10 +163,9 @@ def test_quality_score_family_shares_doc_quality_relation(spark):
     join per call)."""
     from snackfs_spark.operators import sampling, textstats
 
-    textstats._DOC_QUALITY_MEMO.clear()
-    textstats._FLUENCY_CELLED_MEMO.clear()
-    textstats._RELIABILITY_BINS_MEMO.clear()
-    assert isinstance(textstats._DOC_QUALITY_MEMO, SessionMemo)
+    _rel("textstats.doc_quality_df").clear()
+    _rel("textstats._fluency_celled_df").clear()
+    _rel("textstats._reliability_bins").clear()
     q1 = textstats.doc_quality_df(spark, SF_ORACLE)
     textstats.eval_quality_auc(spark, SF_ORACLE)
     textstats.eval_kappa_agreement(spark, SF_ORACLE)
@@ -172,9 +180,9 @@ def test_quality_score_family_shares_doc_quality_relation(spark):
     sampling.source_quality_tournament(spark, SF_ORACLE)
     q2 = textstats.doc_quality_df(spark, SF_ORACLE)
     assert q1 is q2
-    assert len(textstats._DOC_QUALITY_MEMO) == 1
-    assert len(textstats._FLUENCY_CELLED_MEMO) == 1
-    assert len(textstats._RELIABILITY_BINS_MEMO) == 1
+    assert len(_rel("textstats.doc_quality_df")) == 1
+    assert len(_rel("textstats._fluency_celled_df")) == 1
+    assert len(_rel("textstats._reliability_bins")) == 1
 
 
 def test_sketch_family_shares_type_user_pairs(spark):
@@ -185,8 +193,8 @@ def test_sketch_family_shares_type_user_pairs(spark):
     shuffle (the HLL pair also each re-derived the registers)."""
     from snackfs_spark.operators import relational
 
-    relational._TYPE_USER_PAIRS_MEMO.clear()
-    relational._HLL_REGS_MEMO.clear()
+    _rel("relational.type_user_pairs_df").clear()
+    _rel("relational.hll_type_regs_df").clear()
     p1 = relational.type_user_pairs_df(spark, SF_ORACLE)
     relational.approx_distinct_hll(spark, SF_ORACLE)
     relational.approx_distinct_hll_merged(spark, SF_ORACLE)
@@ -194,5 +202,5 @@ def test_sketch_family_shares_type_user_pairs(spark):
     relational.approx_kmv_theta_sketch(spark, SF_ORACLE)
     p2 = relational.type_user_pairs_df(spark, SF_ORACLE)
     assert p1 is p2
-    assert len(relational._TYPE_USER_PAIRS_MEMO) == 1
-    assert len(relational._HLL_REGS_MEMO) == 1
+    assert len(_rel("relational.type_user_pairs_df")) == 1
+    assert len(_rel("relational.hll_type_regs_df")) == 1

@@ -1,4 +1,4 @@
-"""Round-9 pins: the r8 ADVICE fixes (SessionMemo bounds + locking,
+"""Round-9 pins: the r8 ADVICE fixes (shared-relation memo bounds + locking,
 pinned ANSI overflow semantics) and the COVERAGE.md table lint
 (r8 VERDICT #3)."""
 
@@ -10,65 +10,105 @@ from pathlib import Path
 
 import pytest
 
-from snackfs_spark.memo import SessionMemo
+from snackfs_spark import memo
+from tests.conftest import stub_session
 
 DOC = Path("/root/repo/COVERAGE.md")
+OPERATORS = Path(__file__).resolve().parent.parent / "snackfs_spark" / "operators"
 
 
 # ------------------------------------------------------------ memo ----
 
 
+_probe_builds: list[str] = []
+
+
+@memo.shared
+def _probe(spark, sf_dir):
+    _probe_builds.append(sf_dir)
+    return object()
+
+
+_PROBE = memo.relation(f"{__name__}._probe")
+
+
 def test_session_memo_bounds_and_evicts_lru():
-    m = SessionMemo(maxsize=2)
-    m.get_or_build(("app", "a"), lambda: "A")
-    m.get_or_build(("app", "b"), lambda: "B")
-    # touch 'a' so 'b' is the LRU victim
-    assert m.get_or_build(("app", "a"), lambda: "A2") == "A"
-    m.get_or_build(("app", "c"), lambda: "C")
-    assert len(m) == 2
-    # 'b' was evicted: a rebuild runs
-    assert m.get_or_build(("app", "b"), lambda: "B2") == "B2"
+    _PROBE.clear()
+    s = stub_session("lru")
+    keep = [_probe(s, f"sf{i}") for i in range(memo.MAXSIZE)]
+    # touch sf0 so sf1 is the LRU victim
+    assert _probe(s, "sf0") is keep[0]
+    _probe(s, "extra")
+    assert len(_PROBE) == memo.MAXSIZE
+    # sf1 was evicted: a rebuild runs; sf0 survived
+    assert _probe(s, "sf1") is not keep[1]
+    assert _probe(s, "sf0") is keep[0]
+    # one entry per (session, sf_dir): another session builds its own
+    assert _probe(stub_session("other"), "sf0") is not keep[0]
 
 
 def test_session_memo_single_build_under_race():
     """Concurrent first calls must build exactly once — the raw-dict
     version could build twice and leak the losing localCheckpoint
     (r8 ADVICE)."""
-    m = SessionMemo(maxsize=4)
-    builds = []
+    _PROBE.clear()
+    s = stub_session("race")
+    del _probe_builds[:]
     barrier = threading.Barrier(8)
-
-    def build():
-        builds.append(1)
-        return object()
-
     results = []
 
     def worker():
         barrier.wait()
-        results.append(m.get_or_build(("app", "x"), build))
+        results.append(_probe(s, "x"))
 
-    threads = [threading.Thread(target=worker) for _ in range(8)]
+    threads = [threading.Thread(target=worker, daemon=True) for _ in range(8)]
     for t in threads:
         t.start()
     for t in threads:
-        t.join()
-    assert len(builds) == 1, "racing first calls built the pipeline twice"
+        t.join(timeout=30)
+        assert not t.is_alive()
+    assert _probe_builds == ["x"], "racing first calls built the pipeline twice"
     assert len({id(r) for r in results}) == 1, "callers saw different pipelines"
 
 
 def test_operator_memos_are_session_memos():
     """The shared-pipeline caches must stay on the bounded/locked
     implementation — a module-level dict regression reintroduces the
-    unbounded-growth + race defects."""
+    unbounded-growth + race defects. Each relation must be registered
+    under module.qualname and its module attribute must be the @shared
+    wrapper, not the bare builder."""
     from snackfs_spark.operators import dedup, textstats
 
-    assert isinstance(dedup._CAND_EDGES_MEMO, SessionMemo)
-    assert isinstance(dedup._PREFIX_FILTER_MEMO, SessionMemo)
-    assert isinstance(dedup._CLUSTER_LABELS_MEMO, SessionMemo)
-    assert isinstance(textstats._RANK_REL_MEMO, SessionMemo)
-    assert isinstance(textstats._HYBRID_RANKED_MEMO, SessionMemo)
-    assert isinstance(textstats._BIGRAM_SCORE_MEMO, SessionMemo)
+    for fn in (
+        dedup.candidate_edges_df,
+        dedup.dedup_prefix_filter,
+        dedup.cluster_labels_df,
+        textstats._retrieval_rank_rel,
+        textstats._hybrid_ranked,
+        textstats.text_bigram_prob,
+    ):
+        name = f"{fn.__module__}.{fn.__qualname__}"
+        assert isinstance(memo.relation(name), memo._Relation), name
+        assert hasattr(fn, "__wrapped__"), f"{name} is not @shared"
+
+
+def test_operators_define_no_session_keyed_cache():
+    """Shared relations are memoized only through memo.shared, which
+    owns the (applicationId, sf_dir) key, the LRU bound and the lock. An
+    operator module that reads applicationId is hand-rolling a session
+    cache again — the unbounded-growth + first-population-race defects
+    (r8 ADVICE) the decorator exists to prevent."""
+    import ast
+
+    modules = sorted(OPERATORS.glob("*.py"))
+    assert len(modules) > 10, OPERATORS
+    offenders = [
+        f"{path.name}:{node.lineno}"
+        for path in modules
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr == "applicationId"
+    ]
+    assert not offenders, f"session-keyed cache outside memo.py: {offenders}"
 
 
 # ------------------------------------------------------------ ANSI ----
