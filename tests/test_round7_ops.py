@@ -336,73 +336,33 @@ def test_conformance_audit_recount(spark):
 
 
 def test_bench_regression_gate_levels():
-    """bench's regression gate against the REAL recorded floors: quiet
-    on a baseline replay (no hard failure), and a regression confined
-    to the non-anchor queries (anchors flat -> host drift ~1, so
-    nothing is excused) must trip the HARD gate. A uniform inflation of
-    the anchors themselves is now divided out as host drift by design —
-    r9 VERDICT #3; that behavior is pinned in test_bench_gate.py."""
+    """bench's regression gate with the real recorded per-query times of
+    var/bench_last.json as floors: quiet on a replay (no alarm, no hard
+    failure), while a regression confined to a minority of queries (the
+    heaviest 40% of the battery, 2x slower) leaves host drift at 1, so
+    nothing is excused, and trips the HARD gate. A uniform inflation is
+    divided out as host drift by design; that is pinned in
+    test_bench_gate.py."""
     import json
-    import os
-
-    import pytest
+    from pathlib import Path
 
     import bench
 
-    if not os.path.exists("/root/repo/var/bench_last.json"):
-        pytest.skip(
-            "no local bench run recorded yet — run `python bench.py` to "
-            "create var/bench_last.json (fresh clones lack it; selected "
-            "var/ artifacts are committed individually with -f)"
-        )
-    last = json.load(open("/root/repo/var/bench_last.json"))["queries"]
-    hard, base_drift = bench._alarm_on_subtotal_regressions(dict(last), "0.1")
-    assert hard is False
-    # r10 ADVICE made EVERY recorded query an anchor (bench_last.json /
-    # bench_history.jsonl seed the floors), so "queries with no anchor
-    # floor" no longer exist. The equivalent real-regression scenario:
-    # inflate the heaviest 40% of the battery 2x — fewer than half the
-    # anchors move, so the drift MEDIAN stays put and excuses nothing,
-    # while the cumulative subtotals (time-weighted toward the heavy
-    # queries) blow past HARD_RATIO.
+    last = json.loads(
+        (Path(__file__).resolve().parent.parent / "var" / "bench_last.json")
+        .read_text()
+    )["queries"]
+    hard, drift, alarms = bench.gate(last, last)
+    assert (hard, drift, alarms) == (False, 1.0, [])
+    # the heaviest 40% carry more than half the time, so doubling them
+    # moves the total past HARD_RATIO while the drift median stays put
     names = sorted(last, key=last.get, reverse=True)
     slow = set(names[: int(len(names) * 0.4)])
-    # Mid-optimization-round the latest recorded run can be far FASTER
-    # than the last driver BENCH_r*.json subtotal baselines the gate
-    # compares against, so a fixed 2x of bench_last need not regress
-    # those baselines at all (observed once round 11's 0.7x bench line
-    # landed: 2x of the fast run read as only ~1.25x of BENCH_r10).
-    # Scale the slow set so every comparable group's inflated subtotal
-    # is >= DRIFT_CAP*HARD_RATIO of its recorded baseline — a true
-    # minority-of-queries regression that must trip HARD no matter how
-    # much faster the engine has since become, and beyond what drift
-    # (clamped to DRIFT_CAP) could ever excuse.
-    prior, _ = bench._prior_bench_data("0.1")
-    m = 2.0
-    for key, qnames in bench._round_groups().items():
-        if key not in prior:
-            continue
-        old = prior[key][1]
-        t_slow = sum(last[n] for n in qnames if n in last and n in slow)
-        t_fast = sum(last[n] for n in qnames if n in last and n not in slow)
-        if t_slow > 0 and old > 0:
-            need = 1.05 * bench.DRIFT_CAP * bench.HARD_RATIO * old - t_fast
-            m = max(m, need / t_slow)
-    inflated = {n: (t * m if n in slow else t) for n, t in last.items()}
-    hard, drift = bench._alarm_on_subtotal_regressions(inflated, "0.1")
-    # The floors are medians of REAL recent observations, so the 203
-    # per-query ratios are not all exactly 1.0 on a replay; inflating
-    # 40% of entries shifts the drift median's rank to at most the
-    # ~84th percentile of the UNCHANGED ratios — i.e. drift can read a
-    # noisy-run's upper quartile (observed 1.0 -> 1.14 when the latest
-    # recorded run sat ~5% above its floors), but it can never follow
-    # the inflated minority itself. The property that must hold is that
-    # the excusal stays materially below the regression: drift under
-    # HARD_RATIO (the inflation was sized past DRIFT_CAP*HARD_RATIO, so
-    # even a cap-saturated drift could not excuse it), and the hard
-    # gate still trips.
-    assert drift < bench.HARD_RATIO, "minority regression must not be excused"
+    inflated = {n: (t * 2.0 if n in slow else t) for n, t in last.items()}
+    hard, drift, alarms = bench.gate(inflated, last)
+    assert drift == 1.0, "minority regression must not be excused"
     assert hard is True
+    assert alarms[-1].startswith("# ALARM_HARD")
 
 
 def test_mmr_greedy_replay(spark):

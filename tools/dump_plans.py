@@ -1,5 +1,5 @@
 """Generate PLANS.md: collapsed physical-plan operator chains for the
-bench headline queries — the reviewable evidence that each plan has the
+queries bench.py times — the reviewable evidence that each plan has the
 shape SCALE.md claims (pushdown, broadcast, partial top-k, no cartesian).
 
 Usage: python tools/dump_plans.py
@@ -15,7 +15,7 @@ _REPO = Path(__file__).resolve().parent.parent
 if str(_REPO) not in sys.path:
     sys.path.insert(0, str(_REPO))
 
-from bench import ROUNDS  # noqa: E402
+from bench import QUERIES  # noqa: E402
 from snackfs_spark.registry import load_all  # noqa: E402
 from snackfs_spark.session import get_spark  # noqa: E402
 
@@ -48,9 +48,7 @@ def main() -> None:
         "pinned by tests/test_plans.py against the `_raw` builders.",
         "",
     ]
-    # every headline round group, so a new round added in bench.py is
-    # dumped automatically (this file lagged at R8 until round 5c)
-    for name in (n for grp in ROUNDS for n in grp):
+    for name in QUERIES:
         df = reg[name].fn(spark, SF)
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")

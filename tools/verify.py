@@ -1,16 +1,19 @@
-"""One-command verification drive: run every registered query against
-its DuckDB oracle at one or more scale factors, the same comparison the
+"""One-command verification drive: run registered queries against their
+DuckDB oracles at one or more scale factors, the same comparison the
 round driver's CORRECTNESS gate performs.
 
-Usage: python tools/verify.py [sf|fixture_dir ...] [--window N]
+Usage: python tools/verify.py [sf|fixture_dir|query ...] [--window N] [--skip N]
        (default: 0.01 0.1 over the whole registry)
 
-A token containing '/' is a fixture directory (e.g. var/sf1, the 10x
-key-shifted replica of sf0.1 from tools/make_scale_fixture.py);
---window N limits the run to the driver's first-N correctness window —
-the r6 VERDICT #6 sf1 spot-replica is
+A token that is a registered query name restricts the run to the named
+queries; a token containing '/' is a fixture directory (e.g. var/sf1, the
+10x key-shifted replica of sf0.1 from tools/make_scale_fixture.py); any
+other token is a scale factor. --window N limits the run to the driver's
+first-N correctness window — the sf1 spot-replica is
     python tools/make_scale_fixture.py var/sf1 10
     python tools/verify.py var/sf1 --window 50
+A mismatch prints its kind (columns, row count or values) and, for
+values, the first 5 differing rows of each side.
 Exit code 0 iff every oracled query hash-matches at every sf.
 """
 
@@ -33,6 +36,25 @@ TABLES = (
 ).split()
 
 
+def _mismatch(sp, od) -> str | None:
+    """None if the two frames hold the same rows in any order (compared
+    as strings), else what differs."""
+    cols = sorted(sp.columns)
+    if cols != sorted(od.columns):
+        return f"COLUMN MISMATCH {cols} vs {sorted(od.columns)}"
+    a = sp[cols].sort_values(cols).reset_index(drop=True).astype(str)
+    b = od[cols].sort_values(cols).reset_index(drop=True).astype(str)
+    if len(a) != len(b):
+        return f"ROW COUNT {len(a)} vs {len(b)}"
+    if a.equals(b):
+        return None
+    diff = (a != b).any(axis=1)
+    return (
+        f"VALUE MISMATCH on {int(diff.sum())} rows\n"
+        f"spark:\n{a[diff].head(5)}\noracle:\n{b[diff].head(5)}"
+    )
+
+
 def main() -> int:
     argv = sys.argv[1:]
     window = None
@@ -48,12 +70,15 @@ def main() -> int:
         i = argv.index("--skip")
         skip = int(argv[i + 1])
         argv = argv[:i] + argv[i + 2 :]
-    sfs = argv or ["0.01", "0.1"]
+    qs, osql = e.queries(), e.oracle_sql()
+    named = [a for a in argv if a in qs]
+    sfs = [a for a in argv if a not in qs] or ["0.01", "0.1"]
+    unknown = [a for a in sfs if "/" not in a and not a.replace(".", "", 1).isdigit()]
+    if unknown:
+        sys.exit(f"verify.py: not a query, sf or fixture dir: {' '.join(unknown)}")
+    names = (named or list(qs))[skip : skip + window if window is not None else None]
     spark = get_spark("verify", cpus=8)
     print("entry rows:", len(e.entry(spark).collect()))
-    qs, osql = e.queries(), e.oracle_sql()
-    names = list(qs)[skip : skip + window if window is not None else None]
-    qs = {n: qs[n] for n in names}
     failed = False
     for sf in sfs:
         sf_dir = sf if "/" in sf else f"/root/testdata/sf{sf}"
@@ -64,24 +89,15 @@ def main() -> int:
                 f"read_parquet('{sf_dir}/{t}.parquet')"
             )
         bad = []
-        for name, fn in qs.items():
-            sp = fn(spark, sf_dir).toPandas()
+        for name in names:
+            sp = qs[name](spark, sf_dir).toPandas()
             if name not in osql:
                 continue
-            od = con.execute(osql[name]).fetchdf()
-            cols = sorted(sp.columns)
-            ok = (
-                cols == sorted(od.columns)
-                and len(sp) == len(od)
-                and sp[cols]
-                .sort_values(cols)
-                .reset_index(drop=True)
-                .astype(str)
-                .equals(od[cols].sort_values(cols).reset_index(drop=True).astype(str))
-            )
-            if not ok:
+            problem = _mismatch(sp, con.execute(osql[name]).fetchdf())
+            if problem:
                 bad.append(name)
-                print(f"sf{sf} {name}: MISMATCH rows {len(sp)}/{len(od)}")
+                print(f"sf{sf} {name}: {problem}")
+        print(f"sf{sf} checked {sum(n in osql for n in names)} oracled queries")
         print(f"sf{sf} MISMATCHES:", bad or "none")
         failed = failed or bool(bad)
     spark.stop()
