@@ -149,7 +149,13 @@ def _build_files_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(755).alias("permission"),
         epoch.alias("mtime"),
     )
-    return file_rows.unionAll(dir_rows).unionAll(root_rows).unionAll(slash_rows)
+    # The bounded directory rows share ONE partition: apart, the cached
+    # view would keep the distinct's shuffle partitions plus
+    # defaultParallelism partitions per spark.range(1), and every lookup
+    # over `files` would pay a task for each (cached plans keep their
+    # partitioning: spark.sql.optimizer.canChangeCachedPlanOutputPartitioning).
+    dirs = dir_rows.unionAll(root_rows).unionAll(slash_rows).coalesce(1)
+    return file_rows.unionAll(dirs)
 
 
 # -------------------------------------------------------------- content ----

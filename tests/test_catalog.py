@@ -125,3 +125,36 @@ def test_open_single_file_and_error_semantics(cat, docs_con):
         cat.open("/data/src0/doc_999999.txt")
     with _pytest.raises(IsADirectoryError):
         cat.open("/data/src0")
+
+
+def test_files_view_has_documents_partitions_plus_one(spark, cat, duck):
+    """The cached `files` view keeps its bounded directory rows in ONE
+    partition, so a lookup over it runs the documents' tasks + 1 instead
+    of one task per shuffle partition and per spark.range(1) partition;
+    the stat/ls/du answers are the oracle's."""
+    import pandas as pd
+
+    from snackfs_spark.sources.fsmodel import fs_sql
+    from snackfs_spark.sources.tables import load_table
+    from tests.oracle_harness import compare
+
+    docs = load_table(spark, SF_ORACLE, "documents").rdd.getNumPartitions()
+    assert cat.files.rdd.getNumPartitions() == docs + 1
+    stat_sql = "SELECT path, is_dir, size, owner, grp, permission, mtime FROM files WHERE path = '{}'"
+    ls_sql = "SELECT path, name, is_dir, size FROM files WHERE parent_path = '{}'"
+    cases = [
+        (cat.stat(p), stat_sql.format(p))
+        for p in ("/", "/data", "/data/src3", "/data/src0/doc_0.txt")
+    ] + [
+        (cat.ls(p), ls_sql.format(p)) for p in ("/", "/data", "/data/src2")
+    ] + [
+        (
+            cat.du("/data"),
+            "SELECT split_part(path, '/', 3) AS child, sum(size) AS bytes "
+            "FROM files WHERE starts_with(path, '/data/') AND NOT is_dir GROUP BY 1",
+        )
+    ]
+    for df, sql in cases:
+        got = pd.DataFrame.from_records([tuple(r) for r in df.collect()], columns=df.columns)
+        want = duck.execute(fs_sql(sql, "files")).fetchdf()
+        assert len(want) and not compare(got, want), sql

@@ -3,21 +3,19 @@ data source, bucket pruning on point lookups, pushed prefix filters."""
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 import pytest
 from pyspark.sql import functions as F
 
 from snackfs_spark.sources import snackstore, writer
 
-VAR = Path("/root/repo/var/test_snackstore")
+
+@pytest.fixture(scope="module")
+def var(tmp_path_factory):
+    return tmp_path_factory.mktemp("test_snackstore")
 
 
 @pytest.fixture(scope="module", autouse=True)
-def store(spark):
-    shutil.rmtree(VAR, ignore_errors=True)
-    VAR.mkdir(parents=True, exist_ok=True)
+def store(spark, var):
     snackstore.register(spark)
     rows = [
         ("/kv/a.txt", "alpha " * 30),
@@ -29,27 +27,26 @@ def store(spark):
     chunks = writer.chunk_text(df).select("path", "sub_offset", "length", "payload")
     (
         chunks.write.format("snackstore")
-        .option("store_dir", str(VAR / "store"))
+        .option("store_dir", str(var / "store"))
         .option("buckets", 8)
         .mode("append")
         .save()
     )
-    yield {p: t for p, t in rows}
-    shutil.rmtree(VAR, ignore_errors=True)
+    return {p: t for p, t in rows}
 
 
-def _read(spark):
+def _read(spark, var):
     return (
         spark.read.format("snackstore")
-        .option("store_dir", str(VAR / "store"))
+        .option("store_dir", str(var / "store"))
         .load()
     )
 
 
-def test_roundtrip_through_connector(spark, store):
+def test_roundtrip_through_connector(spark, store, var):
     got = {
         r["path"]: r["text"]
-        for r in _read(spark)
+        for r in _read(spark, var)
         .groupBy("path")
         .agg(
             F.array_join(
@@ -65,8 +62,8 @@ def test_roundtrip_through_connector(spark, store):
     assert got == store
 
 
-def test_point_lookup_prunes_to_one_bucket(spark, store):
-    df = _read(spark).filter(F.col("path") == "/kv/b.txt")
+def test_point_lookup_prunes_to_one_bucket(spark, store, var):
+    df = _read(spark, var).filter(F.col("path") == "/kv/b.txt")
     # the pushed EqualTo collapses partition planning to a single bucket
     assert df.rdd.getNumPartitions() == 1
     rows = df.collect()
@@ -75,28 +72,28 @@ def test_point_lookup_prunes_to_one_bucket(spark, store):
         r["payload"] for r in sorted(rows, key=lambda r: r["sub_offset"])
     ) == store["/kv/b.txt"]
     # unfiltered scan plans all 8 buckets
-    assert _read(spark).rdd.getNumPartitions() == 8
+    assert _read(spark, var).rdd.getNumPartitions() == 8
 
 
-def test_prefix_filter_pushed_into_reader(spark, store):
-    df = _read(spark).filter(F.col("path").startswith("/kv/"))
+def test_prefix_filter_pushed_into_reader(spark, store, var):
+    df = _read(spark, var).filter(F.col("path").startswith("/kv/"))
     paths = {r["path"] for r in df.select("path").distinct().collect()}
     assert paths == {"/kv/a.txt", "/kv/b.txt", "/kv/sub/c.txt"}
 
 
-def test_unsupported_filter_still_correct(spark, store):
+def test_unsupported_filter_still_correct(spark, store, var):
     # sub_offset predicate is NOT pushed (yielded back) — Spark must
     # evaluate it post-scan with identical results
-    df = _read(spark).filter((F.col("sub_offset") >= 64) & (F.col("path") == "/kv/b.txt"))
+    df = _read(spark, var).filter((F.col("sub_offset") >= 64) & (F.col("path") == "/kv/b.txt"))
     rows = df.collect()
     assert rows and all(r["sub_offset"] >= 64 and r["path"] == "/kv/b.txt" for r in rows)
 
 
-def test_multi_fragment_paths_merge_additively(spark, store):
+def test_multi_fragment_paths_merge_additively(spark, store, var):
     """A path whose chunks span several write tasks (repartitioned input)
     must read back complete: inode fragments merge additively, never
     replace (ADVICE r1: dict.update dropped all but the last fragment)."""
-    root = VAR / "frag_store"
+    root = var / "frag_store"
     rows = [("/frag/x.txt", "x" * 300)]
     df = spark.createDataFrame(rows, "path string, text string")
     chunks = writer.chunk_text(df).select("path", "sub_offset", "length", "payload")
@@ -119,7 +116,7 @@ def test_multi_fragment_paths_merge_additively(spark, store):
     assert "".join(r["payload"] for r in got) == "x" * 300
 
 
-def test_multiblock_file_roundtrips_through_block_hierarchy(spark, store):
+def test_multiblock_file_roundtrips_through_block_hierarchy(spark, store, var):
     """A file spanning MANY blocks (32 sub-blocks = 8 blocks at the
     scaled 64-char/4-per-block layout) must ingest and reassemble
     byte-identical through the two-level (sub-block → block → file)
@@ -128,7 +125,7 @@ def test_multiblock_file_roundtrips_through_block_hierarchy(spark, store):
     from snackfs_spark.operators.content import reassemble_chunks
     from snackfs_spark.sources.fsmodel import BLOCK_CHARS, SUB_CHARS
 
-    root = VAR / "multiblock_store"
+    root = var / "multiblock_store"
     text = "".join(chr(97 + (i % 26)) for i in range(32 * SUB_CHARS + 17))
     df = spark.createDataFrame([("/big/huge.txt", text)], "path string, text string")
     chunks = writer.chunk_text(df).select("path", "sub_offset", "length", "payload")
@@ -161,8 +158,8 @@ def test_multiblock_file_roundtrips_through_block_hierarchy(spark, store):
     assert max(lens) <= BLOCK_CHARS
 
 
-def test_overwrite_clears_previous_store(spark, store):
-    root = VAR / "ow_store"
+def test_overwrite_clears_previous_store(spark, store, var):
+    root = var / "ow_store"
     def write(text, mode):
         df = spark.createDataFrame([("/ow/a.txt", text)], "path string, text string")
         chunks = writer.chunk_text(df).select("path", "sub_offset", "length", "payload")
@@ -181,11 +178,11 @@ def test_overwrite_clears_previous_store(spark, store):
     assert [r["payload"] for r in got] == ["new"]
 
 
-def test_preferred_locations_surface_ring_hosts(spark, store):
+def test_preferred_locations_surface_ring_hosts(spark, store, var):
     """Each bucket partition carries its RF=3 replica hosts from the
     token ring — the preferredLocations feed of ThriftStore.scala:543-605
     / SnackFS.scala:135-149."""
-    root = VAR / "loc_store"
+    root = var / "loc_store"
     df = spark.createDataFrame([("/loc/a.txt", "abc")], "path string, text string")
     chunks = writer.chunk_text(df).select("path", "sub_offset", "length", "payload")
     hosts = [f"node{i}" for i in range(5)]
@@ -247,7 +244,7 @@ def test_bucket_replicas_match_fsmodel_ring(spark):
             assert snackstore.bucket_replicas(b, buckets, hosts) == got
 
 
-def test_metadata_only_read_skips_blob_io(spark, store):
+def test_metadata_only_read_skips_blob_io(spark, store, var):
     """Column-pruning analog (reference fetches only the path column in
     listings, ThriftStore.scala:506): with 'payload' excluded via the
     columns option, the reader must not open a single blob. Proven by
@@ -255,7 +252,7 @@ def test_metadata_only_read_skips_blob_io(spark, store):
     read would fail."""
     import shutil as _sh
 
-    root = VAR / "meta_store"
+    root = var / "meta_store"
     rows = [("/m/a.txt", "alpha " * 40), ("/m/b.txt", "bravo " * 20)]
     df = spark.createDataFrame(rows, "path string, text string")
     chunks = writer.chunk_text(df).select("path", "sub_offset", "length", "payload")
@@ -285,11 +282,12 @@ def test_metadata_only_read_skips_blob_io(spark, store):
     _sh.rmtree(root)
 
 
-def test_vacuum_removes_only_orphan_blobs(spark, store):
-    """A write task that dies after writing blobs but before its inode
-    fragment leaves orphans; vacuum_store deletes exactly those and the
-    store reads back byte-identical."""
-    root = VAR / "vac_store"
+def test_vacuum_removes_only_orphan_blobs(spark, store, var):
+    """A write task that dies after writing its segments but before its
+    inode fragment leaves orphans; vacuum_store deletes exactly those
+    (in either layout, once past the grace window) and the store reads
+    back byte-identical."""
+    root = var / "vac_store"
     df = spark.createDataFrame(
         [("/v/a.txt", "alpha " * 30), ("/v/b.txt", "beta " * 50)],
         "path string, text string",
@@ -306,25 +304,29 @@ def test_vacuum_removes_only_orphan_blobs(spark, store):
         (r["path"], r["sub_offset"], r["payload"])
         for r in spark.read.format("snackstore").option("store_dir", str(root)).load().collect()
     }
-    # simulate an aborted task: orphan blobs with no inode fragment
-    for b in (0, 1):
+    # one segment per (bucket, write task), each named by a fragment
+    segments = len(list(root.glob("bucket=*/sblock-*")))
+    assert segments == len(list(root.glob("bucket=*/inodes-*"))) > 0
+    # simulate aborted tasks: an old-layout blob and a segment, neither
+    # named by any inode fragment
+    orphans = {0: "sblock-deadbeefdeadbeef-0.bin", 1: "sblock-deadbeef0000.bin"}
+    for b, name in orphans.items():
         bdir = root / f"bucket={b}"
         bdir.mkdir(exist_ok=True)
-        (bdir / "sblock-deadbeefdeadbeef-0.bin").write_bytes(b"orphan")
+        (bdir / name).write_bytes(b"orphan")
     # fresh orphans are inside the GC grace window (they may belong to an
     # in-flight writer whose inode fragment hasn't landed) -> kept
     stats = snackstore.vacuum_store(str(root))
-    assert stats["removed"] == 0 and stats["kept"] == len(before) + 2
+    assert stats["removed"] == 0 and stats["kept"] == segments + 2
     # age them past the grace window (backdate mtime), then they are GC'd
     import os as _os
     import time as _time
 
     old = _time.time() - 2 * snackstore.VACUUM_GRACE_SECONDS
-    for b in (0, 1):
-        fp = root / f"bucket={b}" / "sblock-deadbeefdeadbeef-0.bin"
-        _os.utime(fp, (old, old))
+    for b, name in orphans.items():
+        _os.utime(root / f"bucket={b}" / name, (old, old))
     stats = snackstore.vacuum_store(str(root))
-    assert stats["removed"] == 2 and stats["kept"] == len(before)
+    assert stats["removed"] == 2 and stats["kept"] == segments
     after = {
         (r["path"], r["sub_offset"], r["payload"])
         for r in spark.read.format("snackstore").option("store_dir", str(root)).load().collect()
@@ -332,13 +334,13 @@ def test_vacuum_removes_only_orphan_blobs(spark, store):
     assert after == before
 
 
-def test_limit_pushdown_caps_partition_rows(spark, store):
+def test_limit_pushdown_caps_partition_rows(spark, store, var):
     """SupportsPushDownLimit analog: limit=N stops each bucket's reader
     after N rows (the reference's hard listing cap, ThriftStore.scala:509
     — pushed into the scan, not applied after it)."""
     df = (
         spark.read.format("snackstore")
-        .option("store_dir", str(VAR / "store"))
+        .option("store_dir", str(var / "store"))
         .option("limit", "1")
         .load()
     )
@@ -348,7 +350,7 @@ def test_limit_pushdown_caps_partition_rows(spark, store):
     assert df.count() <= 8
 
 
-def test_listing_cap_binds_only_metadata_reads_and_raises(spark, store):
+def test_listing_cap_binds_only_metadata_reads_and_raises(spark, store, var):
     """The reference's 100k cap bounds path LISTINGS only
     (ThriftStore.scala:509), never data reads — and when it binds, the
     reader raises instead of silently truncating (ADVICE r2)."""
@@ -357,7 +359,7 @@ def test_listing_cap_binds_only_metadata_reads_and_raises(spark, store):
 
     base = (
         spark.read.format("snackstore")
-        .option("store_dir", str(VAR / "store"))
+        .option("store_dir", str(var / "store"))
     )
     total = base.load().count()
     # full payload scan: cap option is IGNORED (data reads uncapped)
@@ -381,14 +383,14 @@ def test_listing_cap_binds_only_metadata_reads_and_raises(spark, store):
     )
 
 
-def test_append_reuses_existing_store_layout(spark, store):
+def test_append_reuses_existing_store_layout(spark, store, var):
     """Appending must reuse the existing store's bucket count and ring
     hosts (the layout old fragments already hash to); a conflicting
     explicit buckets option is an error, not silent data loss (ADVICE
     r2: a re-bucketed append routes lookups to the wrong bucket)."""
     import json as _json
 
-    root = VAR / "append_store"
+    root = var / "append_store"
 
     def write(path, text, mode, **opts):
         df = spark.createDataFrame([(path, text)], "path string, text string")
@@ -425,12 +427,12 @@ def test_append_reuses_existing_store_layout(spark, store):
     assert meta["buckets"] == 16
 
 
-def test_stream_tail_follow_emits_appends_incrementally(spark, store):
+def test_stream_tail_follow_emits_appends_incrementally(spark, store, var):
     """Streaming tail-follow (SnackStoreTailReader): batch 1 sees the
     file's current sub-blocks; an append surfaces ONLY the new
     sub-blocks in the next micro-batch; drained content equals the
     batch read byte-for-byte."""
-    root = str(VAR / "tailstore")
+    root = str(var / "tailstore")
     base = spark.createDataFrame(
         [("/log/app.txt", "alpha " * 40)], "path string, text string"
     )
@@ -497,14 +499,14 @@ def test_stream_tail_follow_emits_appends_incrementally(spark, store):
     )
 
 
-def test_stream_tail_replay_between_offsets_is_exact(spark, store):
+def test_stream_tail_replay_between_offsets_is_exact(spark, store, var):
     """readBetweenOffsets re-derives a closed batch exactly (checkpoint
     recovery contract), and out-of-order commits stay PENDING until the
     gap fills — a max-offset watermark would lose them (sequential tail
     semantics, DESIGN.md 'Streaming tail-follow offsets')."""
     from snackfs_spark.sources.snackstore import SnackStoreTailReader
 
-    root = str(VAR / "replaystore")
+    root = str(var / "replaystore")
     df = spark.createDataFrame(
         [("/log/r.txt", "x" * 200)], "path string, text string"
     )
@@ -556,7 +558,7 @@ def test_stream_tail_replay_between_offsets_is_exact(spark, store):
     ] + sorted(o for o, _l in r._committed_chunks())
 
 
-def test_legacy_hwm_vacuumed_chunk_recovers_without_stall(spark, store):
+def test_legacy_hwm_vacuumed_chunk_recovers_without_stall(spark, store, var):
     """A legacy {"hwm"} checkpoint whose hwm chunk was vacuumed away must
     NOT resume at the raw hwm (a chunk START) — that opens a phantom gap
     and stalls the stream forever (r4 ADVICE). Recovery resumes at the
@@ -566,7 +568,7 @@ def test_legacy_hwm_vacuumed_chunk_recovers_without_stall(spark, store):
 
     from snackfs_spark.sources.snackstore import SnackStoreTailReader
 
-    root = str(VAR / "vacuumedlegacy")
+    root = str(var / "vacuumedlegacy")
     rows = [
         ("/log/v.txt", 0, 100, "a" * 100),
         ("/log/v.txt", 100, 100, "b" * 100),
@@ -601,3 +603,173 @@ def test_legacy_hwm_vacuumed_chunk_recovers_without_stall(spark, store):
         emitted2, end2 = r2.read({"hwm": 50})
     assert [o for _, o, _, _ in emitted2] == [100, 200]
     assert end2["end"] == 265
+
+
+def _write(df, root, buckets, mode="append"):
+    (
+        df.select("path", "sub_offset", "length", "payload")
+        .write.format("snackstore")
+        .option("store_dir", str(root))
+        .option("buckets", buckets)
+        .mode(mode)
+        .save()
+    )
+
+
+def _rows(spark, root, **options):
+    r = spark.read.format("snackstore").option("store_dir", str(root))
+    for k, v in options.items():
+        r = r.option(k, v)
+    return {(x["path"], x["sub_offset"], x["length"], x["payload"]) for x in r.load().collect()}
+
+
+def test_each_task_packs_a_bucket_into_one_segment(spark, var):
+    """A write task appends all its sub-blocks of a bucket to ONE
+    segment: after a multi-task write there are as many segments as
+    inode fragments, not one file per row."""
+    root = var / "packed_store"
+    df = spark.createDataFrame(
+        [(f"/p/{i}.txt", f"text {i} " * (5 + 20 * i)) for i in range(8)],
+        "path string, text string",
+    )
+    chunks = writer.chunk_text(df).repartition(3)
+    _write(chunks, root, 4)
+    segments = list(root.glob("bucket=*/sblock-*"))
+    fragments = list(root.glob("bucket=*/inodes-*"))
+    n_rows = chunks.count()
+    assert len(segments) == len(fragments) < n_rows
+    assert {s.name[len("sblock-"):-len(".bin")] for s in segments} == {
+        f.name[len("inodes-"):-len(".json")] for f in fragments
+    }
+    expected = {(r["path"], r["sub_offset"], r["length"], r["payload"]) for r in chunks.collect()}
+    assert _rows(spark, root) == expected
+
+
+def test_point_read_touches_only_its_byte_ranges(spark, var):
+    """A point read seeks to its own byte ranges in the shared segment:
+    garbage (invalid UTF-8) over ANOTHER path's range in the same segment
+    leaves it byte-identical, while a full scan of that segment fails."""
+    import json
+
+    from pyspark.errors.exceptions.captured import PythonException
+
+    root = var / "ranged_store"
+    texts = {"/r/a.txt": "ä" * 150, "/r/b.txt": "b" * 200, "/r/c.txt": "ç" * 90}
+    df = spark.createDataFrame(list(texts.items()), "path string, text string")
+    _write(writer.chunk_text(df).coalesce(1), root, 1)
+    [segment] = root.glob("bucket=0/sblock-*")
+    [fragment] = root.glob("bucket=0/inodes-*")
+    with open(fragment) as f:
+        b_chunks = json.load(f)["/r/b.txt"]["chunks"]
+    with open(segment, "r+b") as f:
+        for _off, _chars, pos, nbytes in b_chunks:
+            f.seek(pos)
+            f.write(b"\xff" * nbytes)
+
+    def point(path):
+        rows = (
+            spark.read.format("snackstore").option("store_dir", str(root)).load()
+            .filter(F.col("path") == path).orderBy("sub_offset").collect()
+        )
+        return "".join(r["payload"] for r in rows)
+
+    assert point("/r/a.txt").encode() == texts["/r/a.txt"].encode()
+    assert point("/r/c.txt").encode() == texts["/r/c.txt"].encode()
+    with pytest.raises(PythonException, match="codec can't decode"):
+        point("/r/b.txt")
+
+
+def _old_layout_store(root):
+    """A store as written before segments: one blob per sub-block, a
+    fragment with two-element [sub_offset, char_len] chunks, and a pre-r2
+    fragment with `offsets` only, holding a non-ASCII payload."""
+    import json
+
+    texts = {"/old/a.txt": "alpha beta gamma", "/old/ü.txt": "grüße, ñandú ✓ fin"}
+    pieces = {p: [(o, t[o:o + 6]) for o in range(0, len(t), 6)] for p, t in texts.items()}
+    root.mkdir()
+    (root / "_store.json").write_text(json.dumps({"buckets": 2, "hosts": []}))
+    for name, (path, key) in {"0001": ("/old/a.txt", "chunks"),
+                              "0002": ("/old/ü.txt", "offsets")}.items():
+        bdir = root / f"bucket={snackstore._bucket_of(path, 2)}"
+        bdir.mkdir(exist_ok=True)
+        for off, piece in pieces[path]:
+            blob = f"sblock-{snackstore._path_hash(path)}-{off}.bin"
+            (bdir / blob).write_bytes(piece.encode("utf-8"))
+        entry = [[o, len(s)] for o, s in pieces[path]] if key == "chunks" else [
+            o for o, _s in pieces[path]]
+        (bdir / f"inodes-{name}.json").write_text(json.dumps({path: {key: entry}}))
+    return texts, pieces
+
+
+def test_old_layout_store_reads_back_byte_identical(spark, var):
+    """Stores from before segments stay readable through a batch read, a
+    metadata listing and the tail reader; a pre-r2 entry's listed length
+    is its CHAR length, decoded, not the blob's byte size."""
+    root = var / "old_layout_store"
+    texts, pieces = _old_layout_store(root)
+    want = {(p, o, len(s)) for p, ps in pieces.items() for o, s in ps}
+    assert any(len(s) != len(s.encode()) for ps in pieces.values() for _o, s in ps)
+    got = _rows(spark, root)
+    assert {(p, o, n) for p, o, n, _s in got} == want
+    for path, text in texts.items():
+        batch = "".join(s for _o, s in sorted((o, s) for p, o, _n, s in got if p == path))
+        assert batch.encode() == text.encode()
+    listed = _rows(spark, root, columns="path,sub_offset,length")
+    assert {(p, o, n) for p, o, n, _s in listed} == want
+    for path, text in texts.items():
+        tail = snackstore.SnackStoreTailReader({"store_dir": str(root), "path": path})
+        rows, end = tail.read(tail.initialOffset())
+        assert "".join(s for _p, _o, _n, s in rows).encode() == text.encode()
+        assert end == {"end": len(text)}
+
+
+def test_metadata_listing_is_one_partition_with_per_bucket_limit(spark, store, var):
+    """A metadata-only read plans ONE partition over all buckets and lists
+    exactly the rows a payload read returns; `limit` still cuts each
+    bucket, so the global first N survive when they span buckets."""
+    root = var / "store"
+    meta = (
+        spark.read.format("snackstore").option("store_dir", str(root))
+        .option("columns", "path,sub_offset,length").load()
+    )
+    assert meta.rdd.getNumPartitions() == 1
+    assert _rows(spark, root, columns="path,sub_offset,length") == {
+        (p, o, n, None) for p, o, n, _s in _rows(spark, root)
+    }
+    lim_root = var / "limit_store"
+    df = spark.createDataFrame(
+        [(f"/l/{i:02d}.txt", f"{i}") for i in range(24)], "path string, text string"
+    )
+    _write(writer.chunk_text(df), lim_root, 4)
+    n = 5
+    first = sorted(f"/l/{i:02d}.txt" for i in range(24))[:n]
+    assert len({snackstore._bucket_of(p, 4) for p in first}) > 1
+    limited = (
+        spark.read.format("snackstore").option("store_dir", str(lim_root))
+        .option("columns", "path,sub_offset,length").option("limit", str(n)).load()
+    )
+    assert limited.rdd.getNumPartitions() == 1
+    per_bucket = {}
+    for i in range(24):
+        b = snackstore._bucket_of(f"/l/{i:02d}.txt", 4)
+        per_bucket[b] = per_bucket.get(b, 0) + 1
+    assert limited.count() == sum(min(n, k) for k in per_bucket.values()) > n
+    assert [r["path"] for r in limited.orderBy("path", "sub_offset").limit(n).collect()] == first
+
+
+def test_vacuum_keeps_every_live_segment(spark, var):
+    """With no grace window, vacuum on a live packed store removes
+    nothing: a segment is referenced exactly when its task's fragment
+    exists, whatever its chunks hold."""
+    root = var / "live_vac_store"
+    df = spark.createDataFrame(
+        [(f"/lv/{i}.txt", f"live {i} " * (10 + 15 * i)) for i in range(6)],
+        "path string, text string",
+    )
+    _write(writer.chunk_text(df).repartition(3), root, 2)
+    before = _rows(spark, root)
+    fragments = list(root.glob("bucket=*/inodes-*"))
+    stats = snackstore.vacuum_store(str(root), grace_seconds=0)
+    assert stats == {"removed": 0, "kept": len(fragments)} and fragments
+    assert _rows(spark, root) == before
