@@ -10,12 +10,25 @@ Register with the decorator:
 
 Oracle-less (non-SQL-expressible) operators pass ``oracle=None`` and get
 the driver's weaker rows-only check.
+
+The driver hash-checks the FIRST ``WINDOW`` (50) queries of ``load_all()``
+and writes one ``CORRECTNESS_r<N>.json`` per round into the repo root.
+The window is computed from those artifacts, never curated by hand: the
+``ANCHORS`` lead, then the registered queries least recently checked
+green (``hash_match is True``), never-green ones first, ties in
+registration order. Each new artifact rotates the names it holds out of
+the next window, so every query is re-checked at least every
+ceil((len(REGISTRY) - 2) / 48) rounds. Queries outside the window stay
+hash-checked by the in-repo replica (tests/test_correctness.py).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import re
+from collections.abc import Callable, Iterable, Mapping
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -42,103 +55,60 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
-# The driver's correctness gate checks the FIRST 50 registered queries,
-# so the iteration order of `load_all()` is normative: these 50 SPAN
-# SURVEY.md §2 — the §2.B Q-* skeleton crew, the declared operator
-# families, and at least one oracle-checked query per §2.C class (dedup,
-# ANN, text, multimodal, sampling, streaming). Variants and batteries
-# beyond the span register after the window (still covered by the
-# in-repo oracle replica, tests/test_correctness.py, which hash-checks
-# ALL registered queries at sf0.01 every test run).
-#
-# ROUND-12 ROTATION (r11 VERDICT #8, executing the plan pre-staged in
-# r10/r11): keep the two permanent anchors (q1 flagship + connector).
-# No fs veteran is cadence-due (the r11 six carry fresh green rows; the
-# eleven r10-green Q-* rows come due in the r13 window). All 43
-# never-driver-checked names go in — the 38-name backlog that remained
-# after r11 PLUS the five round-11 build additions (eval_pass_at_k,
-# train_grpo_advantage, eval_best_of_n_curve, source_quality_tournament,
-# emb_matryoshka_recall) — draining the backlog COMPLETELY: cumulative
-# driver-green reaches 336/336 when this window lands. The remaining 5
-# slots re-check queries whose INTERNALS this optimization round
-# changed (approx_distinct_hll's null-safe exact count, the join-order
-# advisor's un-forced broadcast, and the round's pcy/profile/streaming
-# targets), so the driver re-validates exactly what moved. 43 >= the
-# freshness test's 35-slot bound. Every evicted r11 name stays
-# registered and hash-checked by the in-repo replica
-# (tests/test_correctness.py) every test run.
-PRIORITY: tuple[str, ...] = (
-    # -------- permanent anchors (2)
-    "q1_pricing_summary",
-    "fs_connector_roundtrip",
-    # -------- first-time driver rows (43) = the ENTIRE remaining
-    # backlog in registration order, starting with the five r11 build
-    # additions (REQUIRED this window, r11 VERDICT #8):
-    "eval_pass_at_k",  # r11 addition: pass@k falling-factorial
-    "train_grpo_advantage",  # r11 addition: GRPO group advantage
-    "eval_best_of_n_curve",  # r11 addition: best-of-n yield curve
-    "source_quality_tournament",  # r11 addition: q-lattice tournament
-    "emb_matryoshka_recall",  # r11 addition: truncation recall
-    # text pipeline:
-    "text_diversity",  # type-token diversity profile
-    "text_fingerprint_pandas",  # Arrow-UDF rolling fingerprint
-    "user_event_gaps_grouped",  # applyInPandas gap stats
-    "text_common_ngrams",  # cross-doc common n-grams
-    "text_boilerplate",  # boilerplate shingle detection
-    "text_rarity_score",  # IDF-weighted rarity
-    "text_bigram_prob",  # bigram-LM doc scoring
-    "text_cooccurrence_topk",  # bounded-vocab co-occurrence
-    "bpe_segment_corpus",  # BPE corpus segmentation
-    "source_vocab_similarity",  # per-source vocab cosine
-    "doc_chunk_sliding",  # sliding-window chunker
-    "events_pii_scan",  # PII pattern scan
-    "eval_retrieval_ranks",  # shared-ranking retrieval eval
-    "text_collocation_lift",  # exact-integer collocation lift
-    "bpe_fertility_by_source",  # tokens-per-word fertility
-    "text_vocab_growth",  # Heaps-law vocab growth
-    "corpus_novelty_curve",  # first-occurrence novelty curve
-    "text_burstiness",  # Fano-factor burstiness
-    "text_zipf_octaves",  # Zipf octave profile
-    "text_quality_perceptron",  # in-engine perceptron trainer
-    "eval_bootstrap_ci",  # Poisson-bootstrap CI
-    "text_rake_keywords",  # RAKE keyword extraction
-    "text_stop_list_induction",  # induced stop list
-    "eval_mcnemar_paired",  # McNemar paired test
-    "eval_lang_confusion",  # language-ID confusion matrix
-    "text_blocklist_scan",  # blocklist hit scan
-    "text_distinct_ngrams",  # distinct n-gram counts
-    # windows / events / FP&A:
-    "win_analytics_battery",  # window-function battery
-    "events_debounce",  # debounced event stream
-    "events_seasonal_profile",  # hour-of-week seasonal profile
-    "events_new_vs_returning",  # new-vs-returning split
-    "events_watermark_audit",  # late-arrival watermark audit
-    "events_rate_limit_audit",  # token-bucket rate-limit audit
-    "orders_open_backlog",  # open-order backlog series
-    "orders_ar_aging",  # AR aging buckets
-    "events_conformance_audit",  # event-schema conformance
-    # streaming:
-    "streaming_purchase_error_join",  # stream-stream interval join
-    "streaming_dedup_bounded",  # watermark-bounded dedup state
-    # -------- re-checks (5): internals changed in THIS optimization
-    # round; all carry prior driver-green rows
-    "approx_distinct_hll",  # exact ref now null-safe count over pairs
-    "rel_join_order_advisor",  # forced broadcast dropped (AQE picks)
-    "basket_pairs_pcy",  # r12 pair-pass re-measure target
-    "table_profile",  # r12 multi-distinct shape target
-    "streaming_windowed_peak",  # r12 micro-batch machinery target
-)
+WINDOW = 50
+ANCHORS = ("q1_pricing_summary", "fs_connector_roundtrip")
 
-# Prior windows (r1-r11): see git history for each round's slot-by-slot
-# changelog -- CORRECTNESS_r{N}.json records what each window proved.
-# (The full tuples were kept here as dead data through r9; r9 ADVICE:
-# git history IS the changelog.)
+
+def driver_window(
+    names: Iterable[str], artifacts: Mapping[int, Mapping[str, dict]]
+) -> tuple[str, ...]:
+    """The driver's WINDOW-query check window over ``names`` (in
+    registration order), given ``artifacts`` = {round: {query: row}}.
+
+    ANCHORS lead; the other slots go to the queries whose last green row
+    (``hash_match is True``) is oldest, never-green ones first (round 0),
+    ties in registration order."""
+    names = list(names)
+    missing = [a for a in ANCHORS if a not in names]
+    if missing:
+        raise ValueError(f"window anchors not registered: {missing}")
+    last_green: dict[str, int] = {}
+    for rnd, rows in artifacts.items():
+        for name, row in rows.items():
+            if row.get("hash_match") is True:
+                last_green[name] = max(last_green.get(name, 0), rnd)
+    rest = sorted(
+        (n for n in names if n not in ANCHORS), key=lambda n: last_green.get(n, 0)
+    )
+    return ANCHORS + tuple(rest[: WINDOW - len(ANCHORS)])
+
+
+def driver_artifacts(
+    root: Path = Path(__file__).resolve().parents[1],
+) -> dict[int, dict[str, dict]]:
+    """{round: rows} of every ``CORRECTNESS_r<N>.json`` the driver wrote
+    into ``root`` (the repo root, whatever the working directory)."""
+    out = {}
+    for path in root.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m is None:
+            continue
+        try:
+            rows = json.loads(path.read_text())
+        except ValueError as e:
+            raise ValueError(f"unreadable driver artifact {path}: {e}") from e
+        if not isinstance(rows, dict) or not all(
+            isinstance(r, dict) for r in rows.values()
+        ):
+            raise ValueError(f"driver artifact {path} is not a {{query: row}} object")
+        out[int(m.group(1))] = rows
+    return out
 
 
 def load_all() -> dict[str, Query]:
     """Import every operator module (each registers its queries) and return
-    the registry, PRIORITY names first (see above), the rest in
-    registration order."""
+    the registry, the driver window first (``driver_window``), the rest
+    in registration order."""
     # Imports are side-effecting by design; keep the list explicit so a
     # missing module is an error, not silent coverage loss.
     from snackfs_spark.operators import (  # noqa: F401
@@ -161,9 +131,7 @@ def load_all() -> dict[str, Query]:
     )
     from snackfs_spark.streaming import ingest  # noqa: F401
 
-    missing = [n for n in PRIORITY if n not in REGISTRY]
-    if missing:
-        raise RuntimeError(f"PRIORITY names not registered: {missing}")
-    ordered = {n: REGISTRY[n] for n in PRIORITY}
+    window = driver_window(REGISTRY, driver_artifacts())
+    ordered = {n: REGISTRY[n] for n in window}
     ordered.update((n, q) for n, q in REGISTRY.items() if n not in ordered)
     return ordered

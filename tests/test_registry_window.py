@@ -1,647 +1,150 @@
 """The driver's correctness gate checks the FIRST 50 registered queries.
-These tests pin the ROUND-12 rotated window (r11 VERDICT #8, executing
-the plan pre-staged in r10/r11): the 2 permanent anchors (q1 flagship +
-connector), ALL 43 never-driver-checked names — the 38-name backlog
-remaining after r11 plus the five round-11 build additions — and 5
-re-check slots for queries whose internals the r12 optimization round
-changed. This drains the backlog completely: cumulative driver-green
-reaches 336/336 when the window lands. No fs veteran is cadence-due
-(the r11 six carry fresh green rows; the r10 eleven come due in r13).
-The window still spans SURVEY.md §2: every declared operator family and
-§2.C class has an in-window rep or a documented evicted veteran with a
-green driver row in the trailing rounds that stays hash-checked in the
-in-repo replica (tests/test_correctness.py) every test run."""
+`registry.driver_window` computes that window from the driver's
+CORRECTNESS_r<N>.json artifacts: the anchors, then the least recently
+green-checked queries. These tests pin the rule on synthetic artifacts
+and its wiring into `load_all()` on the committed ones."""
 
 from __future__ import annotations
 
 import json
+import os
+import subprocess
+import sys
 from pathlib import Path
 
-from snackfs_spark.registry import PRIORITY, load_all
+import pytest
 
-WINDOW = 50
-
-# Queries with a driver-side green row in any round BEFORE the current
-# one — the rotation's freshness denominator. The CURRENT window's own
-# artifact (the driver writes it the moment the window runs) must be
-# excluded, else every slot looks stale the round after it passes (r7
-# VERDICT #1). Positional exclusion ("drop the highest-numbered file")
-# was wrong the round AFTER a rotation: it also dropped the previous
-# round's artifact, erasing exactly the trailing-green evidence the
-# span policy leans on. Exclude SEMANTICALLY instead: an artifact is
-# "this window's own run" iff most of its keys are the current
-# PRIORITY names — prior-round artifacts of a rotated window overlap
-# only on the few kept veterans (this round: the r10 artifact shares
-# just the 2 anchors = 4%, the r8 artifact the 6 fs veterans + anchors
-# = 16%, both safely under the 0.5 bar).
-_REPO = Path(__file__).resolve().parent.parent
-_ARTIFACTS = sorted(
-    _REPO.glob("CORRECTNESS_r*.json"),
-    key=lambda p: int("".join(c for c in p.stem if c.isdigit()) or 0),
+from snackfs_spark.registry import (
+    ANCHORS,
+    REGISTRY,
+    WINDOW,
+    driver_artifacts,
+    driver_window,
+    load_all,
 )
-DRIVER_CHECKED = set()
-for _p in _ARTIFACTS:
-    try:
-        _keys = set(json.loads(_p.read_text()).keys())
-    except ValueError:
-        continue
-    if _keys and len(_keys & set(PRIORITY)) / len(_keys) > 0.5:
-        continue  # the current window's own artifact
-    DRIVER_CHECKED.update(_keys)
 
-# Q-* → query name (SURVEY §2.B, 17 targets). NONE is cadence-due in
-# the r12 window: the six r11-green rows (fs_lsr .. fs_tail) carry
-# fresh trailing rows, the eleven r10-green rows come due in r13.
-FS_IN_WINDOW: dict[str, str] = {}
-FS_TRAILING = {
-    # green in CORRECTNESS_r11
-    "Q-LSR": "fs_lsr",
-    "Q-DUS": "fs_dus",
-    "Q-SUBOFF": "fs_suboff_prefix_sum",
-    "Q-LOCK": "fs_lock_arbitration",
-    "Q-RANGE": "fs_range_read",
-    "Q-TAIL": "fs_tail",
-    # green in CORRECTNESS_r10
-    "Q-STAT": "fs_stat",
-    "Q-LS": "fs_ls",
-    "Q-DU": "fs_du",
-    "Q-COUNT": "fs_count",
-    "Q-LEN": "fs_len_from_blocks",
-    "Q-BLOCKLOC": "fs_block_locations",
-    "Q-CONTENT": "fs_content",
-    "Q-MERGE": "fs_getmerge",
-    "Q-RENAME": "fs_rename",
-    "Q-DELETE": "fs_delete",
-    "Q-MKDIR": "fs_mkdirs",
-}
-
-# family → representative query INSIDE the r12 window.
-FAMILIES = {
-    # q1 stays as the filter+agg anchor (sf1-verified decimal lattice)
-    "filter/projection + group agg": "q1_pricing_summary",
-    # ranking/running/lag windows all exercise inside the battery
-    "window functions (battery)": "win_analytics_battery",
-}
-# family → evicted veteran with a TRAILING driver-green row,
-# still hash-checked by the in-repo replica every test run.
-FAMILIES_TRAILING = {
-    "running sum window": "fs_suboff_prefix_sum",  # r11
-    "window ranking": "fs_lock_arbitration",  # r11
-    "equi-join + agg": "q12_priority_by_returnflag",  # r10
-    "multi-join exists/not-exists": "q16_part_supplier_variety",  # r10
-    "non-equi join (band/interval)": "fs_block_locations",  # r10
-    "sort+limit / top-k": "text_chi2_keywords",  # r10
-    "function battery": "text_readability",  # r10
-    "broadcast dims": "q8_market_share",  # r9
-    "correlated scalar subquery": "rel_min_per_group_subquery",  # r9
-    "correlated threshold subquery": "q20_bulk_suppliers",  # r9
-    "as-of / point-in-time join": "events_conversion_lag",  # r9
-    "rollup/cube/groupingsets": "events_markov_transitions",  # r8
-    "unpivot / reshape": "unpivot_part_measures",  # r8
-    "disjunctive pushdown": "q19_disjunctive_filter",  # r8
-    "set operations": "setops_all_variants",  # r7
-    "skewed join salting": "rel_salted_skew_join",  # r7
-}
-
-# §2.C class → representative inside the r12 window (the 43 backlog
-# first-timers + 5 re-checks, grouped by what they exercise)
-CLASSES = {
-    # r11 build additions (REQUIRED this window, r11 VERDICT #8)
-    "eval (pass@k)": "eval_pass_at_k",
-    "train (GRPO advantage)": "train_grpo_advantage",
-    "eval (best-of-n yield)": "eval_best_of_n_curve",
-    "mixture (quality tournament)": "source_quality_tournament",
-    "embeddings (matryoshka recall)": "emb_matryoshka_recall",
-    # text pipeline
-    "text (type-token diversity)": "text_diversity",
-    "text (Arrow-UDF fingerprint)": "text_fingerprint_pandas",
-    "events (applyInPandas gaps)": "user_event_gaps_grouped",
-    "text (common n-grams)": "text_common_ngrams",
-    "text (boilerplate shingles)": "text_boilerplate",
-    "text (rarity score)": "text_rarity_score",
-    "text (bigram LM)": "text_bigram_prob",
-    "text (co-occurrence)": "text_cooccurrence_topk",
-    "BPE (corpus segmentation)": "bpe_segment_corpus",
-    "text (source vocab cosine)": "source_vocab_similarity",
-    "chunking (doc sliding)": "doc_chunk_sliding",
-    "privacy (PII scan)": "events_pii_scan",
-    "retrieval eval (shared ranks)": "eval_retrieval_ranks",
-    "text (collocation lift)": "text_collocation_lift",
-    "BPE (fertility by source)": "bpe_fertility_by_source",
-    "text (vocab growth)": "text_vocab_growth",
-    "lifecycle (novelty curve)": "corpus_novelty_curve",
-    "text (burstiness)": "text_burstiness",
-    "text (Zipf octaves)": "text_zipf_octaves",
-    "train (perceptron)": "text_quality_perceptron",
-    "eval (bootstrap CI)": "eval_bootstrap_ci",
-    "text (RAKE keywords)": "text_rake_keywords",
-    "text (stop-list induction)": "text_stop_list_induction",
-    "eval (McNemar paired)": "eval_mcnemar_paired",
-    "eval (lang confusion)": "eval_lang_confusion",
-    "text (blocklist scan)": "text_blocklist_scan",
-    "text (distinct n-grams)": "text_distinct_ngrams",
-    # windows / events / FP&A
-    "windows (battery)": "win_analytics_battery",
-    "events (debounce)": "events_debounce",
-    "events (seasonal profile)": "events_seasonal_profile",
-    "events (new vs returning)": "events_new_vs_returning",
-    "events (watermark audit)": "events_watermark_audit",
-    "events (rate-limit audit)": "events_rate_limit_audit",
-    "FP&A (open backlog)": "orders_open_backlog",
-    "FP&A (AR aging)": "orders_ar_aging",
-    "events (conformance audit)": "events_conformance_audit",
-    # streaming
-    "streaming (stream-stream join)": "streaming_purchase_error_join",
-    "streaming (bounded dedup)": "streaming_dedup_bounded",
-    # r12 re-checks (internals changed this optimization round)
-    "sketches (HLL + exact ref)": "approx_distinct_hll",
-    "planner (join-order advisor)": "rel_join_order_advisor",
-    "mining (PCY pairs)": "basket_pairs_pcy",
-    "profiling (whole table)": "table_profile",
-    "streaming (chained stateful)": "streaming_windowed_peak",
-    "connector": "fs_connector_roundtrip",
-}
-# §2.C class → trailing driver-green veteran
-CLASSES_TRAILING = {
-    # r11 window first-timers, green in CORRECTNESS_r11
-    "clustering eval (adjusted Rand)": "eval_cluster_agreement",
-    "embeddings (centroid drift)": "emb_centroid_drift",
-    "embeddings (anisotropy)": "emb_anisotropy_score",
-    "embeddings (negative sampling)": "emb_negative_sampling",
-    "dedup economics (rate curve)": "corpus_dedup_rate_curve",
-    "dedup economics (token impact)": "corpus_dedup_impact",
-    "graph (harmonic centrality)": "graph_harmonic_centrality",
-    "graph (assortativity)": "graph_degree_assortativity",
-    "graph (link prediction)": "graph_jaccard_link_prediction",
-    "fs analytics (hotspot rebalance)": "fs_hotspot_rebalance_plan",
-    "layout (range partition plan)": "layout_range_partition_plan",
-    "events (sequential pairs)": "events_sequential_pairs",
-    "events (two-phase distinct)": "distinct_users_per_type_twophase",
-    "events (timeseries correlation)": "timeseries_correlation",
-    "events (MAD outlier fence)": "events_value_outliers",
-    "events (value histogram)": "events_value_histogram",
-    "events (winsorized stats)": "events_winsorized_stats",
-    "events (TV drift)": "events_drift_tv",
-    "sketches (count-min join size)": "join_size_estimate_cm",
-    "sketches (HLL daily union)": "approx_hll_daily_union",
-    "sketches (KMV theta algebra)": "approx_kmv_theta_sketch",
-    "privacy (generalization ladder)": "privacy_generalization_ladder",
-    "FP&A (duplicate payments)": "orders_duplicate_payments",
-    "FP&A (price-volume-mix)": "lineitem_pvm_decomposition",
-    "FP&A (revenue Gini)": "orders_revenue_gini",
-    "FP&A (RFM migration)": "orders_rfm_migration",
-    "curriculum (token budget)": "curriculum_token_budget",
-    "mixture (DoReMi reweight)": "mixture_doremi_reweight",
-    "mixture (epoch schedule)": "corpus_epoch_schedule",
-    "mixture (budget apportionment)": "corpus_budget_apportionment",
-    "ordering (sharded shuffle)": "training_order_shuffle",
-    "lifecycle (snapshot diff)": "corpus_snapshot_diff",
-    "lifecycle (incremental stats)": "corpus_incremental_stats",
-    "lifecycle (funnel report)": "corpus_funnel_report",
-    "splits (SRM check)": "sample_srm_check",
-    "splits (distribution parity)": "split_distribution_check",
-    "splits (A/B power grid)": "sample_ab_power_grid",
-    "preference pairs (overlap audit)": "train_pair_overlap",
-    "BPE (pair counts)": "bpe_pair_counts",
-    "text (PII redaction)": "text_redact",
-    "text (repetition score)": "text_repetition",
-    # r10 window first-timers, green in CORRECTNESS_r10
-    "dedup (fuzzy prefix-blocked verify)": "dedup_fuzzy_prefix",
-    "dedup (cross-source overlap matrix)": "dedup_source_matrix",
-    "similarity (triplet mining)": "emb_triplet_mining",
-    "similarity (label centroids)": "embedding_label_centroids",
-    "ranking agreement (RBO)": "eval_rank_rbo",
-    "ranking agreement (Kendall tau)": "eval_rank_kendall",
-    "multimodal (image diversity)": "multimodal_image_simpson",
-    "sampling (systematic PPS)": "sample_systematic_pps",
-    "sampling (Neyman allocation)": "sample_neyman_allocation",
-    "sampling (balanced classes)": "sample_balanced_classes",
-    "mixture (temperature weights)": "mixture_temperature",
-    "splits (k-fold protocol)": "split_kfold_assignment",
-    "drift (earth-mover's)": "source_drift_emd",
-    "preference pairs (DPO prep)": "train_preference_pairs",
-    "eval (Brier/Murphy decomposition)": "eval_brier_decomposition",
-    "eval (PR-AUC)": "eval_pr_auc",
-    "eval (Cohen's kappa)": "eval_kappa_agreement",
-    "text (chi2 keyword selection)": "text_chi2_keywords",
-    "text (Yule's K richness)": "text_yule_k",
-    "text (token accounting)": "text_token_count",
-    "text (rolling-hash fingerprint)": "text_fingerprint",
-    "graph (degree spectrum)": "graph_degree_distribution",
-    "graph (clustering coefficient)": "graph_clustering_coefficient",
-    "graph (modularity)": "graph_modularity_score",
-    "privacy (contribution bounds)": "privacy_contribution_bounds",
-    "fs analytics (repair plan)": "fs_repair_plan",
-    "fs analytics (heat tiering)": "fs_heat_tiering",
-    "fs analytics (erasure layout)": "fs_erasure_layout",
-    "profiling (whole table)": "table_profile",
-    "profiling (join-key skew)": "skew_key_profile",
-    "events (EWMA smoothing)": "events_ewma_hourly",
-    "events (bot detection)": "events_bot_detection",
-    "streaming (enrichment join)": "streaming_enrichment_join",
-    "FP&A (Benford audit)": "orders_benford_audit",
-    # r7-r9 veterans
-    "dedup (signature banding)": "dedup_tf_cosine",  # r9
-    "dedup (chunk exact)": "dedup_chunk_exact",  # r9
-    "dedup (golden record)": "dedup_golden_record",  # r9
-    "dedup (entity resolution)": "dedup_entity_snm",  # r8
-    "similarity (LSH recall eval)": "ann_lsh_recall",  # r9
-    "similarity (IVF pruned)": "ann_ivf_multiprobe",  # r8
-    "retrieval (inverted index)": "text_inverted_index",  # r9
-    "retrieval eval (NDCG@k)": "eval_ndcg_at_k",  # r9
-    "multimodal (audio decode)": "multimodal_audio_resample",  # r9
-    "multimodal (image decode)": "multimodal_brightness_drift",  # r9
-    "sampling (stratified)": "stratified_sample",  # r9
-    "sampling (mixture weights)": "mixture_sample",  # r9
-    "splits (token accounting)": "split_summary_tokens",  # r9
-    "chunking / packing": "text_chunk_sliding",  # r9
-    "source formats (JSONL)": "corpus_jsonl_roundtrip",  # r9
-    "source formats (CSV)": "corpus_csv_roundtrip",  # r9
-    "source formats (ORC)": "corpus_orc_roundtrip",  # r8
-    "streaming (CDC upsert)": "streaming_cdc_upsert",  # r9
-    "streaming (tail follow)": "streaming_tail_follow",  # r9
-    "streaming (chained stateful)": "streaming_windowed_peak",  # r8
-    "cohort LTV": "orders_cohort_ltv",  # r9
-    "forecasting (seasonal-naive MASE)": "orders_seasonal_naive_mase",  # r9
-    "causal readout (Mann-Whitney)": "sample_mann_whitney_u",  # r9
-    "causal readout (two-sample KS)": "sample_ks_two_sample",  # r9
-    "mergeable sketches (HLL overlap)": "approx_overlap_hll",  # r9
-    "mergeable sketches (error bounds)": "approx_aggregates",  # r9
-    "graph (triangles)": "graph_triangle_count",  # r9
-    "graph (BFS frontier)": "graph_bfs_hops",  # r9
-    "graph (fixpoint)": "graph_pagerank_tokens",  # r8
-    "graph (communities)": "graph_label_propagation",  # r8
-    "frequent-pattern mining": "mining_association_rules",  # r9
-    "privacy (l-diversity)": "privacy_l_diversity",  # r9
-    "privacy (k-anonymity)": "privacy_k_anonymity",  # r8
-    "eval (isotonic calibration)": "eval_isotonic_calibration",  # r9
-    "eval (calibration ECE)": "eval_calibration_ece",  # r8
-    "fs analytics (SCD2 history)": "fs_scd2_history",  # r9
-    "fs analytics (text decode)": "fs_text_decode",  # r9
-    "corpus lifecycle (takedown)": "corpus_takedown_audit",  # r8
-}
-
-# Evicted veterans that must STAY registered + oracled (repo replica
-# keeps hash-checking them every test run). The r10 window's 48
-# non-anchor names all carry trailing-1 driver-green rows; r9-era and
-# earlier veterans carry older green rows.
-EVICTED_STAY_ORACLED = [
-    # r11 window, all green in CORRECTNESS_r11 (anchors excluded: they
-    # stay in the r12 window; rel_join_order_advisor is back in-window
-    # as a re-check but listed here too — it must stay oracled forever)
-    "fs_lsr",
-    "fs_dus",
-    "fs_suboff_prefix_sum",
-    "fs_lock_arbitration",
-    "fs_range_read",
-    "fs_tail",
-    "eval_cluster_agreement",
-    "emb_centroid_drift",
-    "emb_anisotropy_score",
-    "corpus_dedup_rate_curve",
-    "corpus_dedup_impact",
-    "graph_harmonic_centrality",
-    "graph_degree_assortativity",
-    "graph_jaccard_link_prediction",
-    "fs_hotspot_rebalance_plan",
-    "layout_range_partition_plan",
-    "events_sequential_pairs",
-    "distinct_users_per_type_twophase",
-    "timeseries_correlation",
-    "events_value_outliers",
-    "events_value_histogram",
-    "events_winsorized_stats",
-    "join_size_estimate_cm",
-    "events_drift_tv",
-    "rel_join_order_advisor",
-    "approx_hll_daily_union",
-    "privacy_generalization_ladder",
-    "orders_duplicate_payments",
-    "lineitem_pvm_decomposition",
-    "orders_revenue_gini",
-    "orders_rfm_migration",
-    "approx_kmv_theta_sketch",
-    "curriculum_token_budget",
-    "mixture_doremi_reweight",
-    "corpus_epoch_schedule",
-    "training_order_shuffle",
-    "corpus_snapshot_diff",
-    "corpus_incremental_stats",
-    "corpus_funnel_report",
-    "sample_srm_check",
-    "split_distribution_check",
-    "corpus_budget_apportionment",
-    "sample_ab_power_grid",
-    "train_pair_overlap",
-    "emb_negative_sampling",
-    "bpe_pair_counts",
-    "text_redact",
-    "text_repetition",
-    # r10 window, all green in CORRECTNESS_r10
-    "fs_stat",
-    "fs_ls",
-    "fs_du",
-    "fs_count",
-    "fs_len_from_blocks",
-    "fs_block_locations",
-    "fs_content",
-    "fs_getmerge",
-    "fs_rename",
-    "fs_delete",
-    "fs_mkdirs",
-    "text_chi2_keywords",
-    "eval_rank_rbo",
-    "text_yule_k",
-    "eval_rank_kendall",
-    "split_kfold_assignment",
-    "source_drift_emd",
-    "train_preference_pairs",
-    "eval_brier_decomposition",
-    "fs_repair_plan",
-    "fs_heat_tiering",
-    "fs_erasure_layout",
-    "q12_priority_by_returnflag",
-    "q16_part_supplier_variety",
-    "table_profile",
-    "skew_key_profile",
-    "graph_degree_distribution",
-    "graph_clustering_coefficient",
-    "graph_modularity_score",
-    "dedup_fuzzy_prefix",
-    "dedup_source_matrix",
-    "multimodal_image_simpson",
-    "privacy_contribution_bounds",
-    "sample_systematic_pps",
-    "sample_neyman_allocation",
-    "sample_balanced_classes",
-    "mixture_temperature",
-    "emb_triplet_mining",
-    "embedding_label_centroids",
-    "text_token_count",
-    "text_fingerprint",
-    "text_readability",
-    "eval_pr_auc",
-    "eval_kappa_agreement",
-    "events_ewma_hourly",
-    "events_bot_detection",
-    "streaming_enrichment_join",
-    "orders_benford_audit",
-    # r9 window veterans (green in CORRECTNESS_r09)
-    "approx_aggregates",
-    "fs_text_decode",
-    "fs_scd2_history",
-    "fs_compaction_plan",
-    "fs_quorum_staleness",
-    "fs_ring_scaling_plan",
-    "corpus_jsonl_roundtrip",
-    "corpus_csv_roundtrip",
-    "dedup_chunk_exact",
-    "dedup_tf_cosine",
-    "dedup_containment",
-    "dedup_golden_record",
-    "graph_triangle_count",
-    "graph_bfs_hops",
-    "basket_frequent_pairs",
-    "mining_association_rules",
-    "multimodal_brightness_drift",
-    "multimodal_audio_resample",
-    "q4_priority_exists",
-    "q8_market_share",
-    "q11_important_parts",
-    "q20_bulk_suppliers",
-    "rel_min_per_group_subquery",
-    "events_sliding_window",
-    "events_rate_anomaly",
-    "events_trend_regression",
-    "events_conversion_lag",
-    "privacy_l_diversity",
-    "stratified_sample",
-    "mixture_sample",
-    "sample_mann_whitney_u",
-    "sample_ks_two_sample",
-    "ann_lsh_recall",
-    "embedding_quantize_int8",
-    "text_vocab_topk",
-    "text_inverted_index",
-    "eval_ndcg_at_k",
-    "eval_isotonic_calibration",
-    "text_chunk_sliding",
-    "orders_rfm_segments",
-    "orders_max_drawdown",
-    "orders_cohort_ltv",
-    "orders_seasonal_naive_mase",
-    "approx_overlap_hll",
-    "streaming_cdc_upsert",
-    "streaming_tail_follow",
-    "split_summary_tokens",
-    "dq_check_battery",
-    # r8 window veterans (green in CORRECTNESS_r08) not back in-window
-    "fs_count_quota",
-    "fs_permission_audit",
-    "fs_namespace_profile",
-    "fs_replica_sets",
-    "q9_product_profit",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q19_disjunctive_filter",
-    "rel_semi_anti_joins",
-    "unpivot_part_measures",
-    "quantile_battery",
-    "win_first_order_per_customer",
-    "events_conversion_funnel",
-    "events_cohort_retention",
-    "events_attribution",
-    "events_survival_km",
-    "orders_holt_linear_forecast",
-    "events_two_proportion_test",
-    "pit_feature_join",
-    "events_markov_transitions",
-    "graph_pagerank_tokens",
-    "graph_label_propagation",
-    "dedup_simhash_pairs",
-    "dedup_entity_snm",
-    "ann_ivf_multiprobe",
-    "retrieval_mmr_topk",
-    "text_tfidf_topk",
-    "hybrid_search_topk",
-    "retrieval_boolean_query",
-    "multimodal_audio_vad",
-    "multimodal_image_tiles",
-    "split_temporal_holdout",
-    "importance_sample_dsir",
-    "sample_coreset_kcenter",
-    "pack_length_buckets",
-    "corpus_orc_roundtrip",
-    "corpus_takedown_audit",
-    "eval_calibration_ece",
-    "privacy_k_anonymity",
-    "streaming_windowed_peak",
-    "streaming_dedup_ingest",
-    "approx_distinct_hll_merged",
-    # r7 window veterans not back in the window (green in CORRECTNESS_r07)
-    "dedup_minhash_lsh",
-    "ann_bruteforce_topk",
-    "q2_min_cost_supplier",
-    "setops_all_variants",
-    "q21_straggler_suppliers",
-    "rel_salted_skew_join",
-    "sessionize_events",
-    "asof_last_error_before_purchase",
-    "events_gap_fill",
-    "events_diff_in_diff",
-    "heavy_hitters_countmin",
-    "graph_kcore_decomposition",
-    "stats_moments_battery",
-    "basket_pairs_pcy",
-    "cube_order_priorities",
-    "privacy_t_closeness",
-    "orders_pareto_abc",
-    "win_trailing_30d_revenue",
-    "eval_conformal_threshold",
-    "dedup_semantic",
-    "text_kneser_ney_bigram",
-    "text_lang_id",
-    "text_quality_score",
-    "text_bm25_topk",
-    "split_semantic_contamination",
-    "emb_pca_power_iteration",
-    "emb_kmeans_elbow",
-    "ann_pq_adc",
-    "emb_random_projection",
-    "dedup_lsh_tuning",
-    "sample_reservoir_priority",
-    "split_exact_stratified",
-    "pack_sequences",
-    "multimodal_scene_cuts",
-    "multimodal_phash_dedup",
-    "streaming_session_windows",
-    "corpus_build_train",
-    # older evicted veterans (r1-r6 green rows)
-    "q3_shipping_priority",
-    "q5_regional_revenue",
-    "q6_revenue_forecast",
-    "fs_fsck",
-    "dedup_prefix_filter",
-    "dedup_span_ngrams",
-    "layout_zorder_skipping",
-    "bpe_learn_merges",
-    "events_quantiles_binned",
-    "corpus_merge_upsert",
-    "text_perplexity_buckets",
-    "events_cusum_changepoint",
-    "setops_customer_years",
-    "rollup_pricing",
-    "approx_distinct_hll",
-    "scalar_function_battery",
-    "win_sliding_distinct_users",
-    "rel_bloom_runtime_filter",
-    "dedup_winnow_fingerprint",
-    "eval_quality_auc",
-    "dedup_semantic_scaled",
-    "dedup_entity_resolution",
-    "corpus_pareto_front",
-    "split_cluster_safe",
-    "text_profile",
-    "multimodal_audio_energy",
-    "corpus_build_v2",
-    "split_contamination_check",
-    "streaming_hourly_rollup",
+_REPO = Path(__file__).resolve().parent.parent
+GREEN = {"hash_match": True}
+# registration order: the anchors sit mid-list, as in the real registry
+NAMES = [f"q{i:02d}" for i in range(30)] + list(ANCHORS) + [
+    f"q{i:02d}" for i in range(30, 70)
 ]
-
-# The 5 round-11 build additions the r12 window is REQUIRED to carry
-# (r11 VERDICT #8).
-R11_ADDITIONS_IN_WINDOW = [
-    "eval_pass_at_k",
-    "train_grpo_advantage",
-    "eval_best_of_n_curve",
-    "source_quality_tournament",
-    "emb_matryoshka_recall",
-]
+OTHERS = [n for n in NAMES if n not in ANCHORS]
 
 
-def test_priority_fits_window():
-    assert len(PRIORITY) == WINDOW
-    assert len(set(PRIORITY)) == len(PRIORITY)
+def test_window_fits():
+    load_all()
+    window = driver_window(REGISTRY, driver_artifacts())
+    assert len(window) == WINDOW
+    assert len(set(window)) == WINDOW
+    assert window[: len(ANCHORS)] == ANCHORS
 
 
-def test_window_order_and_span():
-    reg = load_all()
-    names = list(reg)
-    window = set(names[:WINDOW])
-    # load_all puts PRIORITY first, verbatim
-    assert names[: len(PRIORITY)] == list(PRIORITY)
-    for target, q in {**FAMILIES, **CLASSES}.items():
-        assert q in window, f"{target} ({q}) fell outside the driver's window"
+def test_load_all_leads_with_driver_window():
+    names = list(load_all())
+    assert tuple(names[:WINDOW]) == driver_window(REGISTRY, driver_artifacts())
+    assert sorted(names) == sorted(REGISTRY)
 
 
-def test_r11_additions_all_in_window():
-    window = set(PRIORITY)
-    for q in R11_ADDITIONS_IN_WINDOW:
-        assert q in window, f"round-11 addition {q} missing from the r12 window"
+def test_load_all_window_independent_of_cwd():
+    """The driver may start from any directory: the artifacts are read
+    from the repo root, not the working directory."""
+    code = "from snackfs_spark.registry import load_all; print(list(load_all())[:50])"
+    env = {**os.environ, "PYTHONPATH": str(_REPO)}
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd="/tmp",
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    assert out.strip() == repr(list(load_all())[:WINDOW])
 
 
-def test_trailing_reps_are_driver_green():
-    """Families/classes without an in-window rep must be covered by an
-    evicted veteran with a PRIOR driver-green row (the replica keeps
-    hash-checking them every run)."""
-    for target, q in {**FAMILIES_TRAILING, **CLASSES_TRAILING}.items():
-        assert q in DRIVER_CHECKED, (
-            f"{target} ({q}) has neither an in-window rep nor a prior"
-            " driver-green row"
-        )
+def test_never_green_first_then_oldest_green():
+    artifacts = {
+        3: {n: GREEN for n in OTHERS[:20]},
+        5: {n: GREEN for n in OTHERS[20:60]},
+    }
+    window = driver_window(NAMES, artifacts)
+    # 10 never-green (OTHERS[60:]), then the 20 round-3 names, then the
+    # first 18 round-5 names in registration order
+    assert window[2:] == tuple(OTHERS[60:] + OTHERS[:20] + OTHERS[20:38])
 
 
-def test_fs_skeleton_cadence():
-    """Every §2.B Q-* target is either IN the r12 window (none is
-    cadence-due this round) or driver-green in the trailing rounds
-    (the r11 six + the r10 eleven, due again starting r13)."""
-    window = set(PRIORITY)
-    for target, q in FS_IN_WINDOW.items():
-        assert q in window, f"{target} ({q}) missed its cadence-due window"
-    for target, q in FS_TRAILING.items():
-        assert q in DRIVER_CHECKED, (
-            f"{target} ({q}) rotated out without a prior driver-green row"
-        )
+def test_non_green_rows_do_not_count():
+    artifacts = {
+        1: {n: GREEN for n in OTHERS},
+        2: {n: GREEN for n in OTHERS[2:]}
+        | {OTHERS[0]: {"hash_match": None}, OTHERS[1]: {"hash_match": False}},
+    }
+    # the two non-green round-2 rows keep their round-1 green: oldest
+    assert driver_window(NAMES, artifacts)[2:4] == (OTHERS[0], OTHERS[1])
+    # with no green row at all they rank as never-green, ahead of round 1
+    artifacts[1] = {}
+    assert driver_window(NAMES, artifacts)[2:4] == (OTHERS[0], OTHERS[1])
 
 
-def test_rotation_freshness():
-    """≥35/50 window slots must be first-time driver rows while the
-    never-checked backlog exceeds 50 (r7 VERDICT #3). Skipped-degrade:
-    if no prior CORRECTNESS artifacts exist (fresh clone),
-    DRIVER_CHECKED is empty and every slot counts as fresh."""
-    fresh = [n for n in PRIORITY if n not in DRIVER_CHECKED]
-    assert len(fresh) >= 35, (
-        f"only {len(fresh)}/{WINDOW} window slots are first-time driver rows"
+def test_ties_go_to_registration_order():
+    artifacts = {4: {n: GREEN for n in reversed(OTHERS)}}
+    assert driver_window(NAMES, artifacts) == ANCHORS + tuple(OTHERS[:48])
+
+
+def test_anchors_lead_even_when_freshly_checked():
+    artifacts = {9: {n: GREEN for n in ANCHORS}, 1: {n: GREEN for n in OTHERS}}
+    assert driver_window(NAMES, artifacts)[:2] == ANCHORS
+
+
+def test_missing_anchor_raises():
+    with pytest.raises(ValueError, match=ANCHORS[1]):
+        driver_window([n for n in NAMES if n != ANCHORS[1]], {})
+
+
+def test_next_artifact_rotates_the_window_out():
+    """The round after the driver checks a window green, its non-anchor
+    names go behind every query that waited longer."""
+    artifacts = {1: {n: GREEN for n in NAMES}}
+    first = driver_window(NAMES, artifacts)
+    assert first[2:] == tuple(OTHERS[:48])
+    artifacts[2] = {n: GREEN for n in first}
+    # 22 names waited since round 1; the rest of the slots re-check the
+    # round-2 names in registration order
+    assert driver_window(NAMES, artifacts)[2:] == tuple(OTHERS[48:] + OTHERS[:26])
+
+
+def test_real_artifacts_rotate_out_on_the_next_round():
+    names = list(load_all())
+    artifacts = driver_artifacts()
+    window = driver_window(names, artifacts)
+    nxt = driver_window(
+        names, {**artifacts, max(artifacts) + 1: {n: GREEN for n in window}}
     )
+    assert not set(nxt[2:]) & set(window[2:])
 
 
-def test_backlog_fully_drained_by_r12_window():
-    """r11 VERDICT #8: the r12 window carries the ENTIRE remaining
-    backlog — after it lands green, every registered query has a
-    driver-side green row (cumulative 336/336). Pinned as: no
-    registered name is both never-driver-checked AND outside the
-    window."""
-    reg = load_all()
-    backlog_after_r12 = [
-        n for n in reg if n not in DRIVER_CHECKED and n not in PRIORITY
-    ]
-    assert backlog_after_r12 == [], (
-        f"{len(backlog_after_r12)} names would stay never-driver-checked"
-        f" after the r12 window: {backlog_after_r12}"
-    )
+def test_artifact_reader(tmp_path):
+    (tmp_path / "CORRECTNESS_r07.json").write_text(json.dumps({"a": GREEN}))
+    (tmp_path / "CORRECTNESS_r07_old.json").write_text("not json")
+    (tmp_path / "CORRECTNESS_rx.json").write_text("not json")
+    assert driver_artifacts(tmp_path) == {7: {"a": GREEN}}
+
+
+@pytest.mark.parametrize("text", ['{"a": {"hash_match": tr', '["a", "b"]'])
+def test_truncated_artifact_raises_naming_the_file(tmp_path, text):
+    (tmp_path / "CORRECTNESS_r03.json").write_text(text)
+    with pytest.raises(ValueError, match="CORRECTNESS_r03.json"):
+        driver_artifacts(tmp_path)
 
 
 def test_evicted_veterans_stay_oracled():
+    """Every query the driver ever checked stays registered and
+    hash-checked by the in-repo replica after it rotates out."""
     reg = load_all()
-    veterans = (
-        EVICTED_STAY_ORACLED
-        + list(FS_TRAILING.values())
-        + list(FAMILIES_TRAILING.values())
-        + list(CLASSES_TRAILING.values())
-    )
-    for name in veterans:
-        assert name in reg, f"evicted veteran {name} fell out of the registry"
-        assert reg[name].oracle is not None, f"{name} lost its oracle"
+    for rows in driver_artifacts().values():
+        for name in rows:
+            assert name in reg, f"driver-checked {name} fell out of the registry"
+            assert reg[name].oracle is not None, f"{name} lost its oracle"
 
 
 def test_window_is_oracle_checked():

@@ -188,25 +188,6 @@ def test_grpo_zero_variance_group_emits_zero(spark, tmp_path):
     } == got
 
 
-def test_new_ops_in_r12_window():
-    """Round-11 additions registered AFTER the r11 window (not
-    displacing it) and joined the r12 window per the registry's
-    pre-staged plan — executed in r12, so they now sit INSIDE the
-    driver's first-50 (test_registry_window pins the full rotation)."""
-    from snackfs_spark.registry import PRIORITY
-
-    reg = list(load_all())
-    for name in (
-        "eval_pass_at_k",
-        "train_grpo_advantage",
-        "eval_best_of_n_curve",
-        "source_quality_tournament",
-        "emb_matryoshka_recall",
-    ):
-        assert name in reg and name in PRIORITY
-        assert reg.index(name) < 50
-
-
 def test_best_of_n_python_replay(spark):
     """Per task: E[max of random k-subset] recomputed with math.comb on
     python rationals (exact floor at centi scale) from the raw parquet;

@@ -13,8 +13,9 @@ import pytest
 from snackfs_spark import memo
 from tests.conftest import stub_session
 
-DOC = Path("/root/repo/COVERAGE.md")
-OPERATORS = Path(__file__).resolve().parent.parent / "snackfs_spark" / "operators"
+REPO = Path(__file__).resolve().parent.parent
+DOC = REPO / "COVERAGE.md"
+OPERATORS = REPO / "snackfs_spark" / "operators"
 
 
 # ------------------------------------------------------------ memo ----
@@ -119,7 +120,7 @@ def test_session_pins_ansi_mode(spark):
     semantics (overflow RAISES). session.py pins the config explicitly
     so a Spark default flip can't silently change the failure path."""
     assert spark.conf.get("spark.sql.ansi.enabled") == "true"
-    src = Path("/root/repo/snackfs_spark/session.py").read_text()
+    src = (REPO / "snackfs_spark" / "session.py").read_text()
     assert '"spark.sql.ansi.enabled", "true"' in src
 
 
@@ -176,11 +177,12 @@ def test_scale_stress_driver_mem_mapping():
     default (local[N] = driver + executors in one JVM)."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    tools = str(REPO / "tools")
+    sys.path.insert(0, tools)
     try:
         from scale_stress import driver_mem_for
     finally:
-        sys.path.remove("/root/repo/tools")
+        sys.path.remove(tools)
     assert driver_mem_for(0.1) == "8g"
     assert driver_mem_for(1) == "8g"
     assert driver_mem_for(10) == "48g"
