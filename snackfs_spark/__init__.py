@@ -17,6 +17,10 @@ Layout:
   functions/    — shared column-expression helpers
   plans/        — plan-inspection utilities (pushdown/broadcast asserts)
   streaming/    — Structured Streaming variants of the ingest/tail paths
+  pyworker.py   — the Python task-worker daemon get_spark selects
 """
 
+# This module must import no pyspark: Spark starts each Python worker
+# daemon as `python -m snackfs_spark.pyworker`, which runs this file
+# first, and pyworker has to trim sys.path before pyspark is imported.
 __version__ = "0.1.0"

@@ -62,13 +62,7 @@ def dsum_lattice(col: Column, alias: str, scale: int) -> Column:
     )
 
 
-def davg(col: Column, alias: str) -> Column:
-    """Deterministic average: exact decimal sum / count, double division."""
-    return (F.sum(col).cast("double") / F.count(col)).alias(alias)
-
-
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
 
 
 def ts_str(col: str | Column) -> Column:
@@ -80,11 +74,6 @@ def ts_str(col: str | Column) -> Column:
     SSSSSS and DuckDB's %f render the same six fractional digits.)"""
     c = F.col(col) if isinstance(col, str) else col
     return F.date_format(c, TS_FMT_SPARK)
-
-
-def ts_str_sql(expr: str) -> str:
-    """DuckDB twin of ts_str for oracle strings."""
-    return f"strftime({expr}, '{TS_FMT_DUCK}')"
 
 
 def md5_fp(col: Column) -> Column:

@@ -214,34 +214,6 @@ def fs_ls_limited(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def text_payloads_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(path, payload) with odd doc_ids gzip-compressed (mtime=0 so the
-    container bytes are deterministic) — the storage side of the `text`
-    verb fixture. The compression runs in the same Arrow pipeline the
-    decode does; at scale these are bytes read from the store."""
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    from snackfs_spark.sources.fsmodel import _doc_path
-    from snackfs_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        _doc_path().alias("path"), "doc_id", "text"
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    from snackfs_spark.sources.tables import fan_out
-
-    return fan_out(docs, spark).mapInPandas(_compress_text, schema=schema)
-
-
 def _compress_text(batches):
     """(doc_id, text, path) batches -> (path, payload) batches: odd
     doc_ids gzip (mtime=0; level 1 — the decode contract pins the

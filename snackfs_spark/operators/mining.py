@@ -336,8 +336,8 @@ def basket_pairs_pcy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape history: r6 measured "regenerate beats checkpointing the pair
     relation" — that predates the memoized basket relation. r12
-    re-measured per VERDICT #6 (tools/ab_r12.py, 2 interleaved rounds x
-    best-of-4 at sf0.1): regenerate 2.31/2.22 s vs checkpointed pairs
+    re-measured per VERDICT #6 (OPTIMIZATION_r12.md work item 6, 2
+    interleaved rounds x best-of-4 at sf0.1): regenerate 2.31/2.22 s vs checkpointed pairs
     1.75/1.72 s — the checkpoint now wins ~25% because the basket join
     feeding pair generation no longer amortizes a lineitem scan. The
     pair relation is the engine's largest intermediate, so the

@@ -1709,7 +1709,8 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape history (r12 optimization, VERDICT #7): the previous form put
     all 8 COUNT(DISTINCT)s in the one aggregate, which Spark plans via
     Expand — 9 output rows per input row through the partial aggregate.
-    A/B at sf0.1 (tools/ab_r12.py, 2 interleaved rounds x best-of-4):
+    A/B at sf0.1 (OPTIMIZATION_r12.md work item 7, 2 interleaved
+    rounds x best-of-4):
     Expand 2.03/2.27 s vs per-column two-phase 1.70/1.72 s (~25%
     faster; earlier same-day round: 1.50/1.63 vs 1.07/1.21 with the
     fact table checkpointed — rejected, holding an 8-column fact scan

@@ -17,10 +17,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def physical_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def assert_pushed_filter(df: DataFrame, fragment: str) -> None:
     """The parquet scan must carry a pushed filter mentioning `fragment`."""
     plan = formatted_plan(df)
@@ -43,20 +39,3 @@ def assert_no_cartesian(df: DataFrame) -> None:
     plan = formatted_plan(df)
     if "CartesianProduct" in plan:
         raise AssertionError(f"unexpected cartesian product:\n{plan}")
-
-
-def assert_reads_only_columns(df: DataFrame, table_fragment: str, allowed: set[str]) -> None:
-    """Column pruning: the scan of `table_fragment` must read no columns
-    outside `allowed` (checked via ReadSchema in the formatted plan)."""
-    plan = formatted_plan(df)
-    for line in plan.splitlines():
-        if "ReadSchema" in line and table_fragment in plan:
-            # ReadSchema: struct<a:int,b:string>
-            schema = line.split("struct<", 1)[-1].rstrip(">")
-            cols = {c.split(":")[0] for c in schema.split(",") if c}
-            extra = cols - allowed
-            if table_fragment in line or len(plan.split("ReadSchema")) == 2:
-                if extra:
-                    raise AssertionError(
-                        f"scan reads {sorted(extra)} beyond {sorted(allowed)}:\n{line}"
-                    )

@@ -155,8 +155,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the SQL entry points."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
