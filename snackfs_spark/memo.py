@@ -3,10 +3,12 @@
 Several operator families build one expensive relation that many
 queries read: the MinHash candidate graph and the prefix-filter truth
 set in dedup.py, the BM25 rankings in textstats.py, the basket relation
-in mining.py, and so on. Each such builder is a function
-``(spark, sf_dir) -> value`` decorated with ``@shared``; the decorator
-builds the value once per Spark application and fixture directory and
-hands the same object to every later caller.
+in mining.py, the fs-model views (fsmodel.files_df, content_df,
+locks_df, ring_df, blocks_df), the bucketed tables (bucketed.py; the
+value is a table name carrying the fixture key), and so on. Each such
+builder is a function ``(spark, sf_dir) -> value`` decorated with
+``@shared``; the decorator builds the value once per Spark application
+and fixture directory and hands the same object to every later caller.
 
 One decision lives here for every relation:
 
@@ -36,7 +38,8 @@ One decision lives here for every relation:
 
 How a value is materialized stays with each builder: bounded relations
 call ``localCheckpoint`` directly, corpus-proportional ones go through
-``materialize_shared``.
+``materialize_shared``, the fs-model views call ``.cache()``. On-disk
+caches that outlive the session are workdir.py's.
 """
 
 from __future__ import annotations

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from snackfs_spark import workdir
 from snackfs_spark.catalog import SnackCatalog
 from snackfs_spark.registry import register
 from snackfs_spark.sources.fsmodel import content_df, fs_sql
@@ -344,26 +345,30 @@ def fs_text_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("path", "codec", "text_bytes", "text_md5")
 
 
-def jsonl_shards_for(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per dataset) the corpus as gzip-compressed
-    JSONL shards under var/ — the standard training-data interchange
-    layout (one JSON object per line, N shards, gzip per shard).
-    Subsequent calls reuse the shards."""
-    import os
+def _corpus_shards(spark: SparkSession, sf_dir: str, fmt: str, shards: int, **options) -> str:
+    """Materialize (once per fixture and layout) the documents table as
+    ``shards`` files of format ``fmt`` in the work dir (workdir.py);
+    later calls reuse them."""
+    from snackfs_spark.sources.tables import load_table
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    out = f"/root/repo/var/jsonl_{tag}"
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        from snackfs_spark.sources.tables import load_table
-
+    def write(out: str) -> None:
         (
             load_table(spark, sf_dir, "documents")
-            .repartition(8)
+            .repartition(shards)
             .write.mode("overwrite")
-            .option("compression", "gzip")
-            .json(out)
+            .options(**options)
+            .format(fmt)
+            .save(out)
         )
-    return out
+
+    return workdir.build_once(workdir.cache_dir(fmt, sf_dir, shards, options), write)
+
+
+def jsonl_shards_for(spark: SparkSession, sf_dir: str) -> str:
+    """The corpus as gzip-compressed JSONL shards — the standard
+    training-data interchange layout (one JSON object per line, N
+    shards, gzip per shard)."""
+    return _corpus_shards(spark, sf_dir, "json", 8, compression="gzip")
 
 
 @register(
@@ -392,29 +397,12 @@ def corpus_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def csv_shards_for(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per dataset) the corpus as UNCOMPRESSED,
-    space-delimited CSV shards under var/. Space as the delimiter is
-    deliberate: every text cell contains spaces, so the writer must
-    quote every one and the reader must unquote — the roundtrip
-    exercises the quote/escape path on 100% of rows instead of the 0%
-    a comma would touch on this corpus."""
-    import os
-
-    tag = sf_dir.strip("/").replace("/", "_")
-    out = f"/root/repo/var/csv_{tag}"
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        from snackfs_spark.sources.tables import load_table
-
-        (
-            load_table(spark, sf_dir, "documents")
-            .repartition(4)
-            .write.mode("overwrite")
-            .option("header", "true")
-            .option("sep", " ")
-            .option("quoteAll", "true")
-            .csv(out)
-        )
-    return out
+    """The corpus as UNCOMPRESSED, space-delimited CSV shards. Space as
+    the delimiter is deliberate: every text cell contains spaces, so the
+    writer must quote every one and the reader must unquote — the
+    roundtrip exercises the quote/escape path on 100% of rows instead of
+    the 0% a comma would touch on this corpus."""
+    return _corpus_shards(spark, sf_dir, "csv", 4, header="true", sep=" ", quoteAll="true")
 
 
 @register(
@@ -444,27 +432,12 @@ def corpus_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def orc_shards_for(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per dataset) the corpus as zlib ORC shards
-    under var/ — the third interchange container next to gzip-JSONL and
-    quoted CSV, and the only one that is BOTH compressed and splittable
-    (ORC stripes carry their own index, so read parallelism survives
-    compression — the property neither gzip JSONL nor single-shard CSV
-    has)."""
-    import os
-
-    tag = sf_dir.strip("/").replace("/", "_")
-    out = f"/root/repo/var/orc_{tag}"
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        from snackfs_spark.sources.tables import load_table
-
-        (
-            load_table(spark, sf_dir, "documents")
-            .repartition(4)
-            .write.mode("overwrite")
-            .option("compression", "zlib")
-            .orc(out)
-        )
-    return out
+    """The corpus as zlib ORC shards — the third interchange container
+    next to gzip-JSONL and quoted CSV, and the only one that is BOTH
+    compressed and splittable (ORC stripes carry their own index, so
+    read parallelism survives compression — the property neither gzip
+    JSONL nor single-shard CSV has)."""
+    return _corpus_shards(spark, sf_dir, "orc", 4, compression="zlib")
 
 
 @register(

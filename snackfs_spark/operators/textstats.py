@@ -4115,7 +4115,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a corpus is not English — the engine derives its own glue instead of
 # trusting a hand list.
 STOP_DF_MIN_PERMILLE = 500  # in at least half the documents
-STOP_VMR_MAX = 2            # var/mean <= 2: near-uniform arrival
+STOP_VMR_MAX = 2            # variance/mean <= 2: near-uniform arrival
 
 
 @register(

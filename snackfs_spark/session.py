@@ -20,6 +20,8 @@ from pathlib import Path
 from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
+from snackfs_spark import workdir
+
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 _REPO = Path(__file__).resolve().parents[1]
@@ -53,7 +55,7 @@ def get_spark(app_name: str = "snackfs_spark", cpus: int | None = None) -> Spark
         .set("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .set("spark.ui.enabled", "false")
         .set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .set("spark.sql.warehouse.dir", str(_REPO / "var" / "warehouse"))
+        .set("spark.sql.warehouse.dir", workdir.kind_root("warehouse"))
         # custom Python data source (snackstore) declares pushFilters
         .set("spark.sql.python.filterPushdown.enabled", "true")
         .set("spark.python.daemon.module", "snackfs_spark.pyworker")

@@ -17,68 +17,55 @@ expression of it.
 
 from __future__ import annotations
 
+import re
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from snackfs_spark import workdir
+from snackfs_spark.memo import shared
 from snackfs_spark.sources.tables import load_table
+from snackfs_spark.sources.writer import save_bucketed
 
 DB = "snackfs_buckets"
 N_BUCKETS = 8
 
-# Fixture guard (r9 ADVICE): the catalog-existence check alone is not
-# enough in a session that touches MORE THAN ONE sf_dir (benches,
-# multi-fixture tests) — a second build call with a different fixture
-# would return early and silently serve the FIRST fixture's data.
-# Record what each bucketed table was built from, keyed by the Spark
-# application id (a new session starts a new in-memory catalog), and
-# rebuild on any mismatch.
-_BUILT: dict[tuple[str, str], tuple[str, int]] = {}
 
-
-def _is_current(
-    spark: SparkSession, table: str, sf_dir: str, buckets: int, have: set[str]
-) -> bool:
-    key = (spark.sparkContext.applicationId, table)
-    if table in have and _BUILT.get(key) == (sf_dir, buckets):
-        return True
-    _BUILT[key] = (sf_dir, buckets)
-    return False
-
-
-def build_bucketed_facts(spark: SparkSession, sf_dir: str, buckets: int = N_BUCKETS) -> None:
-    """One-time ingest: write orders and lineitem bucketed + sorted by the
-    order key. Idempotent per (session, sf_dir, buckets) — see _BUILT;
-    a stale on-disk location from a previous session (the in-memory
-    catalog does not persist table metadata) is cleared first."""
-    import shutil  # noqa: PLC0415
-
+def _save(spark: SparkSession, sf_dir: str, df: DataFrame, table: str, key: str) -> str:
+    """Write ``df`` as a table bucketed and sorted by ``key``, named for
+    the fixture (workdir.fixture_key): with one fixed name, a session
+    that builds A, then B, then A again would find A's memo entry but B's
+    rows in the catalog. Returns the qualified name."""
+    tag = re.sub(r"\W", "_", workdir.fixture_key(sf_dir, N_BUCKETS)).lower()
+    table = f"{table}_{tag}"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {DB}")
-    have = {t.name for t in spark.catalog.listTables(DB)}
+    # The in-memory catalog does not persist table metadata, so a previous
+    # session's location is stale, and saveAsTable refuses to write into it.
     warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for table, src, key in (
-        ("orders_b", "orders", "o_orderkey"),
-        ("lineitem_b", "lineitem", "l_orderkey"),
-    ):
-        if _is_current(spark, table, sf_dir, buckets, have):
-            continue
-        shutil.rmtree(f"{warehouse}/{DB}.db/{table}", ignore_errors=True)
-        (
-            load_table(spark, sf_dir, src)
-            .write.bucketBy(buckets, key)
-            .sortBy(key)
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(f"{DB}.{table}")
-        )
+    shutil.rmtree(f"{warehouse}/{DB}.db/{table}", ignore_errors=True)
+    save_bucketed(df, f"{DB}.{table}", [key], N_BUCKETS)
+    return f"{DB}.{table}"
 
 
-def colocated_join(spark: SparkSession) -> DataFrame:
+@shared
+def build_bucketed_facts(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """One-time ingest: write orders and lineitem bucketed + sorted by the
+    order key, once per (session, fixture). Returns their table names."""
+    return (
+        _save(spark, sf_dir, load_table(spark, sf_dir, "orders"), "orders_b", "o_orderkey"),
+        _save(spark, sf_dir, load_table(spark, sf_dir, "lineitem"), "lineitem_b", "l_orderkey"),
+    )
+
+
+def colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The co-located fact-fact join: order-priority revenue over
     lineitem ⋈ orders. With both sides bucketed by the key, the join
     itself needs no exchange — the only shuffle left is the final
     8-group aggregate."""
-    li = spark.table(f"{DB}.lineitem_b")
-    o = spark.table(f"{DB}.orders_b")
+    orders, lineitem = build_bucketed_facts(spark, sf_dir)
+    li = spark.table(lineitem)
+    o = spark.table(orders)
     rev = (
         F.col("l_extendedprice").cast("decimal(18,2)")
         * (F.lit(1).cast("decimal(18,2)") - F.col("l_discount").cast("decimal(18,2)"))
@@ -90,36 +77,21 @@ def colocated_join(spark: SparkSession) -> DataFrame:
     )
 
 
-def build_bucketed_baskets(spark: SparkSession, sf_dir: str, buckets: int = N_BUCKETS) -> None:
+@shared
+def build_bucketed_baskets(spark: SparkSession, sf_dir: str) -> str:
     """One-time ingest for the basket-mining family (r8 VERDICT #5):
     the deduplicated (l_orderkey, l_partkey) basket relation, bucketed
     AND sorted by the basket key. The A-priori pair generation is a
     basket-key SELF-join — with the relation bucketed on that key the
     join consumes two bucketed scans with ZERO exchange and (sorted
     buckets) zero sort, leaving the pair-count groupBy as the only
-    shuffle. The distinct is paid once at ingest instead of once per
-    mining query."""
-    import shutil  # noqa: PLC0415
-
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {DB}")
-    have = {t.name for t in spark.catalog.listTables(DB)}
-    if _is_current(spark, "baskets_b", sf_dir, buckets, have):
-        return
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    shutil.rmtree(f"{warehouse}/{DB}.db/baskets_b", ignore_errors=True)
-    (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-        .write.bucketBy(buckets, "l_orderkey")
-        .sortBy("l_orderkey")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(f"{DB}.baskets_b")
-    )
+    shuffle. The distinct is paid once per (session, fixture) instead of
+    once per mining query. Returns the table name."""
+    baskets = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    return _save(spark, sf_dir, baskets, "baskets_b", "l_orderkey")
 
 
-def association_rules_bucketed(spark: SparkSession) -> DataFrame:
+def association_rules_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """mining_association_rules re-expressed over the bucketed basket
     table — identical semantics and output schema (the equality test
     pins it), but the basket self-join reads co-located buckets: no
@@ -128,7 +100,7 @@ def association_rules_bucketed(spark: SparkSession) -> DataFrame:
     fleet; the self-join shuffle dominates it)."""
     from snackfs_spark.operators.mining import BASKET_MINSUP, RULE_MIN_CONF_PPM
 
-    li = spark.table(f"{DB}.baskets_b")
+    li = spark.table(build_bucketed_baskets(spark, sf_dir))
     n = li.agg(F.count_distinct("l_orderkey").cast("long").alias("n_baskets"))
     item = li.groupBy("l_partkey").agg(
         F.count(F.lit(1)).cast("long").alias("support")

@@ -25,7 +25,10 @@ deterministically from the driver's tables:
 
 Each relation exists twice, by construction identical: a Spark DataFrame
 builder and a DuckDB CTE string. Queries compose the Spark side; oracles
-prepend the CTE.
+prepend the CTE. Many queries per session read the same view, so each
+Spark side is a @shared relation (memo.py) materialized with
+``.cache()``: the chunk/union expansion is computed once per session and
+fixture.
 """
 
 from __future__ import annotations
@@ -33,20 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from snackfs_spark.memo import shared
 from snackfs_spark.sources.tables import fan_out, load_table
-
-# Derived views are requested by many queries per session; memoize + cache
-# so the chunk/union expansion materializes once. Keyed per application so
-# a driver-supplied session gets its own entries.
-_df_cache: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _cached(name: str, spark: SparkSession, sf_dir: str, builder) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if key not in _df_cache:
-        _df_cache[key] = builder().cache()
-    return _df_cache[key]
-
 
 SUB_CHARS = 64          # sub-block payload size (reference: 8 MB, scaled)
 SUBS_PER_BLOCK = 4      # sub-blocks per block (reference: 128 MB / 8 MB = 16)
@@ -94,7 +85,8 @@ def _doc_path() -> F.Column:
     )
 
 
-def _build_files_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+@shared
+def files_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The `files` metadata relation (INode rows). At scale this is a real
     table partitioned by a path prefix; here it derives from `documents`."""
     docs = load_table(spark, sf_dir, "documents")
@@ -155,7 +147,7 @@ def _build_files_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over `files` would pay a task for each (cached plans keep their
     # partitioning: spark.sql.optimizer.canChangeCachedPlanOutputPartitioning).
     dirs = dir_rows.unionAll(root_rows).unionAll(slash_rows).coalesce(1)
-    return file_rows.unionAll(dirs)
+    return file_rows.unionAll(dirs).cache()
 
 
 # -------------------------------------------------------------- content ----
@@ -176,7 +168,8 @@ CONTENT_CTE = f"""content AS (
 )"""
 
 
-def _build_content_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+@shared
+def content_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The chunked `content` relation: one row per sub-block, exactly the
     reference's sblock layout (one column per sub-block,
     ThriftStore.scala:352-365) re-expressed as rows.
@@ -219,6 +212,7 @@ def _build_content_df(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"substring(text, cast(i * {SUB_CHARS} + 1 as int), {SUB_CHARS})"
             ).alias("payload"),
         )
+        .cache()
     )
 
 
@@ -233,7 +227,8 @@ LOCKS_CTE = """locks AS (
 )"""
 
 
-def _build_locks_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+@shared
+def locks_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lock-attempt rows: each event is an attempt on one of 50 lock paths.
     Mirrors the createlock CF's (timeUUID -> processId) columns."""
     ev = load_table(spark, sf_dir, "events")
@@ -242,7 +237,7 @@ def _build_locks_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts"),
         F.concat(F.lit("p"), F.col("event_id").cast("string")).alias("holder"),
         F.col("event_id"),
-    )
+    ).cache()
 
 
 # ----------------------------------------------------------- ring/blocks ----
@@ -274,7 +269,8 @@ BLOCKS_CTE = f"""blocks AS (
 )"""
 
 
-def _build_ring_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+@shared
+def ring_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token ring: 25 (tok_start, tok_end] ranges, node 24 wrapping to 0 —
     same shape as Cassandra's describe_ring output."""
     nation = load_table(spark, sf_dir, "nation")
@@ -284,10 +280,11 @@ def _build_ring_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("n_nationkey") == RING_NODES - 1, F.lit(0).cast("long"))
         .otherwise((F.col("n_nationkey").cast("long") + 1) * RING_STEP)
         .alias("tok_end"),
-    )
+    ).cache()
 
 
-def _build_blocks_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+@shared
+def blocks_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per 256-char block of each file, with its ring token."""
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
@@ -307,7 +304,7 @@ def _build_blocks_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         "path",
         F.col("block_idx").cast("int").alias("block_idx"),
         F.expr(_TOKEN_SQL).alias("token"),
-    )
+    ).cache()
 
 
 # --------------------------------------------------------------- helpers ----
@@ -325,24 +322,3 @@ def fs_sql(body: str, *views: str) -> str:
     """Prepend the requested derived-view CTEs to an oracle SQL body."""
     parts = [_CTES[v] for v in views]
     return "WITH " + ",\n".join(parts) + "\n" + body
-
-# Cached public accessors ----------------------------------------------------
-
-def files_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cached("files", spark, sf_dir, lambda: _build_files_df(spark, sf_dir))
-
-
-def content_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cached("content", spark, sf_dir, lambda: _build_content_df(spark, sf_dir))
-
-
-def locks_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cached("locks", spark, sf_dir, lambda: _build_locks_df(spark, sf_dir))
-
-
-def ring_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cached("ring", spark, sf_dir, lambda: _build_ring_df(spark, sf_dir))
-
-
-def blocks_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cached("blocks", spark, sf_dir, lambda: _build_blocks_df(spark, sf_dir))

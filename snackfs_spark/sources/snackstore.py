@@ -97,6 +97,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from snackfs_spark import workdir
+
 DEFAULT_BUCKETS = 8
 LISTING_CAP = 100_000   # reference's hard listing cap (ThriftStore.scala:509)
 TOKEN_SPACE = 4294967296  # 2^32 ring, same space as sources/fsmodel.py
@@ -665,35 +667,30 @@ def register(spark) -> None:
 
 
 def store_for(spark, sf_dir: str) -> str:
-    """Materialize (once per dataset) a snackstore holding the documents
-    content model, under var/. Subsequent calls reuse the store — the
-    connector then serves reads exactly like the Cassandra sblock CF.
+    """Materialize (once per fixture and layout) a snackstore holding the
+    documents content model in the work dir (workdir.py). Later calls
+    reuse the store — the connector then serves reads exactly like the
+    Cassandra sblock CF. A store without its completion marker (a failed
+    or interrupted build) is rewritten with mode("overwrite").
 
-    A store counts as built only once its `_SUCCESS` marker exists,
-    written after the write job returned; a store without one (a failed
-    or interrupted build, or one from before the marker) is rebuilt with
-    mode("overwrite")."""
+    The ring's hosts are not in the key: they derive from the fixture's
+    nation table, which the key covers, and collecting them costs a
+    Spark job (~200 ms) that a reused store would pay on every call."""
     from snackfs_spark.sources import fsmodel  # noqa: PLC0415
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    root = f"/root/repo/var/snackstore_{tag}"
     register(spark)
-    done = os.path.join(root, "_SUCCESS")
-    if not os.path.exists(done):
-        chunks = fsmodel.content_df(spark, sf_dir).select(
-            "path", "sub_offset", "length", "payload"
-        )
-        hosts = [
-            r["host"]
-            for r in fsmodel.ring_df(spark, sf_dir).orderBy("tok_start").collect()
-        ]
+
+    def write(root: str) -> None:
+        ring = fsmodel.ring_df(spark, sf_dir).orderBy("tok_start").collect()
         (
-            chunks.write.format("snackstore")
+            fsmodel.content_df(spark, sf_dir)
+            .select("path", "sub_offset", "length", "payload")
+            .write.format("snackstore")
             .option("store_dir", root)
             .option("buckets", DEFAULT_BUCKETS)
-            .option("hosts", ",".join(hosts))
+            .option("hosts", ",".join(r["host"] for r in ring))
             .mode("overwrite")
             .save()
         )
-        open(done, "w").close()
-    return root
+
+    return workdir.build_once(workdir.cache_dir("snackstore", sf_dir, DEFAULT_BUCKETS), write)

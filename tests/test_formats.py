@@ -4,16 +4,11 @@ a table, and columnar formats keep predicate pushdown."""
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 import pytest
 from pyspark.sql import functions as F
 
 from snackfs_spark.sources.tables import load_table
 from tests.conftest import SF_ORACLE
-
-VAR = Path("/root/repo/var/test_formats")
 
 
 def _q6_like(df):
@@ -38,8 +33,8 @@ def _q6_like(df):
 
 
 @pytest.fixture(scope="module")
-def format_copies(spark):
-    shutil.rmtree(VAR, ignore_errors=True)
+def format_copies(spark, tmp_path_factory):
+    var = tmp_path_factory.mktemp("test_formats")
     li = load_table(spark, SF_ORACLE, "lineitem").select(
         "l_orderkey", "l_shipdate", "l_discount", "l_extendedprice"
     )
@@ -47,14 +42,13 @@ def format_copies(spark):
     li = li.withColumn("l_shipdate", F.date_format("l_shipdate", "yyyy-MM-dd"))
     paths = {}
     for fmt in ("parquet", "orc", "csv", "json"):
-        out = str(VAR / fmt)
+        out = str(var / fmt)
         w = li.write.mode("overwrite")
         if fmt == "csv":
             w = w.option("header", "true")
         w.format(fmt).save(out)
         paths[fmt] = out
-    yield li, paths
-    shutil.rmtree(VAR, ignore_errors=True)
+    return li, paths
 
 
 def test_same_result_across_formats(spark, format_copies):

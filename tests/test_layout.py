@@ -4,9 +4,6 @@ bucketed tables — the two storage layouts the 100 TB design assumes."""
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,25 +12,20 @@ from snackfs_spark.sources.fsmodel import files_df
 from snackfs_spark.sources.tables import load_table
 from tests.conftest import SF_ORACLE
 
-VAR = Path("/root/repo/var/test_layout")
+
+@pytest.fixture(scope="module")
+def var(tmp_path_factory):
+    return tmp_path_factory.mktemp("test_layout")
 
 
-@pytest.fixture(scope="module", autouse=True)
-def clean_var():
-    shutil.rmtree(VAR, ignore_errors=True)
-    VAR.mkdir(parents=True, exist_ok=True)
-    yield
-    shutil.rmtree(VAR, ignore_errors=True)
-
-
-def test_partition_pruning_on_parent_path(spark):
+def test_partition_pruning_on_parent_path(spark, var):
     """files partitioned by parent dir: a listing touches ONE partition
     directory (PartitionFilters in the scan), the reference's secondary
     index (ThriftStore.scala:487) realized as layout."""
     f = files_df(spark, SF_ORACLE).withColumn(
         "pdir", F.coalesce(F.col("parent_path"), F.lit("_root_"))
     )
-    out = str(VAR / "files_part")
+    out = str(var / "files_part")
     f.write.mode("overwrite").partitionBy("pdir").parquet(out)
     back = spark.read.parquet(out).filter(F.col("pdir") == "/data/src3")
     plan = formatted_plan(back)
@@ -281,26 +273,18 @@ def test_zorder_layout_improves_two_column_skipping(spark, tmp_path):
 
 
 def test_bucketed_baskets_rebuild_on_fixture_change(spark):
-    """r9 ADVICE: a second build call in the SAME session with a
-    DIFFERENT sf_dir must rebuild the bucketed basket table, not
-    silently serve the first fixture's rows (the multi-fixture-session
-    hazard: benches that sweep scale factors)."""
+    """r9 ADVICE: a session that builds the bucketed baskets for A, then
+    B, then A again must read each fixture's own rows (the multi-fixture
+    session hazard: benches that sweep scale factors). The memo returns
+    A's entry on the third call, so A's table must still hold A's rows."""
     from snackfs_spark.sources import bucketed
     from tests.conftest import SF_SMALL
 
-    bucketed.build_bucketed_baskets(spark, SF_SMALL)
-    n_small = spark.table(f"{bucketed.DB}.baskets_b").count()
-    bucketed.build_bucketed_baskets(spark, SF_ORACLE)
-    n_oracle = spark.table(f"{bucketed.DB}.baskets_b").count()
-    assert n_oracle != n_small, "table silently served the stale fixture"
-    # idempotent for a REPEATED (sf_dir, buckets): no rebuild, same rows
-    bucketed.build_bucketed_baskets(spark, SF_ORACLE)
-    assert spark.table(f"{bucketed.DB}.baskets_b").count() == n_oracle
-    # restore the oracle fixture for any later module in the session
-    expected = (
-        load_table(spark, SF_ORACLE, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-        .count()
-    )
-    assert n_oracle == expected
+    def expected(sf_dir):
+        li = load_table(spark, sf_dir, "lineitem")
+        return li.select("l_orderkey", "l_partkey").distinct().count()
+
+    for sf_dir in (SF_SMALL, SF_ORACLE, SF_SMALL):
+        table = bucketed.build_bucketed_baskets(spark, sf_dir)
+        assert spark.table(table).count() == expected(sf_dir), (sf_dir, table)
+    assert expected(SF_SMALL) != expected(SF_ORACLE)

@@ -145,7 +145,7 @@ def test_bucketed_join_eliminates_shuffle(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try:
-        df = bucketed.colocated_join(spark)
+        df = bucketed.colocated_join(spark, SF_ORACLE)
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
     finally:

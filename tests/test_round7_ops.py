@@ -245,8 +245,9 @@ def test_orc_roundtrip_byte_exact(spark):
     assert len(got) == len(docs)
     for t in docs.itertuples():
         assert got[t.doc_id] == (t.text, t.lang, t.source, t.n_chars)
-    tag = SF_ORACLE.strip("/").replace("/", "_")
-    files = [f for f in os.listdir(f"/root/repo/var/orc_{tag}") if f.endswith(".orc")]
+    from snackfs_spark.operators.content import orc_shards_for
+
+    files = [f for f in os.listdir(orc_shards_for(spark, SF_ORACLE)) if f.endswith(".orc")]
     assert len(files) >= 2
 
 

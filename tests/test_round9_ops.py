@@ -16,6 +16,7 @@ from tests.conftest import stub_session
 REPO = Path(__file__).resolve().parent.parent
 DOC = REPO / "COVERAGE.md"
 OPERATORS = REPO / "snackfs_spark" / "operators"
+SOURCES = REPO / "snackfs_spark" / "sources"
 
 
 # ------------------------------------------------------------ memo ----
@@ -79,8 +80,16 @@ def test_operator_memos_are_session_memos():
     under module.qualname and its module attribute must be the @shared
     wrapper, not the bare builder."""
     from snackfs_spark.operators import dedup, textstats
+    from snackfs_spark.sources import bucketed, fsmodel
 
     for fn in (
+        fsmodel.files_df,
+        fsmodel.content_df,
+        fsmodel.locks_df,
+        fsmodel.ring_df,
+        fsmodel.blocks_df,
+        bucketed.build_bucketed_facts,
+        bucketed.build_bucketed_baskets,
         dedup.candidate_edges_df,
         dedup.dedup_prefix_filter,
         dedup.cluster_labels_df,
@@ -93,16 +102,32 @@ def test_operator_memos_are_session_memos():
         assert hasattr(fn, "__wrapped__"), f"{name} is not @shared"
 
 
+def test_fs_views_rebuild_after_clear(spark):
+    """The fs-model views are @shared relations: one value per (session,
+    fixture), and a cleared relation builds again on the next call."""
+    from snackfs_spark.sources import fsmodel
+    from tests.conftest import SF_SMALL
+
+    rel = memo.relation("snackfs_spark.sources.fsmodel.files_df")
+    first = fsmodel.files_df(spark, SF_SMALL)
+    assert fsmodel.files_df(spark, SF_SMALL) is first
+    builds = rel.builds
+    rel.clear()
+    again = fsmodel.files_df(spark, SF_SMALL)
+    assert rel.builds == builds + 1 and again is not first
+    assert again.count() == first.count() > 0
+
+
 def test_operators_define_no_session_keyed_cache():
     """Shared relations are memoized only through memo.shared, which
     owns the (applicationId, sf_dir) key, the LRU bound and the lock. An
-    operator module that reads applicationId is hand-rolling a session
-    cache again — the unbounded-growth + first-population-race defects
-    (r8 ADVICE) the decorator exists to prevent."""
+    operator or source module that reads applicationId is hand-rolling a
+    session cache again — the unbounded-growth + first-population-race
+    defects (r8 ADVICE) the decorator exists to prevent."""
     import ast
 
-    modules = sorted(OPERATORS.glob("*.py"))
-    assert len(modules) > 10, OPERATORS
+    modules = sorted(OPERATORS.glob("*.py")) + sorted(SOURCES.glob("*.py"))
+    assert len(modules) > 15, (OPERATORS, SOURCES)
     offenders = [
         f"{path.name}:{node.lineno}"
         for path in modules
@@ -202,7 +227,7 @@ def test_bucketed_basket_join_eliminates_shuffle(spark):
     from snackfs_spark.sources import bucketed
 
     bucketed.build_bucketed_baskets(spark, SF_ORACLE)
-    df = bucketed.association_rules_bucketed(spark)
+    df = bucketed.association_rules_bucketed(spark, SF_ORACLE)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Bucketed: true" in plan, plan
@@ -225,7 +250,7 @@ def test_bucketed_basket_rules_match_shuffled(spark):
 
     bucketed.build_bucketed_baskets(spark, SF_ORACLE)
     a = load_all()["mining_association_rules"].fn(spark, SF_ORACLE)
-    b = bucketed.association_rules_bucketed(spark)
+    b = bucketed.association_rules_bucketed(spark, SF_ORACLE)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
 

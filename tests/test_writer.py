@@ -4,23 +4,15 @@ golden byte-equality strategy (FileSystemStreamSpec.scala:46-202)."""
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 import pytest
 from pyspark.sql import functions as F
 
 from snackfs_spark.sources import writer
 
-VAR = Path("/root/repo/var/test_writer")
 
-
-@pytest.fixture(scope="module", autouse=True)
-def clean_var():
-    shutil.rmtree(VAR, ignore_errors=True)
-    VAR.mkdir(parents=True, exist_ok=True)
-    yield
-    shutil.rmtree(VAR, ignore_errors=True)
+@pytest.fixture(scope="module")
+def var(tmp_path_factory):
+    return tmp_path_factory.mktemp("test_writer")
 
 
 def _reassemble(content):
@@ -46,10 +38,10 @@ def texts(spark):
     return spark.createDataFrame(rows, "path string, text string")
 
 
-def test_chunk_write_read_roundtrip(spark, texts):
-    writer.ingest_texts(texts, str(VAR / "rt"))
-    content = spark.read.parquet(str(VAR / "rt/content"))
-    files = spark.read.parquet(str(VAR / "rt/files"))
+def test_chunk_write_read_roundtrip(spark, texts, var):
+    writer.ingest_texts(texts, str(var / "rt"))
+    content = spark.read.parquet(str(var / "rt/content"))
+    files = spark.read.parquet(str(var / "rt/files"))
     got = {r["path"]: r["text"] for r in _reassemble(content).collect()}
     want = {r["path"]: r["text"] for r in texts.collect()}
     assert got == want
@@ -83,14 +75,14 @@ def test_append_continues_offsets(spark, texts):
         assert o1 + l1 == o2
 
 
-def test_ingest_binary_dir_roundtrip(spark):
-    src = VAR / "localdir"
+def test_ingest_binary_dir_roundtrip(spark, var):
+    src = var / "localdir"
     src.mkdir(parents=True, exist_ok=True)
     (src / "one.txt").write_text("hello parquet world")
     (src / "two.txt").write_text("second file" * 30)
     df = writer.ingest_binary_dir(spark, str(src), fs_prefix="/ingest")
-    writer.ingest_texts(df, str(VAR / "bin"))
-    content = spark.read.parquet(str(VAR / "bin/content"))
+    writer.ingest_texts(df, str(var / "bin"))
+    content = spark.read.parquet(str(var / "bin/content"))
     got = {r["path"]: r["text"] for r in _reassemble(content).collect()}
     assert got == {
         "/ingest/one.txt": "hello parquet world",
@@ -111,24 +103,24 @@ def test_touchz_and_cp(spark, texts):
     assert f3.filter(F.col("path") == "/backup/w/empty.marker").count() == 1
 
 
-def test_compact_content_preserves_bytes(spark, texts):
-    writer.ingest_texts(texts, str(VAR / "cmp"), )
+def test_compact_content_preserves_bytes(spark, texts, var):
+    writer.ingest_texts(texts, str(var / "cmp"), )
     before = {r["path"]: r["text"] for r in _reassemble(
-        spark.read.parquet(str(VAR / "cmp/content"))).collect()}
-    n_files = writer.compact_content(spark, str(VAR / "cmp"), target_files=2)
+        spark.read.parquet(str(var / "cmp/content"))).collect()}
+    n_files = writer.compact_content(spark, str(var / "cmp"), target_files=2)
     assert n_files <= 2
     after = {r["path"]: r["text"] for r in _reassemble(
-        spark.read.parquet(str(VAR / "cmp/content"))).collect()}
+        spark.read.parquet(str(var / "cmp/content"))).collect()}
     assert after == before
 
 
-def test_streaming_ingest_foreachbatch(spark, texts):
-    src = VAR / "stream_src"
+def test_streaming_ingest_foreachbatch(spark, texts, var):
+    src = var / "stream_src"
     texts.write.mode("overwrite").parquet(str(src))
     from snackfs_spark.streaming.ingest import stream_ingest_documents
 
-    stream_ingest_documents(spark, str(src), str(VAR / "stream_out"))
-    content = spark.read.parquet(str(VAR / "stream_out/content"))
+    stream_ingest_documents(spark, str(src), str(var / "stream_out"))
+    content = spark.read.parquet(str(var / "stream_out/content"))
     got = {r["path"]: r["text"] for r in _reassemble(content).collect()}
     want = {r["path"]: r["text"] for r in texts.collect()}
     assert got == want
