@@ -9,6 +9,10 @@ per task on local[4] (DESIGN.md, "Python worker floor"). When the same
 pyspark is importable without the archives, this daemon drops them
 before pyspark is imported, so the forked workers hold no zipimporter.
 `get_spark` selects it through `spark.python.daemon.module`.
+
+Spark starts its Python Data Source planner workers from its own fixed
+`pyspark.daemon`, which that setting does not reach; those workers trim
+themselves with `trim_worker` when they import the snackstore source.
 """
 
 from __future__ import annotations
@@ -16,7 +20,12 @@ from __future__ import annotations
 import os
 import sys
 import zipfile
+import zipimport
 from importlib.machinery import PathFinder
+
+# Spark's worker factory gives every Python worker process one of these:
+# the auth secret over TCP, the flag over a Unix domain socket.
+_WORKER_ENV = ("PYTHON_WORKER_FACTORY_SECRET", "PYTHON_UNIX_DOMAIN_ENABLED")
 
 
 def worker_path(path: list[str], spark_home: str) -> list[str]:
@@ -49,13 +58,36 @@ def worker_path(path: list[str], spark_home: str) -> list[str]:
     return rest if found == expected else list(path)
 
 
-if __name__ == "__main__":
-    kept = worker_path(sys.path, os.environ.get("SPARK_HOME", ""))
-    # start-up imports already made zipimporters for the dropped archives
-    for dropped in set(sys.path) - set(kept):
-        sys.path_importer_cache.pop(dropped, None)
-    sys.path[:] = kept
+def trim_worker(
+    path: list[str] | None = None,
+    cache: dict | None = None,
+    environ: dict[str, str] | None = None,
+) -> None:
+    """In a Spark Python worker process, make `path` (default `sys.path`)
+    the `worker_path` kept path and drop from `cache` (default
+    `sys.path_importer_cache`) every zipimporter cached for a dropped
+    archive or for a path inside one (`.../pyspark.zip/pyspark/sql`).
+    Outside a worker (no `_WORKER_ENV` variable: the driver) a no-op."""
+    path = sys.path if path is None else path
+    cache = sys.path_importer_cache if cache is None else cache
+    environ = os.environ if environ is None else environ
+    if not any(v in environ for v in _WORKER_ENV):
+        return
+    kept = worker_path(path, environ.get("SPARK_HOME", ""))
+    dropped = tuple(p for p in path if p not in kept)
+    if not dropped:
+        return
+    inside = tuple(p + os.sep for p in dropped)
+    for key, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and (
+            key in dropped or key.startswith(inside)
+        ):
+            del cache[key]
+    path[:] = kept
 
+
+if __name__ == "__main__":
+    trim_worker()
     from pyspark.daemon import manager
 
     manager()

@@ -69,6 +69,8 @@ Layout mirrors the reference's storage schema (ThriftStore.scala:228-241):
   task-unique, the reader unions fragments), mirroring the reference's
   per-sub-block inserts (ThriftStore.scala:352-365) but parallel per
   partition. Reads yield one Arrow RecordBatch per bucket.
+- **Planner workers** import this module, which trims their import path
+  (`pyworker.trim_worker`, DESIGN.md "Python worker floor").
 """
 
 from __future__ import annotations
@@ -97,7 +99,13 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from snackfs_spark import workdir
+from snackfs_spark import pyworker, workdir
+
+# Spark starts the Python Data Source planner workers (define, pushdown,
+# plan, write commit) from its stock daemon, not from snackfs_spark.pyworker.
+# Each one unpickles SnackStoreDataSource by reference, so it imports this
+# module: trimming here spares its later calls the archive re-read.
+pyworker.trim_worker()
 
 DEFAULT_BUCKETS = 8
 LISTING_CAP = 100_000   # reference's hard listing cap (ThriftStore.scala:509)
@@ -113,6 +121,15 @@ _ARROW_SCHEMA = pa.schema([
     ("length", pa.int64()),
     ("payload", pa.string()),
 ])
+
+
+def _store_meta(root: str) -> dict:
+    """The store's `_store.json`; a ValueError naming `root` if it has none."""
+    try:
+        with open(os.path.join(root, "_store.json")) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        raise ValueError(f"{root!r} is not a snackstore: it has no _store.json") from None
 
 
 def _bucket_of(path: str, buckets: int) -> int:
@@ -246,8 +263,7 @@ class SnackStoreReader(DataSourceReader):
         self.root = options.get("store_dir")
         if not self.root:
             raise ValueError("snackstore requires option 'store_dir'")
-        with open(os.path.join(self.root, "_store.json")) as f:
-            meta = json.load(f)
+        meta = _store_meta(self.root)
         self.buckets = meta["buckets"]
         self.hosts: list[str] = meta.get("hosts", [])
         self.eq_path: str | None = None
@@ -382,8 +398,7 @@ class SnackStoreWriter(DataSourceArrowWriter):
             # route new fragments to buckets old readers never visit:
             # silent data loss). Same for hosts — an append must not
             # wipe the ring.
-            with open(meta_path) as f:
-                existing = json.load(f)
+            existing = _store_meta(self.root)
             self.buckets = existing["buckets"]
             self.hosts = existing.get("hosts", [])
             opt_buckets = options.get("buckets")
@@ -486,8 +501,7 @@ class SnackStoreTailReader(SimpleDataSourceStreamReader):
         self.path = options.get("path")
         if not self.root or not self.path:
             raise ValueError("snackstore stream requires 'store_dir' and 'path'")
-        with open(os.path.join(self.root, "_store.json")) as f:
-            self.buckets = json.load(f)["buckets"]
+        self.buckets = _store_meta(self.root)["buckets"]
         self.bdir = os.path.join(
             self.root, f"bucket={_bucket_of(self.path, self.buckets)}"
         )

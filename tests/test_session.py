@@ -1,16 +1,20 @@
 """The session factory's Python worker set-up: the daemon that keeps
-Spark's own archives off the worker import path (pyworker.worker_path)
-and the workers' PYTHONPATH, which must find the package from any cwd."""
+Spark's own archives off the worker import path (pyworker.worker_path),
+the same trim inside Spark's planner workers (pyworker.trim_worker), and
+the workers' PYTHONPATH, which must find the package from any cwd."""
 
 from __future__ import annotations
 
+import importlib
 import os
 import subprocess
 import sys
 import zipfile
+import zipimport
+from importlib.machinery import FileFinder
 from pathlib import Path
 
-from snackfs_spark.pyworker import worker_path
+from snackfs_spark.pyworker import trim_worker, worker_path
 
 _REPO = Path(__file__).resolve().parent.parent
 VERSION = b'__version__: str = "4.1.2"\n'
@@ -85,6 +89,116 @@ def test_entries_outside_spark_home_are_never_touched(tmp_path):
     # with no (or another) SPARK_HOME, nothing is an archive of Spark's
     assert worker_path(path, "") == path
     assert worker_path(path, str(tmp_path / "deps")) == path
+
+
+def _importer_cache(tmp_path: Path, archives: list[str], site: str) -> tuple[dict, dict]:
+    """A fake sys.path_importer_cache: zipimporters for Spark's archives
+    and for package paths inside pyspark.zip (what a worker holds after
+    importing pyspark from the zip), and the entries that must survive."""
+    pyspark_zip = archives[0]
+    spark = {p: zipimport.zipimporter(p) for p in archives}
+    for sub in ("pyspark", "pyspark/sql", "pyspark/sql/worker"):
+        spark[os.path.join(pyspark_zip, sub)] = zipimport.zipimporter(os.path.join(pyspark_zip, sub))
+    user_zip = _zip(tmp_path / "deps/user.zip", {"userlib/__init__.py": b""})
+    others = {
+        site: FileFinder(site),
+        user_zip: zipimport.zipimporter(user_zip),
+        str(tmp_path / "gone"): None,
+    }
+    return spark, others
+
+
+def _worker_env(home: str) -> dict[str, str]:
+    return {"SPARK_HOME": home, "PYTHON_WORKER_FACTORY_SECRET": "s3cret"}
+
+
+def test_trim_worker_drops_spark_archive_importers(tmp_path):
+    home, archives, site = _layout(tmp_path)
+    spark, others = _importer_cache(tmp_path, archives, site)
+    app = str(tmp_path / "app")
+    path = [app, *archives, site]
+    cache = {**spark, **others}
+    trim_worker(path, cache, _worker_env(home))
+    assert path == [app, site]
+    assert cache == others
+
+
+def test_trim_worker_is_a_noop_unless_it_can_drop_spark_archives(tmp_path):
+    """A mismatched version.py, a process outside a Spark worker (the
+    driver) and archives outside $SPARK_HOME leave path and cache as
+    they are."""
+    home, archives, site = _layout(tmp_path)
+    _, _, other_site = _layout(tmp_path / "other", site_version=b'__version__: str = "4.0.0"\n')
+    spark, others = _importer_cache(tmp_path, archives, site)
+    cases = [
+        ([*archives, other_site], _worker_env(home)),
+        ([*archives, site], {"SPARK_HOME": home}),
+        ([*archives, site], _worker_env(str(tmp_path / "deps"))),
+    ]
+    for start, env in cases:
+        path, cache = list(start), {**spark, **others}
+        trim_worker(path, cache, env)
+        assert (path, cache) == (start, {**spark, **others}), env
+
+
+def test_importing_snackstore_leaves_the_driver_path_alone(monkeypatch):
+    """Outside a worker, importing the snackstore source trims nothing,
+    even with Spark's archives and their zipimporters on the path."""
+    import snackfs_spark.sources as sources
+    from snackfs_spark.sources import snackstore
+
+    archives = sorted(str(p) for p in Path(os.environ["SPARK_HOME"], "python", "lib").glob("*.zip"))
+    assert archives
+    for var in ("PYTHON_WORKER_FACTORY_SECRET", "PYTHON_UNIX_DOMAIN_ENABLED"):
+        monkeypatch.delenv(var, raising=False)
+    monkeypatch.setattr(sys, "path", [*archives, *sys.path])
+    for a in archives:
+        monkeypatch.setitem(sys.path_importer_cache, a, zipimport.zipimporter(a))
+    path, cache = list(sys.path), dict(sys.path_importer_cache)
+
+    # run the module's top level again, then put the loaded one back
+    monkeypatch.setattr(sources, "snackstore", snackstore)
+    monkeypatch.delitem(sys.modules, snackstore.__name__)
+    importlib.import_module(snackstore.__name__)
+    assert sys.path == path
+    assert sys.path_importer_cache == cache
+
+
+def test_planner_workers_drop_spark_archive_importers(spark, tmp_path):
+    """Spark's planner workers start from its stock daemon; importing the
+    snackstore source (to unpickle the data source) trims them, so a
+    later read's define runs in a worker holding no zipimporter."""
+    from snackfs_spark.sources.snackstore import SnackStoreDataSource, register
+
+    class PlannerProbe(SnackStoreDataSource):
+        # defined in the test, so cloudpickle ships it by value and the
+        # worker imports only its base's module
+        @classmethod
+        def name(cls) -> str:
+            return "snackstore_planner_probe"
+
+        def schema(self) -> str:
+            import os
+            import sys
+            import zipimport
+
+            held = sum(isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values())
+            with open(self.options["probe"], "a") as f:
+                f.write(f"{os.getpid()} {held}\n")
+            return super().schema()
+
+    register(spark)
+    spark.dataSource.register(PlannerProbe)
+    store, probe = str(tmp_path / "store"), tmp_path / "probe.txt"
+    row = spark.createDataFrame([("/p/a", 0, 1, "a")], "path string, sub_offset bigint, length bigint, payload string")
+    row.write.format("snackstore").option("store_dir", store).mode("overwrite").save()
+    for _ in range(2):
+        df = spark.read.format("snackstore_planner_probe").option("store_dir", store).option("probe", str(probe)).load()
+        assert [tuple(r) for r in df.collect()] == [("/p/a", 0, 1, "a")]
+    calls = [tuple(map(int, line.split())) for line in probe.read_text().splitlines()]
+    assert len(calls) == 2
+    assert calls[1][0] != os.getpid()
+    assert calls[1][1] == 0, calls
 
 
 def test_package_import_loads_no_pyspark():

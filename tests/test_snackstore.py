@@ -3,6 +3,8 @@ data source, bucket pruning on point lookups, pushed prefix filters."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -773,3 +775,19 @@ def test_vacuum_keeps_every_live_segment(spark, var):
     stats = snackstore.vacuum_store(str(root), grace_seconds=0)
     assert stats == {"removed": 0, "kept": len(fragments)} and fragments
     assert _rows(spark, root) == before
+
+
+def test_missing_store_fails_naming_the_directory(spark, var):
+    """A read or tail stream over a directory with no _store.json fails
+    at once with a ValueError that names it, not a FileNotFoundError
+    from inside a planner worker."""
+    root = var / "not_a_store"
+    root.mkdir()
+    msg = re.escape(f"'{root}' is not a snackstore")
+    with pytest.raises(ValueError, match=msg):
+        snackstore.SnackStoreReader(None, {"store_dir": str(root)})
+    with pytest.raises(ValueError, match=msg):
+        snackstore.SnackStoreTailReader({"store_dir": str(root), "path": "/kv/a.txt"})
+    with pytest.raises(Exception, match=msg) as err:
+        spark.read.format("snackstore").option("store_dir", str(root)).load().collect()
+    assert "ValueError" in str(err.value)
