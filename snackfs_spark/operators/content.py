@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from snackfs_spark import workdir
-from snackfs_spark.catalog import SnackCatalog
+from snackfs_spark.catalog import SnackCatalog, ordered_concat
 from snackfs_spark.registry import register
 from snackfs_spark.sources.fsmodel import content_df, fs_sql
 
@@ -38,15 +38,6 @@ def reassemble_chunks(content: DataFrame) -> DataFrame:
     BlockInputStream never holds more than one block either), then the
     per-file assembly concats block-sized pieces in block order."""
     from snackfs_spark.sources.fsmodel import BLOCK_CHARS
-
-    def ordered_concat(order_col: str) -> F.Column:
-        return F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct(order_col, "piece"))),
-                lambda s: s.getField("piece"),
-            ),
-            "",
-        )
 
     blocks = (
         content.withColumn("block_idx", F.expr(f"sub_offset div {BLOCK_CHARS}"))

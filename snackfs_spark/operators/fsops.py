@@ -488,12 +488,6 @@ def fs_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 FSCK_STALE_SHRINK = 37  # bytes "lost" by a stale-INode append
 
 
-def _md5_bucket(col, modulus: int):
-    """Back-compat local name for functions.md5_bucket (tests import it
-    from here); one shared cross-engine expression, defined once."""
-    return md5_bucket(col, modulus)
-
-
 @register(
     "fs_fsck",
     oracle=fs_sql(
@@ -541,11 +535,11 @@ def fs_fsck(spark: SparkSession, sf_dir: str) -> DataFrame:
     inodes = (
         files_df(spark, sf_dir)
         .filter(~F.col("is_dir"))
-        .filter(_md5_bucket(F.col("path"), 13) != 3)
+        .filter(md5_bucket(F.col("path"), 13) != 3)
         .select(
             "path",
             F.when(
-                _md5_bucket(F.col("path"), 19) == 11,
+                md5_bucket(F.col("path"), 19) == 11,
                 F.greatest(F.col("size") - FSCK_STALE_SHRINK, F.lit(0).cast("long")),
             )
             .otherwise(F.col("size"))
@@ -555,7 +549,7 @@ def fs_fsck(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks = (
         content_df(spark, sf_dir)
         .filter(
-            _md5_bucket(
+            md5_bucket(
                 F.concat(F.col("path"), F.lit("#"), F.col("sub_offset").cast("string")),
                 17,
             )

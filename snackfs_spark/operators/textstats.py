@@ -4919,7 +4919,7 @@ def text_chi2_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE presence pass (r9 VERDICT #5): pres feeds df_all, the cell
     # counts AND the contingency — unckeckpointed, the physical plan
     # re-derived the tokenize+distinct subtree three times (three
-    # Scan+Generate chains in PLANS.md). The lazy checkpoint
+    # Scan+Generate chains in tools/dump_plans.py's output). The lazy checkpoint
     # materializes it once on first use; tests/test_plans.py pins the
     # single Generate chain.
     pres = (

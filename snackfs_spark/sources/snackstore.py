@@ -23,9 +23,11 @@ Layout mirrors the reference's storage schema (ThriftStore.scala:228-241):
   fragments. A reader lists only fragments, so a segment whose task died
   before its fragment landed is invisible; `vacuum_store` reclaims it.
   No fsync: the flush policy is the OS's, as for any Spark task output.
-- **Old stores** stay readable: two-element `[sub_offset, char_len]`
-  chunks and pre-r2 `offsets` entries resolve to one blob per sub-block,
-  `sblock-<pathhash>-<sub_offset>.bin`. Writers only write segments.
+- **One layout**: every fragment entry is a list of four-element chunks
+  into its task's segment. An entry in a pre-segment layout (two-element
+  `[sub_offset, char_len]` chunks, or `offsets` with one blob per
+  sub-block) makes reads, the tail reader and `vacuum_store` raise a
+  ValueError naming its fragment; rewrite such a store from its source.
 - **Key dispersion**: bucket = md5(path) % buckets — the reference's
   path-hash row key (ThriftStore.scala:243-247 getPathKey).
 - **Partition planning**: one InputPartition per bucket for payload
@@ -80,7 +82,6 @@ import itertools
 import json
 import os
 import uuid
-import warnings
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 from typing import BinaryIO, NamedTuple
@@ -136,46 +137,37 @@ def _bucket_of(path: str, buckets: int) -> int:
     return int(hashlib.md5(path.encode()).hexdigest()[:8], 16) % buckets
 
 
-def _path_hash(path: str) -> str:
-    return hashlib.md5(path.encode()).hexdigest()[:16]
-
-
 def _segment(task: str) -> str:
     return f"sblock-{task}.bin"
-
-
-def _blob(path: str, sub_offset: int) -> str:
-    """Old-layout file of one sub-block (two-element and `offsets` entries)."""
-    return f"sblock-{_path_hash(path)}-{sub_offset}.bin"
 
 
 class _Chunk(NamedTuple):
     """Where one sub-block lives inside its bucket directory."""
 
-    length: int | None  # chars; None for pre-r2 `offsets` entries
-    blob: str           # segment, or the sub-block's own old-layout blob
-    pos: int = 0        # byte range in `blob`; nbytes -1 = the whole file
-    nbytes: int = -1
+    length: int   # chars
+    segment: str
+    pos: int      # byte range in `segment`
+    nbytes: int
 
 
 def _fragment(bdir: str, fn: str, keep: Callable[[str], bool] | None = None):
-    """Yield (path, sub_offset, _Chunk, exact) for each entry of the inode
-    fragment `fn`, skipping paths `keep` rejects. `exact` is False for
-    pre-r2 `offsets` entries, which a `chunks` entry of any fragment
-    overrides."""
+    """Yield (path, sub_offset, _Chunk) for each entry of the inode
+    fragment `fn`, skipping paths `keep` rejects. An entry that is not a
+    list of [sub_offset, char_len, byte_pos, byte_len] chunks raises a
+    ValueError naming the fragment."""
     seg = _segment(fn[len("inodes-"):-len(".json")])
     with open(os.path.join(bdir, fn)) as f:
         frag = json.load(f)
     for path, meta in frag.items():
         if keep is not None and not keep(path):
             continue
-        for c in meta.get("chunks", []):
-            if len(c) == 4:  # [sub_offset, char_len, byte_pos, byte_len]
-                yield path, c[0], _Chunk(c[1], seg, c[2], c[3]), True
-            else:  # [sub_offset, char_len] in its own blob
-                yield path, c[0], _Chunk(c[1], _blob(path, c[0])), True
-        for off in meta.get("offsets", []):
-            yield path, off, _Chunk(None, _blob(path, off)), False
+        if set(meta) != {"chunks"} or any(len(c) != 4 for c in meta["chunks"]):
+            raise ValueError(
+                f"snackstore fragment {os.path.join(bdir, fn)}: entry {path!r} "
+                "is in a pre-segment layout, which is not read; rewrite the store"
+            )
+        for off, length, pos, nbytes in meta["chunks"]:
+            yield path, off, _Chunk(length, seg, pos, nbytes)
 
 
 def _inodes(
@@ -190,30 +182,21 @@ def _inodes(
         return chunks
     for fn in sorted(os.listdir(bdir)):
         if fn.startswith("inodes-"):
-            for path, off, chunk, exact in _fragment(bdir, fn, keep):
-                ent = chunks.setdefault(path, {})
-                if exact:
-                    ent[off] = chunk
-                else:
-                    ent.setdefault(off, chunk)
+            for path, off, chunk in _fragment(bdir, fn, keep):
+                chunks.setdefault(path, {})[off] = chunk
     return chunks
 
 
 def _read_payloads(bdir: str, chunks: list[_Chunk]) -> list[str]:
-    """Decoded payloads of `chunks`, in order. Each file is opened once and
-    each run of adjacent byte ranges is one seek + read, so a scan reads a
-    segment in one call and a point read touches only its own ranges."""
+    """Decoded payloads of `chunks`, in order. Each segment is opened once
+    and each run of adjacent byte ranges is one seek + read, so a scan reads
+    a segment in one call and a point read touches only its own ranges."""
     out = [""] * len(chunks)
-    by_blob: dict[str, list[int]] = {}
+    by_segment: dict[str, list[int]] = {}
     for i, c in enumerate(chunks):
-        by_blob.setdefault(c.blob, []).append(i)
-    for blob, idx in by_blob.items():
-        with open(os.path.join(bdir, blob), "rb") as f:
-            if chunks[idx[0]].nbytes < 0:  # old layout: the file is the chunk
-                text = f.read().decode("utf-8")
-                for i in idx:
-                    out[i] = text
-                continue
+        by_segment.setdefault(c.segment, []).append(i)
+    for segment, idx in by_segment.items():
+        with open(os.path.join(bdir, segment), "rb") as f:
             runs: list[list[int]] = []
             end = -1
             for i in sorted(idx, key=lambda j: chunks[j].pos):
@@ -227,7 +210,7 @@ def _read_payloads(bdir: str, chunks: list[_Chunk]) -> list[str]:
                 data = memoryview(f.read(last.pos + last.nbytes - lo))
                 if len(data) < last.pos + last.nbytes - lo:
                     raise OSError(
-                        f"snackstore segment {os.path.join(bdir, blob)} ends "
+                        f"snackstore segment {os.path.join(bdir, segment)} ends "
                         f"before byte {last.pos + last.nbytes}: truncated"
                     )
                 for i in run:
@@ -353,23 +336,12 @@ class SnackStoreReader(DataSourceReader):
         if not rows:
             return None
         located = [c for _p, _o, c in rows]
-        if self.want_payload:
-            payloads: list[str | None] = _read_payloads(bdir, located)
-            lengths = [len(p) for p in payloads]
-        else:
-            payloads = [None] * len(rows)
-            lengths = [c.length for c in located]
-            # pre-r2 entries carry no length: decode their blobs, since
-            # `length` counts chars and a stat would count bytes
-            legacy = [i for i, n in enumerate(lengths) if n is None]
-            texts = _read_payloads(bdir, [located[i] for i in legacy])
-            for i, text in zip(legacy, texts):
-                lengths[i] = len(text)
+        payloads = _read_payloads(bdir, located) if self.want_payload else [None] * len(rows)
         return pa.RecordBatch.from_arrays(
             [
                 pa.array([p for p, _o, _c in rows], pa.string()),
                 pa.array([o for _p, o, _c in rows], pa.int64()),
-                pa.array(lengths, pa.int64()),
+                pa.array([c.length for c in located], pa.int64()),
                 pa.array(payloads, pa.string()),
             ],
             schema=_ARROW_SCHEMA,
@@ -505,86 +477,33 @@ class SnackStoreTailReader(SimpleDataSourceStreamReader):
         self.bdir = os.path.join(
             self.root, f"bucket={_bucket_of(self.path, self.buckets)}"
         )
-        # sub_offset -> decoded char length for pre-r2 length-less
-        # fragments. Committed bytes are immutable, so entries never
-        # invalidate; without this every micro-batch poll re-decodes the
-        # whole legacy payload just to measure it (r4 ADVICE).
-        self._legacy_len_cache: dict[int, int] = {}
-        # sub_offset -> _Chunk from the latest fragment listing, so the
-        # payload reads of a micro-batch use the snapshot its walk saw
-        self._located: dict[int, _Chunk] = {}
 
     def initialOffset(self) -> dict:
         return {"end": 0}  # follow from the start of the file
 
-    def _committed_chunks(self) -> list[tuple[int, int]]:
-        """Sorted (sub_offset, length) pairs of the path visible under
-        the commit protocol (listed from inode fragments, never by
-        globbing segments or blobs)."""
-        self._located = _inodes(self.bdir, lambda p: p == self.path).get(
-            self.path, {}
-        )
-        out = []
-        for off in sorted(self._located):
-            length = self._located[off].length
-            if length is None:
-                # pre-r2 fragments lack lengths; the contiguity walk
-                # needs CHAR length (offsets are char positions), so
-                # decode — getsize would return bytes and a multi-byte
-                # payload would open a phantom gap that stalls the
-                # stream forever. Decode once per chunk, not per poll:
-                # committed bytes are immutable.
-                length = self._legacy_len_cache.get(off)
-                if length is None:
-                    length = len(_read_payloads(self.bdir, [self._located[off]])[0])
-                    self._legacy_len_cache[off] = length
-            out.append((off, length))
-        return out
+    def _committed_chunks(self) -> list[tuple[int, _Chunk]]:
+        """Sorted (sub_offset, _Chunk) pairs of the path visible under the
+        commit protocol (listed from inode fragments, never by globbing
+        segments); a micro-batch reads payloads from the listing it walked."""
+        return sorted(_inodes(self.bdir, lambda p: p == self.path).get(self.path, {}).items())
 
     def _pos(self, offset: dict) -> int:
-        """Consumed position from an offset dict, accepting the legacy
-        {"hwm": N} form (pre-contiguity checkpoints): old hwm = max
-        EMITTED sub_offset, so the consumed position is that chunk's
-        end (the old reader had emitted everything visible <= hwm)."""
-        if "end" in offset:
-            return offset["end"]
-        hwm = offset["hwm"]
-        if hwm < 0:
-            return 0
-        chunks = self._committed_chunks()
-        for off, length in chunks:
-            if off == hwm:
-                return off + length
-        # The hwm chunk vanished (vacuumed legacy checkpoint). hwm is a
-        # chunk START, not a consumed end — returning it raw would make
-        # the next committed chunk (at hwm + len) look like a permanent
-        # gap and stall the stream. The legacy reader had emitted
-        # everything visible <= hwm, so resume from the END of the last
-        # surviving chunk at-or-below hwm; if none survive, from the
-        # next chunk's start (r4 ADVICE).
-        below = [(off, length) for off, length in chunks if off <= hwm]
-        pos = below[-1][0] + below[-1][1] if below else 0
-        if not any(off == pos for off, _length in chunks):
-            # the run following pos was vacuumed too; data in the hole is
-            # unrecoverable, so skip to the next surviving chunk rather
-            # than stalling on a gap that can never fill
-            later = [off for off, _length in chunks if off > pos]
-            if later:
-                pos = later[0]
-        warnings.warn(
-            f"snackstore tail {self.path}: legacy hwm {hwm} chunk was "
-            f"vacuumed; degraded recovery resumes at position {pos}",
-            stacklevel=2,
-        )
-        return pos
+        """Consumed position from an offset dict, which is only ever
+        {"end": N}; anything else raises a ValueError naming the path."""
+        if len(offset) != 1 or "end" not in offset:
+            raise ValueError(
+                f"snackstore tail {self.path}: offset {offset!r} is not "
+                '{"end": N}; restart the stream from a new checkpoint'
+            )
+        return offset["end"]
 
-    def _rows(self, chunks: list[tuple[int, int]], lo: int, hi: int):
+    def _rows(self, chunks: list[tuple[int, _Chunk]], lo: int, hi: int):
         """Rows for the given committed chunks with lo <= sub_offset < hi."""
-        offs = [off for off, _length in chunks if lo <= off < hi]
-        payloads = _read_payloads(self.bdir, [self._located[off] for off in offs])
+        picked = [(off, c) for off, c in chunks if lo <= off < hi]
+        payloads = _read_payloads(self.bdir, [c for _off, c in picked])
         return [
-            (self.path, off, len(payload), payload)
-            for off, payload in zip(offs, payloads)
+            (self.path, off, c.length, payload)
+            for (off, c), payload in zip(picked, payloads)
         ]
 
     def read(self, start: dict):
@@ -594,12 +513,12 @@ class SnackStoreTailReader(SimpleDataSourceStreamReader):
         chunks = self._committed_chunks()
         start_pos = self._pos(start)
         end_pos = start_pos
-        for off, length in chunks:
+        for off, c in chunks:
             if off < end_pos:
                 continue  # already consumed
             if off > end_pos:
                 break  # gap — out-of-order commit still pending
-            end_pos = off + length
+            end_pos = off + c.length
         # a list_iterator, not a generator: the engine caches the batch
         # for replay-until-commit via copy.copy, which generators refuse
         return iter(self._rows(chunks, start_pos, end_pos)), {"end": end_pos}
@@ -632,45 +551,51 @@ VACUUM_GRACE_SECONDS = 600.0
 
 
 def vacuum_store(root: str, grace_seconds: float = VACUUM_GRACE_SECONDS) -> dict[str, int]:
-    """Garbage-collect orphan segments and blobs: a write task that died
-    after writing its segments but before its inode fragments leaves
+    """Garbage-collect orphan segments: a write task that died after
+    writing its segments but before its inode fragments leaves
     unreferenced files on disk (the commit protocol makes them invisible
     to readers, but they consume space). Walk each bucket, keep every
-    segment whose task's fragment exists and every old-layout blob a
-    fragment entry names, delete the rest — the connector analog of
-    Cassandra's compaction/GC of dead sblock columns (reference
+    segment a fragment entry names, delete the rest — the connector
+    analog of Cassandra's compaction/GC of dead sblock columns (reference
     thresholds: ThriftStore.scala:229-234).
+
+    Every fragment of the store is parsed before anything is deleted, so
+    a store in a pre-segment layout raises (see `_fragment`) with all its
+    files in place instead of losing its blobs as orphans.
 
     Safe to run concurrently with readers (referenced files are never
     touched) AND with in-flight writers: write() creates segments
     *before* the task's inode fragment lands, so a segment that merely
     looks orphaned may be seconds from being referenced. Only files
     older than `grace_seconds` (mtime threshold — the gc_grace analog
-    of Cassandra's tombstone GC) are deleted, in either layout; pass
-    grace_seconds=0 only when all writers are known quiesced."""
+    of Cassandra's tombstone GC) are deleted; pass grace_seconds=0 only
+    when all writers are known quiesced."""
     import time  # noqa: PLC0415
 
     cutoff = time.time() - grace_seconds
-    removed = kept = 0
+    orphans: list[str] = []
+    kept = 0
     for fn in os.listdir(root):
         if not fn.startswith("bucket="):
             continue
         bdir = os.path.join(root, fn)
         names = os.listdir(bdir)
-        referenced: set[str] = set()
-        for f in names:
-            if f.startswith("inodes-"):
-                referenced.add(_segment(f[len("inodes-"):-len(".json")]))
-                referenced.update(c.blob for _p, _o, c, _x in _fragment(bdir, f))
+        referenced = {
+            c.segment
+            for f in names
+            if f.startswith("inodes-")
+            for _p, _o, c in _fragment(bdir, f)
+        }
         for f in names:
             if f.startswith("sblock-"):
                 fp = os.path.join(bdir, f)
                 if f in referenced or os.path.getmtime(fp) > cutoff:
                     kept += 1
                 else:
-                    os.unlink(fp)
-                    removed += 1
-    return {"removed": removed, "kept": kept}
+                    orphans.append(fp)
+    for fp in orphans:
+        os.unlink(fp)
+    return {"removed": len(orphans), "kept": kept}
 
 
 def register(spark) -> None:

@@ -33,26 +33,19 @@ from snackfs_spark.registry import register
 #     map-side partial aggregation): state cardinality is O(open windows
 #     × types) at ANY corpus scale and the shuffle moves only partial
 #     aggregates, so a small fixed shard count is right everywhere.
-#     Clusters with wide key spaces can raise it via env.
 #   - KEYED-state ops (per-key CDC rows, dedup hash sets, stream-stream
 #     join buffers): state grows with the input, so shards derive from
 #     the source size (~32 MB of source per shard) — 2 at sf0.1,
 #     thousands at 100 TB — instead of inheriting the batch session's
 #     shuffle width.
 # ---------------------------------------------------------------------------
-BOUNDED_STATE_SHARDS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-)
+BOUNDED_STATE_SHARDS = 8
 _KEYED_STATE_BYTES_PER_SHARD = 32 * 1024 * 1024
 
 
 def keyed_state_partitions(sf_dir: str, *table_files: str) -> int:
     """Shard count for key-proportional streaming state: one shard per
-    ~32 MB of source data, clamped to [2, 10k]. Honors the same env
-    override as the bounded policy when set explicitly."""
-    override = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if override:
-        return int(override)
+    ~32 MB of source data, clamped to [2, 10k]."""
     total = 0
     for t in table_files or ("events.parquet",):
         try:

@@ -130,14 +130,14 @@ def test_fsck_finding_classes_and_injection_targets(spark):
     assert len(paths) == len(set(paths)), "a path classified twice"
     assert all(r["bytes"] > 0 for r in out), "finding with zero byte delta"
 
-    from snackfs_spark.operators.fsops import _md5_bucket
+    from snackfs_spark.functions import md5_bucket
     from snackfs_spark.sources.fsmodel import files_df
 
     lost = {
         r["path"]
         for r in files_df(spark, SF_SMALL)
         .filter(~F.col("is_dir") & (F.col("size") > 0))
-        .withColumn("b", _md5_bucket(F.col("path"), 13))
+        .withColumn("b", md5_bucket(F.col("path"), 13))
         .filter(F.col("b") == 3)
         .collect()
     }

@@ -287,8 +287,7 @@ def test_metadata_only_read_skips_blob_io(spark, store, var):
 def test_vacuum_removes_only_orphan_blobs(spark, store, var):
     """A write task that dies after writing its segments but before its
     inode fragment leaves orphans; vacuum_store deletes exactly those
-    (in either layout, once past the grace window) and the store reads
-    back byte-identical."""
+    (once past the grace window) and the store reads back byte-identical."""
     root = var / "vac_store"
     df = spark.createDataFrame(
         [("/v/a.txt", "alpha " * 30), ("/v/b.txt", "beta " * 50)],
@@ -309,9 +308,9 @@ def test_vacuum_removes_only_orphan_blobs(spark, store, var):
     # one segment per (bucket, write task), each named by a fragment
     segments = len(list(root.glob("bucket=*/sblock-*")))
     assert segments == len(list(root.glob("bucket=*/inodes-*"))) > 0
-    # simulate aborted tasks: an old-layout blob and a segment, neither
-    # named by any inode fragment
-    orphans = {0: "sblock-deadbeefdeadbeef-0.bin", 1: "sblock-deadbeef0000.bin"}
+    # simulate aborted tasks: a segment in each bucket that no inode
+    # fragment names
+    orphans = {0: "sblock-deadbeef0001.bin", 1: "sblock-deadbeef0000.bin"}
     for b, name in orphans.items():
         bdir = root / f"bucket={b}"
         bdir.mkdir(exist_ok=True)
@@ -550,61 +549,12 @@ def test_stream_tail_replay_between_offsets_is_exact(spark, store, var):
     rows3, end3 = r.read(end2)
     assert [o for _, o, _, _ in rows3] == [200, 260]
     assert end3["end"] == 265
-    # legacy {"hwm"} checkpoints (pre-contiguity) keep resolving: hwm =
-    # max EMITTED sub_offset maps to that chunk's end position
-    legacy = {"hwm": 260}
-    rows_l, end_l = r.read(legacy)
-    assert list(rows_l) == [] and end_l["end"] == 265
-    assert [o for _, o, _, _ in r.readBetweenOffsets({"hwm": -1}, end_l)] == [
-        o for o, in_ in []
-    ] + sorted(o for o, _l in r._committed_chunks())
-
-
-def test_legacy_hwm_vacuumed_chunk_recovers_without_stall(spark, store, var):
-    """A legacy {"hwm"} checkpoint whose hwm chunk was vacuumed away must
-    NOT resume at the raw hwm (a chunk START) — that opens a phantom gap
-    and stalls the stream forever (r4 ADVICE). Recovery resumes at the
-    end of the last surviving chunk at-or-below hwm, or the next chunk
-    start when the hole itself was vacuumed."""
-    import pytest as _pytest
-
-    from snackfs_spark.sources.snackstore import SnackStoreTailReader
-
-    root = str(var / "vacuumedlegacy")
-    rows = [
-        ("/log/v.txt", 0, 100, "a" * 100),
-        ("/log/v.txt", 100, 100, "b" * 100),
-        ("/log/v.txt", 200, 65, "c" * 65),
-    ]
-    df = spark.createDataFrame(
-        rows, "path string, sub_offset long, length long, payload string"
-    )
-    (
-        df.write.format("snackstore")
-        .option("store_dir", root)
-        .option("buckets", 4)
-        .mode("append")
-        .save()
-    )
-    r = SnackStoreTailReader({"store_dir": root, "path": "/log/v.txt"})
-    # hwm=150 never matches a chunk start (simulates the hwm chunk being
-    # vacuumed): resume at the end of the chunk at 100 -> 200, so the
-    # chunk at 200 is re-emitted instead of stalling behind a fake gap
-    with _pytest.warns(UserWarning, match="degraded recovery"):
-        emitted, end = r.read({"hwm": 150})
-    assert [o for _, o, _, _ in emitted] == [200]
-    assert end["end"] == 265
-    # hwm below EVERY surviving chunk with position 0 vacuumed too:
-    # skip to the next surviving chunk start rather than stalling
-    r2 = SnackStoreTailReader({"store_dir": root, "path": "/log/v.txt"})
-    ph_chunks = r2._committed_chunks()
-    assert ph_chunks[0][0] == 0
-    # simulate vacuum of the first chunk by filtering it from the walk
-    r2._committed_chunks = lambda: [c for c in ph_chunks if c[0] >= 100]  # type: ignore[method-assign]
-    with _pytest.warns(UserWarning, match="degraded recovery"):
-        emitted2, end2 = r2.read({"hwm": 50})
-    assert [o for _, o, _, _ in emitted2] == [100, 200]
-    assert end2["end"] == 265
+    # the offset is only ever {"end": N}: a {"hwm": N} checkpoint from
+    # before contiguous offsets is refused, naming the followed path
+    with pytest.raises(ValueError, match='/log/r.txt: offset .* is not {"end": N}'):
+        r.read({"hwm": 260})
+    with pytest.raises(ValueError, match="/log/r.txt"):
+        r.readBetweenOffsets({"hwm": -1}, end3)
 
 
 def _write(df, root, buckets, mode="append"):
@@ -681,49 +631,50 @@ def test_point_read_touches_only_its_byte_ranges(spark, var):
         point("/r/b.txt")
 
 
-def _old_layout_store(root):
-    """A store as written before segments: one blob per sub-block, a
-    fragment with two-element [sub_offset, char_len] chunks, and a pre-r2
-    fragment with `offsets` only, holding a non-ASCII payload."""
+def _old_layout_store(root, key):
+    """A one-file store as written before segments: one blob per sub-block,
+    named by a fragment entry of two-element [sub_offset, char_len]
+    `chunks` or of pre-r2 `offsets`."""
+    import hashlib
     import json
 
-    texts = {"/old/a.txt": "alpha beta gamma", "/old/ü.txt": "grüße, ñandú ✓ fin"}
-    pieces = {p: [(o, t[o:o + 6]) for o in range(0, len(t), 6)] for p, t in texts.items()}
+    path, text = "/old/ü.txt", "grüße, ñandú ✓ fin"
+    pieces = [(o, text[o:o + 6]) for o in range(0, len(text), 6)]
     root.mkdir()
     (root / "_store.json").write_text(json.dumps({"buckets": 2, "hosts": []}))
-    for name, (path, key) in {"0001": ("/old/a.txt", "chunks"),
-                              "0002": ("/old/ü.txt", "offsets")}.items():
-        bdir = root / f"bucket={snackstore._bucket_of(path, 2)}"
-        bdir.mkdir(exist_ok=True)
-        for off, piece in pieces[path]:
-            blob = f"sblock-{snackstore._path_hash(path)}-{off}.bin"
-            (bdir / blob).write_bytes(piece.encode("utf-8"))
-        entry = [[o, len(s)] for o, s in pieces[path]] if key == "chunks" else [
-            o for o, _s in pieces[path]]
-        (bdir / f"inodes-{name}.json").write_text(json.dumps({path: {key: entry}}))
-    return texts, pieces
+    bdir = root / f"bucket={snackstore._bucket_of(path, 2)}"
+    bdir.mkdir()
+    for off, piece in pieces:
+        blob = f"sblock-{hashlib.md5(path.encode()).hexdigest()[:16]}-{off}.bin"
+        (bdir / blob).write_bytes(piece.encode("utf-8"))
+    entry = [[o, len(p)] for o, p in pieces] if key == "chunks" else [o for o, _p in pieces]
+    fragment = bdir / "inodes-0001.json"
+    fragment.write_text(json.dumps({path: {key: entry}}))
+    return path, fragment
 
 
-def test_old_layout_store_reads_back_byte_identical(spark, var):
-    """Stores from before segments stay readable through a batch read, a
-    metadata listing and the tail reader; a pre-r2 entry's listed length
-    is its CHAR length, decoded, not the blob's byte size."""
-    root = var / "old_layout_store"
-    texts, pieces = _old_layout_store(root)
-    want = {(p, o, len(s)) for p, ps in pieces.items() for o, s in ps}
-    assert any(len(s) != len(s.encode()) for ps in pieces.values() for _o, s in ps)
-    got = _rows(spark, root)
-    assert {(p, o, n) for p, o, n, _s in got} == want
-    for path, text in texts.items():
-        batch = "".join(s for _o, s in sorted((o, s) for p, o, _n, s in got if p == path))
-        assert batch.encode() == text.encode()
-    listed = _rows(spark, root, columns="path,sub_offset,length")
-    assert {(p, o, n) for p, o, n, _s in listed} == want
-    for path, text in texts.items():
-        tail = snackstore.SnackStoreTailReader({"store_dir": str(root), "path": path})
-        rows, end = tail.read(tail.initialOffset())
-        assert "".join(s for _p, _o, _n, s in rows).encode() == text.encode()
-        assert end == {"end": len(text)}
+@pytest.mark.parametrize("key", ["chunks", "offsets"])
+def test_old_layout_store_is_rejected_naming_the_fragment(spark, var, key):
+    """A store from before segments is refused, not decoded: a batch read,
+    a metadata listing and the tail reader raise a ValueError naming the
+    fragment, and vacuum raises before it deletes any of the store's
+    blobs (which no segment-layout entry names)."""
+    from pyspark.errors.exceptions.captured import PythonException
+
+    root = var / f"old_layout_{key}"
+    path, fragment = _old_layout_store(root, key)
+    msg = re.escape(f"snackstore fragment {fragment}: entry {path!r} is in a pre-segment layout")
+    for options in ({}, {"columns": "path,sub_offset,length"}):
+        with pytest.raises(PythonException, match=msg) as err:
+            _rows(spark, root, **options)
+        assert "ValueError" in str(err.value)
+    tail = snackstore.SnackStoreTailReader({"store_dir": str(root), "path": path})
+    with pytest.raises(ValueError, match=msg):
+        tail.read(tail.initialOffset())
+    files = {f: f.read_bytes() for f in root.rglob("*") if f.is_file()}
+    with pytest.raises(ValueError, match=msg):
+        snackstore.vacuum_store(str(root), grace_seconds=0)
+    assert {f: f.read_bytes() for f in root.rglob("*") if f.is_file()} == files
 
 
 def test_metadata_listing_is_one_partition_with_per_bucket_limit(spark, store, var):

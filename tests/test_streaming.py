@@ -508,7 +508,7 @@ def test_windowed_peak_chained_stateful(spark):
     assert out.count() == twin.count() > 0
 
 
-def test_state_partition_policy(spark, monkeypatch):
+def test_state_partition_policy(spark):
     """Optimization r11: stateful drains pin the state-store shard count
     (bounded-state ops: small constant; keyed-state ops: derived from
     source bytes) and restore the session's shuffle partitions + the
@@ -521,13 +521,10 @@ def test_state_partition_policy(spark, monkeypatch):
         keyed_state_partitions,
     )
 
-    # keyed policy: ceil(bytes / 32 MiB), floor 2, env override wins
+    # keyed policy: ceil(bytes / 32 MiB), floor 2
     sz = os.path.getsize(os.path.join(SF_SMALL, "events.parquet"))
     expect = max(2, -(-sz // (32 * 1024 * 1024)))
     assert keyed_state_partitions(SF_SMALL, "events.parquet") == expect
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "64")
-    assert keyed_state_partitions(SF_SMALL, "events.parquet") == 64
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
 
     # the drain pins shuffle partitions for the stream, then restores
     prev = spark.conf.get("spark.sql.shuffle.partitions")

@@ -1,6 +1,7 @@
 """Generate PLANS.md: collapsed physical-plan operator chains for the
 queries bench.py times — the reviewable evidence that each plan has the
 shape SCALE.md claims (pushdown, broadcast, partial top-k, no cartesian).
+PLANS.md is regenerated on demand, not tracked (.gitignore).
 
 Usage: python tools/dump_plans.py
 """

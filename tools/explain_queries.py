@@ -2,9 +2,10 @@
 
 Usage: python tools/explain_queries.py OUTDIR [SUFFIX] name1 name2 ...
 
-Writes OUTDIR/<name>_<SUFFIX>.txt (default SUFFIX: "before") — the
-optimization-round evidence files (plans/r11/<query>_before.txt /
-_after.txt). Runs at sf0.01 with the ingest cache built, matching the
+Writes OUTDIR/<name>_<SUFFIX>.txt (default SUFFIX: "before"): plan
+evidence for a change, e.g. plans/<round>/<query>_before.txt and
+_after.txt. Plan dumps are regenerated on demand, not tracked
+(.gitignore). Runs at sf0.01 with the ingest cache built, matching the
 bench session's table layout so plan shapes are comparable.
 """
 

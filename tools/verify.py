@@ -12,8 +12,9 @@ other token is a scale factor. --window N limits the run to the driver's
 first-N correctness window — the sf1 spot-replica is
     python tools/make_scale_fixture.py var/sf1 10
     python tools/verify.py var/sf1 --window 50
-A mismatch prints its kind (columns, row count or values) and, for
-values, the first 5 differing rows of each side.
+Rows are compared as tests/oracle_harness.py canonicalises them, the
+tier-1 replica's rule. A mismatch prints what differs (columns, row
+count or values) and, for values, the first differing rows of each side.
 Exit code 0 iff every oracled query hash-matches at every sf.
 """
 
@@ -26,33 +27,9 @@ _REPO = Path(__file__).resolve().parent.parent
 if str(_REPO) not in sys.path:
     sys.path.insert(0, str(_REPO))
 
-import duckdb  # noqa: E402
-
 import __spark_entry__ as e  # noqa: E402
 from snackfs_spark.session import get_spark  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def _mismatch(sp, od) -> str | None:
-    """None if the two frames hold the same rows in any order (compared
-    as strings), else what differs."""
-    cols = sorted(sp.columns)
-    if cols != sorted(od.columns):
-        return f"COLUMN MISMATCH {cols} vs {sorted(od.columns)}"
-    a = sp[cols].sort_values(cols).reset_index(drop=True).astype(str)
-    b = od[cols].sort_values(cols).reset_index(drop=True).astype(str)
-    if len(a) != len(b):
-        return f"ROW COUNT {len(a)} vs {len(b)}"
-    if a.equals(b):
-        return None
-    diff = (a != b).any(axis=1)
-    return (
-        f"VALUE MISMATCH on {int(diff.sum())} rows\n"
-        f"spark:\n{a[diff].head(5)}\noracle:\n{b[diff].head(5)}"
-    )
+from tests.oracle_harness import compare, duckdb_connection  # noqa: E402
 
 
 def main() -> int:
@@ -82,21 +59,16 @@ def main() -> int:
     failed = False
     for sf in sfs:
         sf_dir = sf if "/" in sf else f"/root/testdata/sf{sf}"
-        con = duckdb.connect()
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/{t}.parquet')"
-            )
+        con = duckdb_connection(sf_dir)
         bad = []
         for name in names:
             sp = qs[name](spark, sf_dir).toPandas()
             if name not in osql:
                 continue
-            problem = _mismatch(sp, con.execute(osql[name]).fetchdf())
-            if problem:
+            problems = compare(sp, con.execute(osql[name]).fetchdf())
+            if problems:
                 bad.append(name)
-                print(f"sf{sf} {name}: {problem}")
+                print(f"sf{sf} {name}: {'; '.join(problems)}")
         print(f"sf{sf} checked {sum(n in osql for n in names)} oracled queries")
         print(f"sf{sf} MISMATCHES:", bad or "none")
         failed = failed or bool(bad)
