@@ -72,7 +72,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import SparkSession
 
-    from snackfs_spark.catalog import SnackCatalog
+    from snackfs_spark.catalog import SnackCatalog, in_subtree
     from snackfs_spark.session import get_spark
 
     # getOrCreate may hand us a session someone else owns (tests, a
@@ -144,9 +144,7 @@ def main(argv: list[str] | None = None) -> int:
         from snackfs_spark.sources.writer import cp_subtree
 
         new_files, _ = cp_subtree(cat.files, cat.content, args.src, args.dst)
-        copies = new_files.filter(
-            F.col("path").startswith(args.dst + "/") | (F.col("path") == args.dst)
-        )
+        copies = new_files.filter(in_subtree(args.dst))
         if copies.limit(1).count() == 0:
             print(f"cp: {args.src}: no such file or directory", file=sys.stderr)
             rc = 1

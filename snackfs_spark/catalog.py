@@ -29,8 +29,36 @@ def ordered_concat(*order_cols: str) -> F.Column:
     )
 
 
-def _subtree(path: str) -> F.Column:
+def reassemble_chunks(chunks: DataFrame) -> DataFrame:
+    """THE sub-block -> text mapping: (path, sub_offset, piece) rows ->
+    (path, text). Two levels, mirroring the reference's block hierarchy
+    (BlockInputStream reads per block, never whole-file buffers):
+    sub-blocks concat into block rows first, so every intermediate
+    aggregation buffer is bounded at BLOCK_CHARS, and only the per-file
+    assembly sees block-sized pieces. Any chunk source works — the
+    content view, the writer's output, the snackstore connector — since
+    block_idx is re-derived from the offset."""
+    blocks = _block_pieces(chunks)
+    return blocks.groupBy("path").agg(ordered_concat("block_idx").alias("text"))
+
+
+def _block_pieces(chunks: DataFrame) -> DataFrame:
+    block_idx = F.expr(f"sub_offset div {fsmodel.BLOCK_CHARS}").alias("block_idx")
+    return chunks.groupBy("path", block_idx).agg(
+        ordered_concat("sub_offset").alias("piece")
+    )
+
+
+def in_subtree(path: str) -> F.Column:
+    """`path` is `path` itself or lies under it (a prefix range scan)."""
     return F.col("path").startswith(path + "/") | (F.col("path") == path)
+
+
+def moved_path(src: str, dst: str) -> F.Column:
+    """A subtree path with its `src` prefix replaced by `dst` — anchored
+    substring arithmetic, not replaceFirst (avoids the reference's
+    mid-path collision hazard at RenameCommand.scala:52)."""
+    return F.concat(F.lit(dst), F.expr(f"substring(path, {len(src) + 1})"))
 
 
 class SnackCatalog:
@@ -74,7 +102,7 @@ class SnackCatalog:
 
     def lsr(self, path: str) -> DataFrame:
         """Deep listing (ThriftStore.scala:482,534-540): prefix range scan."""
-        return self.files.filter(_subtree(path)).select("path", "is_dir", "size")
+        return self.files.filter(in_subtree(path)).select("path", "is_dir", "size")
 
     def du(self, path: str) -> DataFrame:
         """Per-child subtree byte totals (FsShell.du; SnackFSShellSpec
@@ -90,13 +118,13 @@ class SnackCatalog:
 
     def dus(self, path: str) -> DataFrame:
         """Single subtree total (SnackFSShell.scala:368-370)."""
-        return self.files.filter(_subtree(path) & ~F.col("is_dir")).agg(
+        return self.files.filter(in_subtree(path) & ~F.col("is_dir")).agg(
             F.sum("size").alias("bytes"), F.count(F.lit(1)).alias("files")
         )
 
     def count(self, path: str) -> DataFrame:
         """#dirs / #files / bytes under path (SnackFSShell.scala:536-548)."""
-        return self.files.filter(_subtree(path)).agg(
+        return self.files.filter(in_subtree(path)).agg(
             F.sum(F.when(F.col("is_dir"), 1).otherwise(0)).alias("dir_count"),
             F.sum(F.when(F.col("is_dir"), 0).otherwise(1)).alias("file_count"),
             F.sum(F.when(F.col("is_dir"), 0).otherwise(F.col("size"))).alias(
@@ -137,14 +165,10 @@ class SnackCatalog:
     # ---- namespace mutations as plans (rename/delete/mkdirs) -------
 
     def rename_plan(self, src: str, dst: str) -> DataFrame:
-        """Subtree path rewrite (RenameCommand.scala:42-59) — anchored
-        substring arithmetic, not replaceFirst (avoids the reference's
-        mid-path collision hazard at RenameCommand.scala:52)."""
-        return self.files.filter(_subtree(src)).select(
+        """Subtree path rewrite (RenameCommand.scala:42-59)."""
+        return self.files.filter(in_subtree(src)).select(
             F.col("path").alias("old_path"),
-            F.concat(F.lit(dst), F.expr(f"substring(path, {len(src) + 1})")).alias(
-                "new_path"
-            ),
+            moved_path(src, dst).alias("new_path"),
             "is_dir",
             "size",
         )
@@ -152,7 +176,7 @@ class SnackCatalog:
     def delete_survivors(self, path: str) -> DataFrame:
         """Recursive delete (DeleteCommand.scala:34-75) as the surviving
         set — one prefix-predicate rewrite, no per-node recursion."""
-        return self.files.filter(~_subtree(path))
+        return self.files.filter(~in_subtree(path))
 
     def mkdirs_closure(self) -> DataFrame:
         """All ancestor dirs of all files (MakeDirectoryCommand.scala:59-76)
@@ -177,22 +201,13 @@ class SnackCatalog:
 
     def read(self) -> DataFrame:
         """Full-file reassembly for every file
-        (FileSystemInputStream.scala:78-144): (path, text).
-
-        TWO-LEVEL concat mirroring the reference's block hierarchy
-        (BlockInputStream reads per block, never whole-file buffers):
-        sub-blocks first concat into block rows — every intermediate
-        aggregation buffer is bounded at BLOCK_CHARS — and only the
-        final per-file assembly sees block-sized pieces. With the
-        reference's real sizes (8 MB sub-blocks, 128 MB blocks) the
-        single-level version would collect every sub-block struct of a
-        multi-GB file into one aggregation buffer; the hierarchy bounds
-        that at 16 structs per block row (VERDICT r2 #2)."""
-        c = self.content.withColumnRenamed("payload", "piece")
-        blocks = c.groupBy("path", "block_idx").agg(
-            ordered_concat("sub_idx").alias("piece")
-        )
-        return blocks.groupBy("path").agg(ordered_concat("block_idx").alias("text"))
+        (FileSystemInputStream.scala:78-144): (path, text), through the
+        two-level reassemble_chunks — with the reference's real sizes
+        (8 MB sub-blocks, 128 MB blocks) a single-level concat would
+        collect every sub-block of a multi-GB file into one aggregation
+        buffer; the hierarchy bounds that at 16 structs per block row
+        (VERDICT r2 #2)."""
+        return reassemble_chunks(self.content.withColumnRenamed("payload", "piece"))
 
     def open(self, path: str) -> str:
         """Open ONE file and return its reassembled content, with the
@@ -251,13 +266,10 @@ class SnackCatalog:
 
     def getmerge(self) -> DataFrame:
         """Per-directory ordered concat (SnackFSShell.scala:608-613).
-        Same two-level hierarchy as read(): sub-blocks roll up into
-        block rows first, so only the final per-directory assembly (the
-        output row, inherently directory-sized) handles large strings."""
-        c = self.content.withColumnRenamed("payload", "piece")
-        blocks = c.groupBy("path", "block_idx").agg(
-            ordered_concat("sub_idx").alias("piece")
-        )
+        Same first level as read(): sub-blocks roll up into block rows,
+        so only the final per-directory assembly (the output row,
+        inherently directory-sized) handles large strings."""
+        blocks = _block_pieces(self.content.withColumnRenamed("payload", "piece"))
         parts = F.split(F.col("path"), "/")
         return (
             blocks.withColumn("dir", F.array_join(F.slice(parts, 1, 3), "/"))

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from snackfs_spark.functions import md5_bucket
 from snackfs_spark.memo import shared
 from snackfs_spark.registry import register
 from snackfs_spark.sources.tables import load_table
@@ -26,9 +27,6 @@ KMEANS_K = 8          # initial centroids = vectors with vec_id 0..K-1
 KMEANS_ITERS = 2      # fixed rounds => SQL-unrollable, fully deterministic
 SEMDEDUP_TAU = 0.35   # within-cluster cosine above this = semantic dup
 
-_L2 = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), 0D, (s, v) -> s + v)"
-)
 _L2_DUCK = (
     "list_reduce(list_transform(range(1, 65), i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])), (x, y) -> x + y)"
 )
@@ -508,8 +506,9 @@ def split_semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the threshold and the worst (max) cosine; max over portable
     doubles is itself portable, so the row hashes exactly."""
     v, _ = semantic_scaled_dropped(spark, sf_dir)
-    h = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15)
-    v = v.withColumn("split_bucket", (F.conv(h, 16, 10).cast("long") % 100).cast("int"))
+    v = v.withColumn(
+        "split_bucket", md5_bucket(F.col("vec_id").cast("string"), 100).cast("int")
+    )
     train = v.filter(F.col("split_bucket") < TRAIN_PCT).alias("t")
     ev = v.filter(F.col("split_bucket") >= TRAIN_PCT).alias("e")
     dot = "aggregate(zip_with(t.ev, e.ev, (x, y) -> x * y), 0D, (s, z) -> s + z)"

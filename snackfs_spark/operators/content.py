@@ -7,11 +7,12 @@ The oracle for these is the ORIGINAL `documents.text` — a fully
 independent computation path — so any chunking/ordering/trim bug shows up
 as a hash mismatch rather than being mirrored in the oracle.
 
-Reassembly pattern: collect_list(struct(order_key, payload)) →
-sort_array → array_join. The sort happens per group inside the
-aggregate (no global orderBy), so a 100 TB content table reassembles
-each file within its own hash partition — shuffle is one row per
-(file, chunk), never a global sort.
+Reassembly is catalog.reassemble_chunks, the one sub-block -> text
+mapping (chunking is fsmodel.chunk_text): collect_list(struct(order_key,
+payload)) → sort_array → array_join, per block then per file. The sort
+happens per group inside the aggregate (no global orderBy), so a 100 TB
+content table reassembles each file within its own hash partition —
+shuffle is one row per (file, chunk), never a global sort.
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from snackfs_spark import workdir
-from snackfs_spark.catalog import SnackCatalog, ordered_concat
+from snackfs_spark.catalog import SnackCatalog, reassemble_chunks
 from snackfs_spark.registry import register
 from snackfs_spark.sources.fsmodel import content_df, fs_sql
 
@@ -29,22 +30,6 @@ RANGE_LEN = 150
 TAIL_CHARS = 100    # Q-TAIL (reference uses 1 KB; scaled to the 64-char chunks)
 
 _DOC_PATH_SQL = "'/data/' || source || '/doc_' || CAST(doc_id AS VARCHAR) || '.txt'"
-
-
-def reassemble_chunks(content: DataFrame) -> DataFrame:
-    """(path, sub_offset, piece) rows → (path, text), via the two-level
-    block hierarchy: sub-blocks concat into block rows first (every
-    aggregation buffer bounded at BLOCK_CHARS — the reference's
-    BlockInputStream never holds more than one block either), then the
-    per-file assembly concats block-sized pieces in block order."""
-    from snackfs_spark.sources.fsmodel import BLOCK_CHARS
-
-    blocks = (
-        content.withColumn("block_idx", F.expr(f"sub_offset div {BLOCK_CHARS}"))
-        .groupBy("path", "block_idx")
-        .agg(ordered_concat("sub_offset").alias("piece"))
-    )
-    return blocks.groupBy("path").agg(ordered_concat("block_idx").alias("text"))
 
 
 @register(

@@ -152,10 +152,7 @@ def minhash_signature_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole signature, and partial aggregation collapses each task's
     shingles to a single 16-column row before it ships."""
     sh = shingles_df(spark, sf_dir, distinct=False)
-    h31 = (
-        F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long")
-        % 2147483647
-    )
+    h31 = md5_bucket(F.col("shingle"), 2147483647)
     return sh.groupBy("doc_id").agg(
         *[
             F.min((((2 * p + 3) * h31) + 99991 * p) % 2147483647).alias(f"mh{p}")
@@ -1682,8 +1679,6 @@ def dedup_tf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # machinery measures exactly that recall), and the verify below is
 # unchanged — the oracle runs the SAME candidate set, so parity checks
 # the verify semantics, not band recall.
-CONTAIN_T_NUM = 4   # threshold 4/5 = 0.8
-CONTAIN_T_DEN = 5
 
 
 @register(

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from snackfs_spark.functions import dsum, dsum_lattice, money, rate
-from snackfs_spark.functions import ts_str
+from snackfs_spark.functions import md5_fp, ts_str
 from snackfs_spark.memo import materialize_shared, shared
 from snackfs_spark.registry import register
 from snackfs_spark.sources.tables import fan_out, load_table
@@ -2569,9 +2569,7 @@ def hll_type_regs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_distinct_hll_merged and approx_overlap_hll each re-derived
     per call."""
     pairs = type_user_pairs_df(spark, sf_dir)
-    v = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    v = md5_fp(F.col("user_id").cast("string"))
     w = F.col("v").bitwiseAND(F.lit((1 << HLL_WBITS) - 1))
     r = F.when(w > 0, F.lit(HLL_WBITS + 1) - F.length(F.bin(w))).otherwise(
         F.lit(HLL_WBITS + 1)
@@ -4015,9 +4013,7 @@ def approx_hll_daily_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     until the one portable float estimate per day."""
     ev = fan_out(load_table(spark, sf_dir, "events"), spark)
     day = F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd")
-    v = F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10).cast(
-        "long"
-    )
+    v = md5_fp(F.col("user_id").cast("string"))
     w_mask = F.col("v").bitwiseAND(F.lit((1 << HLL_WBITS) - 1))
     r = F.when(w_mask > 0, F.lit(HLL_WBITS + 1) - F.length(F.bin(w_mask))).otherwise(
         F.lit(HLL_WBITS + 1)

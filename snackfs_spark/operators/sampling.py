@@ -19,7 +19,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from snackfs_spark.functions import STOPWORD_PERMILLE_SPARK, STOPWORD_PERMILLE_SQL, md5_fp
+from snackfs_spark.functions import (
+    STOPWORD_PERMILLE_SPARK,
+    STOPWORD_PERMILLE_SQL,
+    md5_bucket,
+    md5_fp,
+)
 from snackfs_spark.operators.dedup import (
     SHINGLES_CTE,
     distinct_shingles_df,
@@ -39,8 +44,7 @@ def _bucket(doc_id: Column) -> Column:
     """Deterministic 0-99 bucket from the doc key: md5 of the decimal
     string rendering, first 15 hex digits (60 bits, exact in int64), mod
     100. Identical arithmetic to `_BUCKET_SQL` on the DuckDB side."""
-    h = F.substring(F.md5(doc_id.cast("string")), 1, 15)
-    return (F.conv(h, 16, 10).cast("long") % 100).cast("int")
+    return md5_bucket(doc_id.cast("string"), 100).cast("int")
 
 
 def _split(bucket: Column) -> Column:
@@ -210,8 +214,7 @@ _MIX_BUCKET_SQL = (
 
 
 def _mix_bucket(doc_id: Column) -> Column:
-    h = F.substring(F.md5(F.concat(F.lit("mix|"), doc_id.cast("string"))), 1, 15)
-    return (F.conv(h, 16, 10).cast("long") % 100).cast("int")
+    return md5_bucket(F.concat(F.lit("mix|"), doc_id.cast("string")), 100).cast("int")
 
 
 @register(
@@ -899,9 +902,7 @@ def importance_sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     feats = pairs.select(
         "doc_id",
-        (F.conv(F.substring(F.md5("bg"), 1, 15), 16, 10).cast("long") % DSIR_NF)
-        .cast("int")
-        .alias("f"),
+        md5_bucket(F.col("bg"), DSIR_NF).cast("int").alias("f"),
     )
     tgt = docs.filter(F.col("lang") == DSIR_TARGET_LANG).select("doc_id")
     cr = feats.groupBy("f").agg(F.count(F.lit(1)).alias("cr"))
@@ -1438,13 +1439,11 @@ def training_order_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shard count = writer parallelism (same knob as pack_sequences'
     shards). Hash-uniform shards are skew-free by construction."""
     docs = load_table(spark, sf_dir, "documents")
-    rnd = F.md5(F.concat(F.lit(f"{SHUFFLE_SALT}|"), F.col("doc_id").cast("string")))
+    salted = F.concat(F.lit(f"{SHUFFLE_SALT}|"), F.col("doc_id").cast("string"))
     h = docs.select(
         "doc_id",
-        rnd.alias("rnd"),
-        (F.conv(F.substring(rnd, 1, 15), 16, 10).cast("long") % SHUFFLE_SHARDS).alias(
-            "shard"
-        ),
+        F.md5(salted).alias("rnd"),
+        md5_bucket(salted, SHUFFLE_SHARDS).alias("shard"),
     )
     w = Window.partitionBy("shard").orderBy("rnd", "doc_id")
     return h.select(
@@ -1674,8 +1673,6 @@ def corpus_takedown_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from snackfs_spark.sources.fsmodel import content_df, _doc_path
 
     docs = load_table(spark, sf_dir, "documents")
-    from snackfs_spark.functions import md5_bucket
-
     target = docs.filter(
         md5_bucket(F.col("doc_id").cast("string"), TAKEDOWN_BUCKET) == 7
     )

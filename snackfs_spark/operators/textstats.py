@@ -3366,7 +3366,6 @@ def text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # over the DISTINCT-frequency relation) so no global window ever sees
 # the vocab relation; octave = length(bin(rank)) - 1, the same
 # binary-length bucket trick as text_vocab_growth.
-ZIPF_TIE_ORDER = "word ASC"  # deterministic within equal frequencies
 
 
 @register(

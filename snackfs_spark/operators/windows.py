@@ -2233,7 +2233,6 @@ def orders_open_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
 # clamped >= open) by how many months they have been open — the
 # accounts-receivable-style "0-1 / 2-3 / 4-6 / 7+" exposure table, with
 # order counts and exact cents value per bucket.
-AGING_BUCKETS = ((0, 1), (2, 3), (4, 6), (7, None))
 
 
 @register(

@@ -23,6 +23,11 @@ deterministically from the driver's tables:
             (stands in for Murmur3 at :567-568; pure int64 arithmetic so
             Spark and DuckDB agree bit-for-bit)
 
+This module owns the content layout: SUB_CHARS/BLOCK_CHARS and
+chunk_text, the one text -> sub-block mapping (the writer, append and
+the content view all call it; an empty text has no chunk rows). The
+inverse, chunks -> text, is catalog.reassemble_chunks.
+
 Each relation exists twice, by construction identical: a Spark DataFrame
 builder and a DuckDB CTE string. Queries compose the Spark side; oracles
 prepend the CTE. Many queries per session read the same view, so each
@@ -33,7 +38,7 @@ fixture.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from snackfs_spark.memo import shared
@@ -153,67 +158,82 @@ def files_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -------------------------------------------------------------- content ----
 
 CONTENT_CTE = f"""content AS (
-  SELECT {_PATH_EXPR} AS path,
-         CAST(i // {SUBS_PER_BLOCK} AS INT) AS block_idx,
-         CAST(i % {SUBS_PER_BLOCK} AS INT) AS sub_idx,
-         CAST((i // {SUBS_PER_BLOCK}) * {BLOCK_CHARS} AS BIGINT) AS block_offset,
-         CAST(i * {SUB_CHARS} AS BIGINT) AS sub_offset,
-         CAST(length(substr(text, CAST(i * {SUB_CHARS} + 1 AS INT), {SUB_CHARS})) AS BIGINT) AS length,
-         substr(text, CAST(i * {SUB_CHARS} + 1 AS INT), {SUB_CHARS}) AS payload
+  SELECT path, block_idx, sub_idx, block_offset, sub_offset,
+         CAST(length(payload) AS BIGINT) AS length, payload
   FROM (
-    SELECT doc_id, source, text,
-           unnest(range(0, CAST(ceil(n_chars / {SUB_CHARS}.0) AS BIGINT))) AS i
-    FROM documents
+    SELECT {_PATH_EXPR} AS path,
+           CAST(i // {SUBS_PER_BLOCK} AS INT) AS block_idx,
+           CAST(i % {SUBS_PER_BLOCK} AS INT) AS sub_idx,
+           CAST((i // {SUBS_PER_BLOCK}) * {BLOCK_CHARS} AS BIGINT) AS block_offset,
+           CAST(i * {SUB_CHARS} AS BIGINT) AS sub_offset,
+           substr(text, CAST(i * {SUB_CHARS} + 1 AS INT), {SUB_CHARS}) AS payload
+    FROM (
+      SELECT doc_id, source, text,
+             unnest(range(0, CAST(ceil(n_chars / {SUB_CHARS}.0) AS BIGINT))) AS i
+      FROM documents
+    )
   )
 )"""
+
+
+def _chunk_indices(n: Column, width: int) -> Column:
+    """Explode 0 .. ceil(n / width) - 1: the indices of the width-char
+    chunks of an n-char text. Zero-length texts expand to NO chunks —
+    Spark's sequence(0, -1) would otherwise emit a descending [0, -1],
+    diverging from the oracle CTEs' empty range(0, 0)."""
+    return F.explode(
+        F.when(
+            n > 0,
+            F.sequence(F.lit(0).cast("long"), F.ceil(n / width).cast("long") - 1),
+        ).otherwise(F.array().cast("array<long>"))
+    )
+
+
+def chunk_text(
+    df: DataFrame,
+    path_col: str | Column = "path",
+    text_col: str | Column = "text",
+    base: int | Column = 0,
+) -> DataFrame:
+    """One row per SUB_CHARS slice of each (path, text) row, with
+    (block_idx, sub_idx, block_offset, sub_offset, length, payload).
+    The columns take a name or a Column. `base` is the char offset of
+    the first chunk — 0 for a new file, the old size for an append,
+    whose chunks then continue the offset sequence without re-aligning
+    to the sub-block grid (length <= SUB_CHARS is all the layout
+    promises). An empty text has no chunk rows.
+
+    The expansion is a generator in the projection: no shuffle, and a
+    file's chunks stay in the partition that read it."""
+    path = F.col(path_col) if isinstance(path_col, str) else path_col
+    text = F.col(text_col) if isinstance(text_col, str) else text_col
+    start = base if isinstance(base, Column) else F.lit(base)
+    off = F.col("__base") + F.col("i") * SUB_CHARS
+    piece = F.expr(f"substring(__text, cast(i * {SUB_CHARS} + 1 as int), {SUB_CHARS})")
+    return df.select(
+        path.alias("path"),
+        text.alias("__text"),
+        start.cast("long").alias("__base"),
+        _chunk_indices(F.length(text), SUB_CHARS).alias("i"),
+    ).select(
+        "path",
+        (off / BLOCK_CHARS).cast("int").alias("block_idx"),
+        ((off % BLOCK_CHARS) / SUB_CHARS).cast("int").alias("sub_idx"),
+        (F.floor(off / BLOCK_CHARS) * BLOCK_CHARS).cast("long").alias("block_offset"),
+        off.cast("long").alias("sub_offset"),
+        F.length(piece).cast("long").alias("length"),
+        piece.alias("payload"),
+    )
 
 
 @shared
 def content_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The chunked `content` relation: one row per sub-block, exactly the
     reference's sblock layout (one column per sub-block,
-    ThriftStore.scala:352-365) re-expressed as rows.
-
-    The chunk expansion is a generator expression inside the scan project —
-    no shuffle; chunks of a file stay in the partition that read the file,
-    which is what makes per-file reassembly cheap at scale."""
+    ThriftStore.scala:352-365) re-expressed as rows — chunk_text over
+    the documents, cached."""
     docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
-    return (
-        docs.select(
-            _doc_path().alias("path"),
-            F.col("text"),
-            # Zero-length files expand to NO chunks — Spark's
-            # sequence(0, -1) would otherwise emit a descending [0, -1],
-            # diverging from the oracle CTE's empty range(0, 0).
-            F.explode(
-                F.when(
-                    F.col("n_chars") > 0,
-                    F.sequence(
-                        F.lit(0).cast("long"),
-                        F.ceil(F.col("n_chars") / SUB_CHARS).cast("long") - 1,
-                    ),
-                ).otherwise(F.array().cast("array<long>"))
-            ).alias("i"),
-        )
-        .select(
-            "path",
-            (F.col("i") / SUBS_PER_BLOCK).cast("int").alias("block_idx"),
-            (F.col("i") % SUBS_PER_BLOCK).cast("int").alias("sub_idx"),
-            ((F.floor(F.col("i") / SUBS_PER_BLOCK)) * BLOCK_CHARS)
-            .cast("long")
-            .alias("block_offset"),
-            (F.col("i") * SUB_CHARS).cast("long").alias("sub_offset"),
-            F.length(
-                F.expr(f"substring(text, cast(i * {SUB_CHARS} + 1 as int), {SUB_CHARS})")
-            )
-            .cast("long")
-            .alias("length"),
-            F.expr(
-                f"substring(text, cast(i * {SUB_CHARS} + 1 as int), {SUB_CHARS})"
-            ).alias("payload"),
-        )
-        .cache()
-    )
+    return chunk_text(docs, _doc_path()).cache()
 
 
 # ---------------------------------------------------------------- locks ----
@@ -290,16 +310,7 @@ def blocks_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         _doc_path().alias("path"),
         "doc_id",
-        # Same empty-file guard as the content relation (oracle: range(0,0)).
-        F.explode(
-            F.when(
-                F.col("n_chars") > 0,
-                F.sequence(
-                    F.lit(0).cast("long"),
-                    F.ceil(F.col("n_chars") / BLOCK_CHARS).cast("long") - 1,
-                ),
-            ).otherwise(F.array().cast("array<long>"))
-        ).alias("block_idx"),
+        _chunk_indices(F.col("n_chars"), BLOCK_CHARS).alias("block_idx"),
     ).select(
         "path",
         F.col("block_idx").cast("int").alias("block_idx"),

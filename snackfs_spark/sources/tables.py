@@ -13,6 +13,7 @@ nothing else changes.
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,12 +31,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-# Dimension tables small enough to broadcast at any scale factor; at 100 TB
-# these stay O(KB-MB) while facts grow, so broadcast hints on them are safe.
-BROADCAST_DIMS = ("region", "nation", "supplier")
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def fan_out(df: DataFrame, spark: SparkSession) -> DataFrame:
@@ -63,30 +58,36 @@ def fan_out(df: DataFrame, spark: SparkSession) -> DataFrame:
     return df
 
 
+def read_events(spark: SparkSession, read: Callable[[], DataFrame]) -> DataFrame:
+    """The events table as `read()` (a batch or a stream read) surfaces
+    it, with `ts` normalized to a session-UTC timestamp — the ONE
+    events.ts rule, shared by the batch loader and the stream.
+
+    The fixture's events.parquet stores ts as TIMESTAMP(NANOS), which
+    Spark's parquet reader rejects outright. Read nanos as long (runtime
+    SQL conf, works on any session handed to us) and convert to a micros
+    timestamp — the values are micro-aligned, and DuckDB also surfaces
+    this column at micro precision, so the conversion is lossless and
+    oracle-exact. An events table written by another engine (e.g. the
+    sf1 stress fixture) already has a real timestamp; NTZ becomes the
+    session-UTC instant type so downstream epoch casts work the same on
+    either encoding."""
+    from pyspark.sql import functions as F
+
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = read()
+    ts_type = dict(df.dtypes)["ts"]
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
 def _read_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        # events.parquet stores ts as TIMESTAMP(NANOS), which Spark's
-        # parquet reader rejects outright. Read nanos as long (runtime SQL
-        # conf, works on any session handed to us) and convert to a
-        # micros timestamp — the values are micro-aligned, and DuckDB
-        # also surfaces this column at micro precision, so the
-        # conversion is lossless and oracle-exact.
-        from pyspark.sql import functions as F
-
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        # Only the driver's raw files carry the nanos-as-long column; an
-        # events table written by another engine (e.g. the sf1 stress
-        # fixture) already has a real timestamp. Normalize NTZ to the
-        # session-UTC instant type so downstream epoch casts work the
-        # same on either encoding.
-        ts_type = dict(df.dtypes)["ts"]
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
+        return read_events(spark, lambda: spark.read.parquet(path))
     return spark.read.parquet(path)
 
 

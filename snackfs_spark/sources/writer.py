@@ -3,18 +3,20 @@ stream re-expressed as declarative Spark jobs.
 
 Reference semantics reproduced:
   - fixed-size sub-block slicing at ingest (FileSystemOutputStream.scala:
-    55-101: buffer, flush every subBlockSize bytes)
-  - block rollup every SUBS_PER_BLOCK sub-blocks (:103-120)
+    55-101: buffer, flush every subBlockSize bytes) and the block rollup
+    (:103-120): fsmodel.chunk_text, the one text -> sub-block mapping,
+    re-exported here; reassembly is catalog.reassemble_chunks
   - metadata (INode/files row) committed ONCE per job — not re-upserted
     per block like the reference (its O(blocks²) write amplification,
     :103-120, is a bug we deliberately do not reproduce)
   - append SUPPORTED: the reference throws "Appending to existing file is
     not supported" (AppendFileCommand.scala:32-41); here appended chunks
-    continue the existing offset sequence
+    continue the existing offset sequence (chunk_text from the old size)
   - put/copyFromLocal (SnackFSShell.scala:601-607): binaryFile ingest
   - cp (SnackFSShell.scala:464-500): subtree copy = path rewrite over
     metadata + content, no byte re-chunking
-  - touchz (SnackFSShell.scala:380-382): zero-length metadata row
+  - touchz (SnackFSShell.scala:380-382): zero-length metadata row —
+    like every empty file, a `files` row with no chunk rows
 
 All writers parallelize by file: chunk expansion happens in the scan
 projection (no shuffle), and output parquet is partitioned so a file's
@@ -26,45 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from snackfs_spark.sources.fsmodel import BLOCK_CHARS, SUB_CHARS, SUBS_PER_BLOCK
-
-
-def chunk_text(df: DataFrame, path_col: str = "path", text_col: str = "text") -> DataFrame:
-    """Slice (path, text) rows into the content layout: one row per
-    sub-block with (block_idx, sub_idx, offsets, length, payload).
-    Generator expression in the projection — zero shuffle."""
-    return (
-        df.select(
-            F.col(path_col).alias("path"),
-            F.col(text_col).alias("__text"),
-            F.explode(
-                F.sequence(
-                    F.lit(0).cast("long"),
-                    F.greatest(
-                        F.ceil(F.length(text_col) / SUB_CHARS).cast("long") - 1,
-                        F.lit(0).cast("long"),
-                    ),
-                )
-            ).alias("i"),
-        )
-        .select(
-            "path",
-            (F.col("i") / SUBS_PER_BLOCK).cast("int").alias("block_idx"),
-            (F.col("i") % SUBS_PER_BLOCK).cast("int").alias("sub_idx"),
-            (F.floor(F.col("i") / SUBS_PER_BLOCK) * BLOCK_CHARS)
-            .cast("long")
-            .alias("block_offset"),
-            (F.col("i") * SUB_CHARS).cast("long").alias("sub_offset"),
-            F.length(
-                F.expr(f"substring(__text, cast(i * {SUB_CHARS} + 1 as int), {SUB_CHARS})")
-            )
-            .cast("long")
-            .alias("length"),
-            F.expr(
-                f"substring(__text, cast(i * {SUB_CHARS} + 1 as int), {SUB_CHARS})"
-            ).alias("payload"),
-        )
-    )
+from snackfs_spark.catalog import in_subtree, moved_path
+from snackfs_spark.sources.fsmodel import BLOCK_CHARS, chunk_text
 
 
 def files_metadata(df: DataFrame, path_col: str = "path", text_col: str = "text") -> DataFrame:
@@ -124,55 +89,13 @@ def ingest_binary_dir(spark: SparkSession, local_dir: str, fs_prefix: str = "/in
 def append_text(existing_content: DataFrame, additions: DataFrame) -> DataFrame:
     """append (refused by the reference, AppendFileCommand.scala:32-41;
     supported here): new chunks continue each file's offset sequence.
-    additions = (path, text) rows for files already in existing_content."""
+    additions = (path, text) rows for files already in existing_content;
+    an empty addition adds no rows."""
     tail = existing_content.groupBy("path").agg(
         F.max(F.col("sub_offset") + F.col("length")).alias("old_size")
     )
     joined = additions.join(tail, "path", "left").na.fill({"old_size": 0})
-    appended = (
-        joined.select(
-            "path",
-            "old_size",
-            F.col("text").alias("__text"),
-            F.explode(
-                F.sequence(
-                    F.lit(0).cast("long"),
-                    F.greatest(
-                        F.ceil(F.length("text") / SUB_CHARS).cast("long") - 1,
-                        F.lit(0).cast("long"),
-                    ),
-                )
-            ).alias("i"),
-        )
-        # NB: appended chunks are offset-continuous but not re-aligned to
-        # the 64-char grid when old_size % 64 != 0 — same layout freedom
-        # the sub-block model already allows (length <= SUB_CHARS).
-        .select(
-            "path",
-            ((F.col("old_size") + F.col("i") * SUB_CHARS) / BLOCK_CHARS)
-            .cast("int")
-            .alias("block_idx"),
-            (((F.col("old_size") + F.col("i") * SUB_CHARS) % BLOCK_CHARS) / SUB_CHARS)
-            .cast("int")
-            .alias("sub_idx"),
-            (
-                F.floor((F.col("old_size") + F.col("i") * SUB_CHARS) / BLOCK_CHARS)
-                * BLOCK_CHARS
-            )
-            .cast("long")
-            .alias("block_offset"),
-            (F.col("old_size") + F.col("i") * SUB_CHARS).cast("long").alias("sub_offset"),
-            F.length(
-                F.expr(f"substring(__text, cast(i * {SUB_CHARS} + 1 as int), {SUB_CHARS})")
-            )
-            .cast("long")
-            .alias("length"),
-            F.expr(
-                f"substring(__text, cast(i * {SUB_CHARS} + 1 as int), {SUB_CHARS})"
-            ).alias("payload"),
-        )
-    )
-    return existing_content.unionByName(appended)
+    return existing_content.unionByName(chunk_text(joined, base=F.col("old_size")))
 
 
 def touchz(files: DataFrame, spark: SparkSession, path: str) -> DataFrame:
@@ -193,8 +116,7 @@ def touchz(files: DataFrame, spark: SparkSession, path: str) -> DataFrame:
 def cp_subtree(files: DataFrame, content: DataFrame, src: str, dst: str):
     """cp -r (SnackFSShell.scala:464-500): metadata + content path rewrite
     under the destination prefix. Chunks are copied as-is (no re-chunk)."""
-    in_src = F.col("path").startswith(src + "/") | (F.col("path") == src)
-    rewrite = F.concat(F.lit(dst), F.expr(f"substring(path, {len(src) + 1})"))
+    in_src, rewrite = in_subtree(src), moved_path(src, dst)
     new_files = files.filter(in_src).withColumn("path", rewrite)
     new_content = content.filter(in_src).withColumn("path", rewrite)
     return files.unionByName(new_files, allowMissingColumns=True), content.unionByName(

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from snackfs_spark.functions import ts_str
 from snackfs_spark.registry import register
+from snackfs_spark.sources.tables import load_table, read_events
 
 # ---------------------------------------------------------------------------
 # State-store shard policy (optimization r11; guide §2 "make partitioning
@@ -59,30 +60,28 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events table. Streams require an explicit
     schema, so a cheap batch footer probe decides how ``ts`` is encoded
     on disk — TIMESTAMP(NANOS) surfaced as bigint (older fixtures) or a
-    real micros timestamp — and the stream applies the SAME normalization
-    as the batch loader (tables._read_raw), so plans are interchangeable
-    and both encodings hash to identical output."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    real micros timestamp — and tables.read_events applies the batch
+    loader's normalization, so plans are interchangeable and both
+    encodings hash to identical output."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    probe = (
-        spark.read.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
-    )
-    ts_type = dict(probe.dtypes)["ts"]
-    # FileStreamSource wants a directory; glob-filter down to the events
-    # file (in production this is the events/ landing directory).
-    raw = (
-        spark.readStream.schema(
-            f"event_id bigint, ts {ts_type}, user_id bigint, "
-            "event_type string, value double, props string"
+
+    def read() -> DataFrame:
+        probe = (
+            spark.read.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
         )
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    if ts_type == "bigint":
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if ts_type == "timestamp_ntz":
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+        # FileStreamSource wants a directory; glob-filter down to the
+        # events file (in production this is the events/ landing
+        # directory).
+        return (
+            spark.readStream.schema(
+                f"event_id bigint, ts {dict(probe.dtypes)['ts']}, user_id bigint, "
+                "event_type string, value double, props string"
+            )
+            .option("pathGlobFilter", "events.parquet")
+            .parquet(sf_dir)
+        )
+
+    return read_events(spark, read)
 
 
 def hourly_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -441,8 +440,6 @@ def enrichment_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles to the stream). Customers here, a feature store or dim
     snapshot at scale; the watermarked tumbling aggregate keeps state
     bounded exactly as the plain rollup does."""
-    from snackfs_spark.sources.tables import load_table
-
     ev = stream_events(spark, sf_dir).withWatermark("ts", "2 hours")
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment")

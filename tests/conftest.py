@@ -25,8 +25,9 @@ def stub_session(app_id: str) -> SimpleNamespace:
 # reddening a driver row the repo could not have caught locally). This
 # probe runs once per session, before any Spark test, and fails every
 # test fast with an explicit message if the on-disk dtypes drift outside
-# what the loaders (sources/tables._read_raw, streaming.ingest
-# .stream_events) are built to normalize.
+# what the loaders normalize: events.ts goes through the one rule in
+# sources/tables.read_events, which the batch loader (_read_raw) and the
+# stream (streaming.ingest.stream_events) both call.
 # ---------------------------------------------------------------------------
 
 # column -> set of acceptable pyarrow type strings. Only columns the
@@ -51,7 +52,7 @@ _EXPECTED = {
     },
     "events": {
         "event_id": {"int64"},
-        # the two encodings both loaders probe for + the tz'd variant
+        # the two encodings read_events normalizes + the tz'd variant
         "ts": {"timestamp[us]", "timestamp[ns]", "timestamp[us, tz=UTC]", "int64"},
         "value": {"double"},
     },
@@ -86,8 +87,8 @@ def _probe_testdata_contract() -> list[str]:
                     problems.append(
                         f"{path}: {col} is {got!r}, loaders expect one of "
                         f"{sorted(ok_types)} — driver testdata encoding "
-                        "drifted; update sources/tables._read_raw and "
-                        "streaming.ingest.stream_events normalization"
+                        "drifted; update the normalization in "
+                        "sources/tables.read_events"
                     )
     return problems
 

@@ -75,6 +75,6 @@ def compare(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> list[str]:
 def run_query_pair(spark, con, query, sf_dir: str) -> list[str]:
     sdf = query.fn(spark, sf_dir).toPandas()
     if query.oracle is None:
-        return [] if len(sdf) >= 0 else ["spark query failed"]
+        return []
     odf = con.execute(query.oracle).fetchdf()
     return compare(sdf, odf)

@@ -75,6 +75,42 @@ def test_append_continues_offsets(spark, texts):
         assert o1 + l1 == o2
 
 
+def test_empty_text_has_no_chunks(spark):
+    df = spark.createDataFrame(
+        [("/e/empty.txt", ""), ("/e/one.txt", "z")], "path string, text string"
+    )
+    chunks = writer.chunk_text(df)
+    assert chunks.filter(F.col("path") == "/e/empty.txt").count() == 0
+    assert chunks.count() == 1
+    meta = {r["path"]: r["n_blocks"] for r in writer.files_metadata(df).collect()}
+    assert meta == {"/e/empty.txt": 0, "/e/one.txt": 1}
+
+
+def test_append_of_empty_text_adds_no_rows(spark, texts):
+    base = writer.chunk_text(texts)
+    additions = spark.createDataFrame(
+        [("/w/a.txt", ""), ("/w/new.txt", "")], "path string, text string"
+    )
+    merged = writer.append_text(base, additions)
+    assert merged.count() == base.count()
+    assert merged.exceptAll(base).count() == 0
+
+
+def test_chunk_text_is_the_content_view(spark):
+    """The content view is chunk_text over the documents, row for row."""
+    from snackfs_spark.sources import fsmodel
+    from snackfs_spark.sources.tables import load_table
+    from tests.conftest import SF_SMALL
+
+    docs = load_table(spark, SF_SMALL, "documents")
+    chunks = writer.chunk_text(docs, fsmodel._doc_path(), "text")
+    view = fsmodel.content_df(spark, SF_SMALL)
+    assert chunks.columns == view.columns
+    assert chunks.count() == view.count() > 0
+    assert chunks.exceptAll(view).count() == 0
+    assert view.exceptAll(chunks).count() == 0
+
+
 def test_ingest_binary_dir_roundtrip(spark, var):
     src = var / "localdir"
     src.mkdir(parents=True, exist_ok=True)
@@ -150,7 +186,14 @@ def test_chunk_roundtrip_property(spark):
     def check(payloads):
         rows = [(f"/p/f{i}.txt", t) for i, t in enumerate(payloads)]
         df = spark.createDataFrame(rows, "path string, text string")
-        got = {r["path"]: r["text"] for r in _reassemble(writer.chunk_text(df)).collect()}
+        content = writer.chunk_text(df)
+        # Read back the way SnackCatalog.open does: every file has a
+        # files row, and one with no chunks reads as "".
+        files = writer.files_metadata(df).select("path", "n_blocks")
+        back = files.join(_reassemble(content), "path", "left").na.fill({"text": ""})
+        got = {r["path"]: r["text"] for r in back.collect()}
         assert got == {p: t for p, t in rows}
+        chunked = {r["path"] for r in content.select("path").distinct().collect()}
+        assert chunked == {p for p, t in rows if t}  # empty text: no chunks
 
     check()
