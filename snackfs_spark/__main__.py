@@ -97,14 +97,25 @@ def main(argv: list[str] | None = None) -> int:
             print(f"stat: {args.path}: no such file or directory", file=sys.stderr)
             rc = 1
         else:
-            _show(cat.stat(args.path))
-    elif args.verb == "cat":
-        rows = cat.read().filter(F.col("path") == args.path).collect()
-        if not rows:
-            print(f"cat: {args.path}: no such file", file=sys.stderr)
+            for key, value in rows[0].asDict().items():
+                print(f"{key}: {value}")
+    elif args.verb in ("cat", "get"):
+        # open() carries the reference's errors (OpenFileCommand.scala:43-59)
+        try:
+            text = cat.open(args.path)
+        except FileNotFoundError:
+            print(f"{args.verb}: {args.path}: no such file", file=sys.stderr)
+            rc = 1
+        except IsADirectoryError:
+            print(f"{args.verb}: {args.path}: is a directory", file=sys.stderr)
             rc = 1
         else:
-            print(rows[0]["text"])
+            if args.verb == "cat":
+                print(text)
+            else:
+                with open(args.local_file, "w", encoding="utf-8") as fh:
+                    fh.write(text)
+                print(f"{args.path} -> {args.local_file} ({len(text)} chars)")
     elif args.verb == "tail":
         rows = cat.tail(args.n).filter(F.col("path") == args.path).collect()
         if not rows:
@@ -131,15 +142,6 @@ def main(argv: list[str] | None = None) -> int:
         except Exception as exc:  # missing local dir → shell-style rc
             print(f"put: {args.local_dir}: {exc}", file=sys.stderr)
             rc = 1
-    elif args.verb == "get":
-        rows = cat.read().filter(F.col("path") == args.path).collect()
-        if not rows:
-            print(f"get: {args.path}: no such file", file=sys.stderr)
-            rc = 1
-        else:
-            with open(args.local_file, "w", encoding="utf-8") as fh:
-                fh.write(rows[0]["text"])
-            print(f"{args.path} -> {args.local_file} ({len(rows[0]['text'])} chars)")
     elif args.verb == "cp":
         from snackfs_spark.sources.writer import cp_subtree
 

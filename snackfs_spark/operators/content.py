@@ -23,18 +23,16 @@ from pyspark.sql import functions as F
 from snackfs_spark import workdir
 from snackfs_spark.catalog import SnackCatalog, reassemble_chunks
 from snackfs_spark.registry import register
-from snackfs_spark.sources.fsmodel import content_df, fs_sql
+from snackfs_spark.sources.fsmodel import PATH_SQL, content_df, doc_path, fs_sql
 
 RANGE_START = 100   # Q-RANGE window [100, 250)
 RANGE_LEN = 150
 TAIL_CHARS = 100    # Q-TAIL (reference uses 1 KB; scaled to the 64-char chunks)
 
-_DOC_PATH_SQL = "'/data/' || source || '/doc_' || CAST(doc_id AS VARCHAR) || '.txt'"
-
 
 @register(
     "fs_content",
-    oracle=f"SELECT {_DOC_PATH_SQL} AS path, text FROM documents",
+    oracle=f"SELECT {PATH_SQL} AS path, text FROM documents",
 )
 def fs_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-file reassembly (FileSystemInputStream.scala:78-144; golden
@@ -46,7 +44,7 @@ def fs_content(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "fs_range_read",
     oracle=(
-        f"SELECT {_DOC_PATH_SQL} AS path, "
+        f"SELECT {PATH_SQL} AS path, "
         f"substr(text, {RANGE_START + 1}, {RANGE_LEN}) AS data "
         f"FROM documents WHERE n_chars > {RANGE_START}"
     ),
@@ -64,7 +62,7 @@ def fs_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "fs_tail",
     oracle=(
-        f"SELECT {_DOC_PATH_SQL} AS path, "
+        f"SELECT {PATH_SQL} AS path, "
         f"substr(text, greatest(n_chars - {TAIL_CHARS} + 1, 1)) AS tail_text "
         f"FROM documents"
     ),
@@ -80,7 +78,7 @@ def fs_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fs_getmerge",
     oracle=(
         "SELECT '/data/' || source AS dir, "
-        f"string_agg(text, '' ORDER BY {_DOC_PATH_SQL}) AS merged "
+        f"string_agg(text, '' ORDER BY {PATH_SQL}) AS merged "
         "FROM documents GROUP BY source"
     ),
 )
@@ -93,7 +91,7 @@ def fs_getmerge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fs_len_from_blocks",
-    oracle=f"SELECT {_DOC_PATH_SQL} AS path, CAST(n_chars AS BIGINT) AS computed_size FROM documents",
+    oracle=f"SELECT {PATH_SQL} AS path, CAST(n_chars AS BIGINT) AS computed_size FROM documents",
 )
 def fs_len_from_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File length from nested block metadata (SnackFileStatus.scala:37-43:
@@ -119,7 +117,7 @@ def fs_len_from_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fs_connector_roundtrip",
-    oracle=f"SELECT {_DOC_PATH_SQL} AS path, text FROM documents",
+    oracle=f"SELECT {PATH_SQL} AS path, text FROM documents",
 )
 def fs_connector_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full read path through the custom snackstore data source (the
@@ -273,7 +271,7 @@ def _decode_text(batches):
 @register(
     "fs_text_decode",
     oracle=f"""
-    SELECT {_DOC_PATH_SQL} AS path,
+    SELECT {PATH_SQL} AS path,
            CASE WHEN doc_id % 2 = 1 THEN 'gzip'
                 WHEN doc_id % 4 = 2 THEN 'zip'
                 ELSE 'plain' END AS codec,
@@ -298,7 +296,6 @@ def fs_text_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     still sniffs real container bytes."""
     from pyspark.sql import types as T
 
-    from snackfs_spark.sources.fsmodel import _doc_path
     from snackfs_spark.sources.tables import fan_out, load_table
 
     schema = T.StructType(
@@ -311,7 +308,7 @@ def fs_text_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     docs = load_table(spark, sf_dir, "documents").select(
-        _doc_path().alias("path"), "doc_id", "text"
+        doc_path().alias("path"), "doc_id", "text"
     )
 
     def fused(batches):

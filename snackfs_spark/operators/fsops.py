@@ -14,7 +14,15 @@ from pyspark.sql import functions as F
 
 from snackfs_spark.catalog import SnackCatalog
 from snackfs_spark.registry import register
-from snackfs_spark.sources.fsmodel import content_df, files_df, fs_sql
+from snackfs_spark.sources.fsmodel import (
+    MTIME_SQL,
+    PATH_SQL,
+    content_df,
+    doc_mtime,
+    doc_path,
+    files_df,
+    fs_sql,
+)
 from snackfs_spark.functions import md5_bucket, ts_str
 from snackfs_spark.sources.tables import load_table
 
@@ -262,20 +270,41 @@ def fs_ls_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "fs_lww_snapshot",
-    oracle="""
-    WITH upserts AS (
-      SELECT '/data/' || source || '/doc_' || CAST(doc_id AS VARCHAR) || '.txt' AS path,
+_UPSERTS_SQL = f"""WITH upserts AS (
+      SELECT {PATH_SQL} AS path,
              CAST(n_chars AS BIGINT) AS size,
-             TIMESTAMP '2024-01-01 00:00:00' + INTERVAL (doc_id) MINUTE AS mtime
+             {MTIME_SQL} AS mtime
       FROM documents
       UNION ALL
-      SELECT '/data/' || source || '/doc_' || CAST(doc_id AS VARCHAR) || '.txt',
+      SELECT {PATH_SQL},
              CAST(n_chars + 1000 AS BIGINT),
-             TIMESTAMP '2024-01-01 00:00:00' + INTERVAL (doc_id) MINUTE + INTERVAL 1 HOUR
+             {MTIME_SQL} + INTERVAL 1 HOUR
       FROM documents WHERE doc_id % 7 = 0
+    )"""
+
+
+def _upserts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The timestamped upsert log of fs_lww_snapshot and fs_scd2_history:
+    every file at its mtime, plus a second generation, 1000 chars larger
+    and an hour later, of each doc_id % 7 == 0 (a re-written file)."""
+    docs = load_table(spark, sf_dir, "documents")
+    gen0 = docs.select(
+        doc_path().alias("path"),
+        F.col("n_chars").cast("long").alias("size"),
+        doc_mtime().alias("mtime"),
     )
+    gen1 = docs.filter(F.col("doc_id") % 7 == 0).select(
+        doc_path().alias("path"),
+        (F.col("n_chars") + 1000).cast("long").alias("size"),
+        F.timestamp_add("HOUR", F.lit(1), doc_mtime()).alias("mtime"),
+    )
+    return gen0.unionAll(gen1)
+
+
+@register(
+    "fs_lww_snapshot",
+    oracle=f"""
+    {_UPSERTS_SQL}
     SELECT path, size, strftime(mtime, '%Y-%m-%d %H:%M:%S.%f') AS mtime,
            n_versions FROM (
       SELECT path, size, mtime,
@@ -296,28 +325,7 @@ def fs_lww_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-written files."""
     from pyspark.sql import Window
 
-    docs = load_table(spark, sf_dir, "documents")
-    path = F.concat(
-        F.lit("/data/"), F.col("source"),
-        F.lit("/doc_"), F.col("doc_id").cast("string"), F.lit(".txt"),
-    )
-    base_mtime = F.expr(
-        "timestampadd(MINUTE, cast(doc_id as int), timestamp'2024-01-01 00:00:00')"
-    )
-    gen0 = docs.select(
-        path.alias("path"),
-        F.col("n_chars").cast("long").alias("size"),
-        base_mtime.alias("mtime"),
-    )
-    gen1 = docs.filter(F.col("doc_id") % 7 == 0).select(
-        path.alias("path"),
-        (F.col("n_chars") + 1000).cast("long").alias("size"),
-        F.expr(
-            "timestampadd(HOUR, 1, timestampadd(MINUTE, cast(doc_id as int), "
-            "timestamp'2024-01-01 00:00:00'))"
-        ).alias("mtime"),
-    )
-    upserts = gen0.unionAll(gen1)
+    upserts = _upserts(spark, sf_dir)
     w = Window.partitionBy("path")
     return (
         upserts.withColumn("rn", F.row_number().over(w.orderBy(F.col("mtime").desc())))
@@ -329,18 +337,8 @@ def fs_lww_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fs_scd2_history",
-    oracle="""
-    WITH upserts AS (
-      SELECT '/data/' || source || '/doc_' || CAST(doc_id AS VARCHAR) || '.txt' AS path,
-             CAST(n_chars AS BIGINT) AS size,
-             TIMESTAMP '2024-01-01 00:00:00' + INTERVAL (doc_id) MINUTE AS mtime
-      FROM documents
-      UNION ALL
-      SELECT '/data/' || source || '/doc_' || CAST(doc_id AS VARCHAR) || '.txt',
-             CAST(n_chars + 1000 AS BIGINT),
-             TIMESTAMP '2024-01-01 00:00:00' + INTERVAL (doc_id) MINUTE + INTERVAL 1 HOUR
-      FROM documents WHERE doc_id % 7 = 0
-    )
+    oracle=f"""
+    {_UPSERTS_SQL}
     SELECT path, size,
            CAST(ROW_NUMBER() OVER w AS BIGINT) AS version,
            strftime(mtime, '%Y-%m-%d %H:%M:%S.%f') AS valid_from,
@@ -365,28 +363,7 @@ def fs_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-path and short, so no partition skew."""
     from pyspark.sql import Window
 
-    docs = load_table(spark, sf_dir, "documents")
-    path = F.concat(
-        F.lit("/data/"), F.col("source"),
-        F.lit("/doc_"), F.col("doc_id").cast("string"), F.lit(".txt"),
-    )
-    base_mtime = F.expr(
-        "timestampadd(MINUTE, cast(doc_id as int), timestamp'2024-01-01 00:00:00')"
-    )
-    gen0 = docs.select(
-        path.alias("path"),
-        F.col("n_chars").cast("long").alias("size"),
-        base_mtime.alias("mtime"),
-    )
-    gen1 = docs.filter(F.col("doc_id") % 7 == 0).select(
-        path.alias("path"),
-        (F.col("n_chars") + 1000).cast("long").alias("size"),
-        F.expr(
-            "timestampadd(HOUR, 1, timestampadd(MINUTE, cast(doc_id as int), "
-            "timestamp'2024-01-01 00:00:00'))"
-        ).alias("mtime"),
-    )
-    upserts = gen0.unionAll(gen1)
+    upserts = _upserts(spark, sf_dir)
     w = Window.partitionBy("path").orderBy("mtime")
     nxt = F.lead("mtime").over(w)
     return upserts.select(

@@ -25,8 +25,6 @@ from pyspark.sql import types as T
 from snackfs_spark.registry import register
 from snackfs_spark.sources.tables import fan_out, load_table
 
-_DOC_PATH_SQL = "'/data/' || source || '/doc_' || CAST(doc_id AS VARCHAR) || '.txt'"
-
 
 def binary_assets_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The multimodal table shape: opaque binary payload + typed metadata

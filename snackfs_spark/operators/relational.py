@@ -2561,6 +2561,23 @@ def type_user_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _hll_registers(df: DataFrame, *keys: str) -> DataFrame:
+    """HLL registers of ``df``'s user_id per ``keys``: (keys, bucket, reg).
+    The 60-bit md5_fp splits into an 8-bit bucket and a HLL_WBITS rank
+    window; a register is the MAX rank (leading zeros + 1) in its bucket."""
+    v = md5_fp(F.col("user_id").cast("string"))
+    w = F.col("v").bitwiseAND(F.lit((1 << HLL_WBITS) - 1))
+    r = F.when(w > 0, F.lit(HLL_WBITS + 1) - F.length(F.bin(w))).otherwise(
+        F.lit(HLL_WBITS + 1)
+    )
+    return (
+        df.select(*keys, v.alias("v"))
+        .select(*keys, F.shiftright(F.col("v"), HLL_WBITS).alias("bucket"), r.alias("r"))
+        .groupBy(*keys, "bucket")
+        .agg(F.max("r").alias("reg"))
+    )
+
+
 @shared
 def hll_type_regs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized per-(event_type, bucket) HLL register relation (MAX
@@ -2569,22 +2586,7 @@ def hll_type_regs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_distinct_hll_merged and approx_overlap_hll each re-derived
     per call."""
     pairs = type_user_pairs_df(spark, sf_dir)
-    v = md5_fp(F.col("user_id").cast("string"))
-    w = F.col("v").bitwiseAND(F.lit((1 << HLL_WBITS) - 1))
-    r = F.when(w > 0, F.lit(HLL_WBITS + 1) - F.length(F.bin(w))).otherwise(
-        F.lit(HLL_WBITS + 1)
-    )
-    return (
-        pairs.select("event_type", v.alias("v"))
-        .select(
-            "event_type",
-            F.shiftright(F.col("v"), HLL_WBITS).alias("bucket"),
-            r.alias("r"),
-        )
-        .groupBy("event_type", "bucket")
-        .agg(F.max("r").alias("reg"))
-        .localCheckpoint(eager=False)
-    )
+    return _hll_registers(pairs, "event_type").localCheckpoint(eager=False)
 
 
 @register(
@@ -4013,17 +4015,7 @@ def approx_hll_daily_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     until the one portable float estimate per day."""
     ev = fan_out(load_table(spark, sf_dir, "events"), spark)
     day = F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd")
-    v = md5_fp(F.col("user_id").cast("string"))
-    w_mask = F.col("v").bitwiseAND(F.lit((1 << HLL_WBITS) - 1))
-    r = F.when(w_mask > 0, F.lit(HLL_WBITS + 1) - F.length(F.bin(w_mask))).otherwise(
-        F.lit(HLL_WBITS + 1)
-    )
-    ranks = ev.select(day.alias("day"), v.alias("v")).select(
-        "day",
-        F.shiftright(F.col("v"), HLL_WBITS).alias("bucket"),
-        r.alias("r"),
-    )
-    regs = ranks.groupBy("day", "bucket").agg(F.max("r").alias("reg"))
+    regs = _hll_registers(ev.select(day.alias("day"), "user_id"), "day")
     from pyspark.sql import Window
 
     wb = Window.partitionBy("bucket").orderBy("day")

@@ -1670,7 +1670,7 @@ def corpus_takedown_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     takedown list side; artifact scans stay semi-join-prunable (at scale:
     broadcast the request list, partition-prune by doc/path key)."""
     from snackfs_spark.operators.dedup import shingles_df
-    from snackfs_spark.sources.fsmodel import content_df, _doc_path
+    from snackfs_spark.sources.fsmodel import content_df, doc_path
 
     docs = load_table(spark, sf_dir, "documents")
     target = docs.filter(
@@ -1682,7 +1682,7 @@ def corpus_takedown_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_chars").cast("long").alias("n_bytes"),
     )
     # content chunks: semi-join the chunk store on the takedown paths
-    paths = target.select(_doc_path().alias("path"))
+    paths = target.select(doc_path().alias("path"))
     chunks = content_df(spark, sf_dir).join(F.broadcast(paths), "path", "left_semi")
     chunk_row = chunks.agg(
         F.lit("content_chunks").alias("artifact"),

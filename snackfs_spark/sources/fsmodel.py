@@ -52,12 +52,15 @@ RING_NODES = 25           # one range per nation row
 RING_STEP = TOKEN_SPACE // RING_NODES  # 171798691
 EPOCH = "2024-01-01 00:00:00"
 
-_PATH_EXPR = "'/data/' || source || '/doc_' || CAST(doc_id AS VARCHAR) || '.txt'"
+# A document's file path and mtime (EPOCH plus doc_id minutes), the one
+# rule in both engines: SQL for the oracles, a Column for Spark.
+PATH_SQL = "'/data/' || source || '/doc_' || CAST(doc_id AS VARCHAR) || '.txt'"
+MTIME_SQL = f"TIMESTAMP '{EPOCH}' + INTERVAL (doc_id) MINUTE"
 
 # ---------------------------------------------------------------- files ----
 
 FILES_CTE = f"""files AS (
-  SELECT {_PATH_EXPR} AS path,
+  SELECT {PATH_SQL} AS path,
          '/data/' || source AS parent_path,
          'doc_' || CAST(doc_id AS VARCHAR) || '.txt' AS name,
          FALSE AS is_dir,
@@ -65,7 +68,7 @@ FILES_CTE = f"""files AS (
          'u' || CAST(doc_id % 7 AS VARCHAR) AS owner,
          'g' || CAST(doc_id % 3 AS VARCHAR) AS grp,
          644 AS permission,
-         TIMESTAMP '{EPOCH}' + INTERVAL (doc_id) MINUTE AS mtime
+         {MTIME_SQL} AS mtime
   FROM documents
   UNION ALL
   SELECT DISTINCT '/data/' || source, '/data', source, TRUE, CAST(0 AS BIGINT),
@@ -80,7 +83,7 @@ FILES_CTE = f"""files AS (
 )"""
 
 
-def _doc_path() -> F.Column:
+def doc_path() -> F.Column:
     return F.concat(
         F.lit("/data/"),
         F.col("source"),
@@ -90,6 +93,10 @@ def _doc_path() -> F.Column:
     )
 
 
+def doc_mtime() -> F.Column:
+    return F.expr(f"timestampadd(MINUTE, cast(doc_id as int), timestamp'{EPOCH}')")
+
+
 @shared
 def files_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The `files` metadata relation (INode rows). At scale this is a real
@@ -97,7 +104,7 @@ def files_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     epoch = F.lit(EPOCH).cast("timestamp")
     file_rows = docs.select(
-        _doc_path().alias("path"),
+        doc_path().alias("path"),
         F.concat(F.lit("/data/"), F.col("source")).alias("parent_path"),
         F.concat(F.lit("doc_"), F.col("doc_id").cast("string"), F.lit(".txt")).alias("name"),
         F.lit(False).alias("is_dir"),
@@ -105,9 +112,7 @@ def files_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("u"), (F.col("doc_id") % 7).cast("string")).alias("owner"),
         F.concat(F.lit("g"), (F.col("doc_id") % 3).cast("string")).alias("grp"),
         F.lit(644).alias("permission"),
-        F.expr(f"timestampadd(MINUTE, cast(doc_id as int), timestamp'{EPOCH}')").alias(
-            "mtime"
-        ),
+        doc_mtime().alias("mtime"),
     )
     dir_rows = (
         docs.select("source")
@@ -161,7 +166,7 @@ CONTENT_CTE = f"""content AS (
   SELECT path, block_idx, sub_idx, block_offset, sub_offset,
          CAST(length(payload) AS BIGINT) AS length, payload
   FROM (
-    SELECT {_PATH_EXPR} AS path,
+    SELECT {PATH_SQL} AS path,
            CAST(i // {SUBS_PER_BLOCK} AS INT) AS block_idx,
            CAST(i % {SUBS_PER_BLOCK} AS INT) AS sub_idx,
            CAST((i // {SUBS_PER_BLOCK}) * {BLOCK_CHARS} AS BIGINT) AS block_offset,
@@ -233,7 +238,7 @@ def content_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     ThriftStore.scala:352-365) re-expressed as rows — chunk_text over
     the documents, cached."""
     docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
-    return chunk_text(docs, _doc_path()).cache()
+    return chunk_text(docs, doc_path()).cache()
 
 
 # ---------------------------------------------------------------- locks ----
@@ -278,7 +283,7 @@ _TOKEN_SQL = (
 )
 
 BLOCKS_CTE = f"""blocks AS (
-  SELECT {_PATH_EXPR} AS path,
+  SELECT {PATH_SQL} AS path,
          CAST(block_idx AS INT) AS block_idx,
          {_TOKEN_SQL} AS token
   FROM (
@@ -308,7 +313,7 @@ def blocks_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per 256-char block of each file, with its ring token."""
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
-        _doc_path().alias("path"),
+        doc_path().alias("path"),
         "doc_id",
         _chunk_indices(F.col("n_chars"), BLOCK_CHARS).alias("block_idx"),
     ).select(

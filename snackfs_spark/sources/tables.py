@@ -5,9 +5,9 @@ events documents embeddings — one parquet file per table under
 /root/testdata/sf{0.001,0.01,0.1}/.
 
 Reads are plain ``spark.read.parquet`` so Catalyst's parquet scan keeps
-predicate pushdown / column pruning / row-group skipping. At cluster scale
-the same loader points at a partitioned directory instead of one file;
-nothing else changes.
+predicate pushdown / column pruning / row-group skipping. A table big
+enough to split is read from a multi-file copy in the work dir
+(load_table), the shape data has at cluster scale; nothing else changes.
 """
 
 from __future__ import annotations
@@ -91,75 +91,73 @@ def _read_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-# sf_dir -> ingest cache dir (see build_ingest_cache). Opt-in: empty
-# unless a caller ingests; process-wide, so not @shared (DESIGN.md).
-_INGEST_CACHE: dict[str, str] = {}
+# One split per SPLIT_BYTES of raw parquet, capped at the core count: big
+# facts get full parallelism, small tables are NOT shredded into 32 tiny
+# files (per-task overhead would dominate; their CPU-heavy pipelines call
+# fan_out AFTER filtering instead). Read at call time, so tests can lower it.
+SPLIT_BYTES = 512 * 1024
 
-# Tables worth re-laying-out: the facts. Dims stay raw (they broadcast).
-_CACHE_TABLES = ("customer", "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-
-def build_ingest_cache(
-    spark: SparkSession, sf_dir: str, split_bytes: int = 512 * 1024
-) -> str:
-    """Ingest the driver's single-file test tables into the engine's own
-    storage layout: one directory per table, split across
-    defaultParallelism files, so every scan starts with >= cores splits.
-
-    This is the engine's ingest step, not a benchmark trick: a real
-    deployment never queries a monolithic one-row-group file — data
-    lands partitioned (by arrival batch, bucket, or partition column)
-    and every downstream scan parallelizes for free. The bench warmup
-    calls this once (ingest cost, same standing as building the fs-model
-    views); correctness runs read the raw files unless a caller opts in.
-    Idempotent: the copies live in the work dir keyed by the fixture and
-    the split counts (workdir.py) and are reused across processes."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Splits proportional to data (one per ~split_bytes of raw parquet),
-    # capped at the core count: big facts get full parallelism, small
-    # tables are NOT shredded into 32 tiny files (per-task overhead
-    # would dominate; their CPU-heavy pipelines call fan_out AFTER
-    # filtering instead). Tables that wouldn't split stay raw.
+def _layout(spark: SparkSession, sf_dir: str) -> tuple[str, dict[str, int]]:
+    """(copy root, {table: split count}) for the fixture at ``sf_dir``:
+    every table that splits (count > 1) is read from its copy under the
+    root; the rest, every dimension table included, stay raw."""
+    cap = spark.sparkContext.defaultParallelism
     splits = {}
-    for name in _CACHE_TABLES:
+    for name in TABLES:
         raw = os.path.join(sf_dir, f"{name}.parquet")
-        n = min(
-            max(os.path.getsize(raw) // split_bytes, 1),
-            spark.sparkContext.defaultParallelism,
-        )
+        # a fixture may hold only the tables its queries read
+        n = min(os.path.getsize(raw) // SPLIT_BYTES, cap) if os.path.exists(raw) else 0
         if n > 1:
             splits[name] = n
     # Joined here, through this module's os, with the ingest kind root as
     # the first argument: perfbench/workloads.py redirects exactly that
     # call to a fresh dir, so every benchmark setup pays a cold ingest.
-    cache_root = os.path.join(
-        workdir.kind_root("ingest"), workdir.fixture_key(sf_dir, splits)
+    root = os.path.join(workdir.kind_root("ingest"), workdir.fixture_key(sf_dir, splits))
+    return root, splits
+
+
+def _split_copy(spark: SparkSession, sf_dir: str, root: str, name: str, n: int) -> str:
+    return workdir.build_once(
+        os.path.join(root, f"{name}.parquet"),
+        lambda out: _read_raw(spark, sf_dir, name)
+        .repartition(n)
+        .write.mode("overwrite")
+        .parquet(out),
     )
+
+
+def build_ingest_cache(spark: SparkSession, sf_dir: str) -> str:
+    """Build now every split copy that load_table reads, and return their
+    root. The copies are the engine's ingest layout, not a benchmark
+    trick: a real deployment never queries a monolithic one-row-group
+    file — data lands partitioned and every downstream scan parallelizes
+    for free. Benches call this in their warm-up so the ingest is billed
+    there, not to the first query that reads a fact table. Idempotent:
+    the copies live in the work dir keyed by the fixture and the split
+    counts (workdir.py) and are reused across processes."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    root, splits = _layout(spark, sf_dir)
     for name, n in splits.items():
-        workdir.build_once(
-            os.path.join(cache_root, f"{name}.parquet"),
-            lambda out, name=name, n=n: _read_raw(spark, sf_dir, name)
-            .repartition(n)
-            .write.mode("overwrite")
-            .parquet(out),
-        )
-    _INGEST_CACHE[sf_dir] = cache_root
-    return cache_root
+        _split_copy(spark, sf_dir, root, name, n)
+    return root
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The table ``name`` of the fixture at ``sf_dir``, in the one layout
+    the fixture and the core count decide (DESIGN.md "Table layout"): a
+    table with one split reads its raw file; a larger one reads its split
+    copy, built first if it is missing."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     # Timestamp semantics must match the DuckDB oracle regardless of which
     # session runs us (the driver supplies its own): pin UTC at read time.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    cache_root = _INGEST_CACHE.get(sf_dir)
-    if cache_root is not None:
-        cached = os.path.join(cache_root, f"{name}.parquet")
-        if workdir.is_built(cached):
-            # events was converted at ingest; cached copies read plain.
-            return spark.read.parquet(cached)
-    return _read_raw(spark, sf_dir, name)
+    root, splits = _layout(spark, sf_dir)
+    if name not in splits:
+        return _read_raw(spark, sf_dir, name)
+    # events was converted at ingest; the copies read plain.
+    return spark.read.parquet(_split_copy(spark, sf_dir, root, name, splits[name]))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

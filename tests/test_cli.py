@@ -26,6 +26,15 @@ def test_cli_cat_and_ls(capsys):
     assert _run("cat", "/data/missing.txt") == 1
 
 
+def test_cli_cat_directory_and_stat(capsys):
+    assert _run("cat", "/data/src0") == 1
+    assert "cat: /data/src0: is a directory" in capsys.readouterr().err
+    assert _run("stat", "/data/src0/doc_0.txt") == 0
+    out = capsys.readouterr().out
+    assert "path: /data/src0/doc_0.txt" in out and "is_dir: False" in out
+    assert _run("stat", "/data/missing.txt") == 1
+
+
 def test_cli_put_get_cp_touchz_text(tmp_path, capsys):
     # put: ingest a local dir
     src = tmp_path / "local"

@@ -145,29 +145,32 @@ def test_minhash_band_store_incremental_join_no_corpus_shuffle(spark):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_ingest_cache_identical_results(spark):
-    """The engine-managed multi-file re-layout (build_ingest_cache) must
-    be invisible to results: same rows, same values, only more splits."""
+def test_ingest_cache_identical_results(spark, tmp_path, monkeypatch):
+    """One table layout, decided by the fixture and the core count alone:
+    a table under two SPLIT_BYTES reads its raw file; a larger one reads
+    its split copy, built by the first read (no build_ingest_cache call).
+    The split layout, the one the bench times, hash-matches the oracles.
+    None of the queries builds a @shared relation over the tmp copies."""
+    from snackfs_spark import workdir
     from snackfs_spark.registry import load_all
     from snackfs_spark.sources import tables
+    from tests.oracle_harness import duckdb_connection, run_query_pair
 
+    raw = tables.load_table(spark, SF_ORACLE, "lineitem").inputFiles()
+    assert len(raw) == 1 and raw[0].endswith(f"{SF_ORACLE}/lineitem.parquet"), raw
+
+    monkeypatch.setattr(workdir, "ROOT", str(tmp_path))
+    monkeypatch.setattr(tables, "SPLIT_BYTES", 64 * 1024)
+    for name in ("lineitem", "orders", "events"):
+        files = tables.load_table(spark, SF_ORACLE, name).inputFiles()
+        assert len(files) > 1 and all(str(tmp_path) in f for f in files), (name, files)
     reg = load_all()
-    q = reg["q1_pricing_summary"].fn
-    want = sorted(map(tuple, q(spark, SF_ORACLE).collect()))
-    root = tables.build_ingest_cache(spark, SF_ORACLE, split_bytes=256 * 1024)
+    con = duckdb_connection(SF_ORACLE)
     try:
-        # re-layout took effect on disk (Spark may still pack small files
-        # into one task at this SF; file count is the layout evidence)
-        import glob
-
-        parts = glob.glob(f"{root}/lineitem.parquet/part-*")
-        assert len(parts) > 1, parts
-        got = sorted(map(tuple, q(spark, SF_ORACLE).collect()))
-        assert got == want
+        for name in ("q1_pricing_summary", "q3_shipping_priority", "events_hourly_rollup"):
+            assert run_query_pair(spark, con, reg[name], SF_ORACLE) == [], name
     finally:
-        tables._INGEST_CACHE.pop(SF_ORACLE, None)
-    # opt-in: with the cache deactivated, reads return to the raw file
-    assert tables.load_table(spark, SF_ORACLE, "lineitem").rdd.getNumPartitions() >= 1
+        con.close()
 
 
 def test_ivf_partitioned_layout_prunes_to_probe_list(spark, tmp_path):

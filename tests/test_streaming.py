@@ -79,7 +79,7 @@ def test_stream_stream_join_equals_batch(spark):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
-def test_incremental_microbatches_converge_to_batch(spark):
+def test_incremental_microbatches_converge_to_batch(spark, monkeypatch):
     """True incremental execution: stream the multi-file ingest layout
     one file per trigger, so the windowed aggregation is computed across
     SEVERAL micro-batches with state carried between them — and the
@@ -89,8 +89,10 @@ def test_incremental_microbatches_converge_to_batch(spark):
     from snackfs_spark.sources import tables
     from tests.conftest import SF_ORACLE
 
-    root = tables.build_ingest_cache(spark, SF_ORACLE, split_bytes=64 * 1024)
-    tables._INGEST_CACHE.pop(SF_ORACLE, None)  # batch side reads raw
+    with monkeypatch.context() as m:
+        m.setattr(tables, "SPLIT_BYTES", 64 * 1024)
+        root = tables.build_ingest_cache(spark, SF_ORACLE)
+    # the default SPLIT_BYTES is back: the batch side reads the raw file
     ev_dir = f"{root}/events.parquet"
     n_files = len(glob.glob(f"{ev_dir}/part-*"))
     assert n_files > 1, "need multiple files for multiple micro-batches"

@@ -109,7 +109,8 @@ def test_store_for_rewrites_an_unmarked_store(spark, tmp_path, monkeypatch):
 def test_ingest_root_is_the_redirectable_join(spark, tmp_path, monkeypatch):
     """perfbench sends every ingest to a fresh dir by rewriting the one
     ``tables.os.path.join`` whose first argument ends in ``/var/ingest``;
-    the ingest must form its root through exactly that call."""
+    the ingest, and every read of a split copy, must form its root
+    through exactly that call."""
 
     class _Path:
         def __getattr__(self, name):
@@ -128,11 +129,11 @@ def test_ingest_root_is_the_redirectable_join(spark, tmp_path, monkeypatch):
             return getattr(os, name)
 
     monkeypatch.setattr(tables, "os", _Os())
-    try:
-        root = tables.build_ingest_cache(spark, SF_SMALL, split_bytes=64 * 1024)
-    finally:
-        tables._INGEST_CACHE.pop(SF_SMALL, None)
+    monkeypatch.setattr(tables, "SPLIT_BYTES", 64 * 1024)
+    root = tables.build_ingest_cache(spark, SF_SMALL)
     assert os.path.dirname(root) == str(tmp_path)
     assert os.path.basename(root).startswith("sf0.001-")
     built = sorted(p for p in os.listdir(root) if workdir.is_built(os.path.join(root, p)))
     assert built, os.listdir(root)
+    files = tables.load_table(spark, SF_SMALL, built[0].removesuffix(".parquet")).inputFiles()
+    assert files and all(str(tmp_path) in f for f in files), files

@@ -103,7 +103,7 @@ def test_chunk_text_is_the_content_view(spark):
     from tests.conftest import SF_SMALL
 
     docs = load_table(spark, SF_SMALL, "documents")
-    chunks = writer.chunk_text(docs, fsmodel._doc_path(), "text")
+    chunks = writer.chunk_text(docs, fsmodel.doc_path(), "text")
     view = fsmodel.content_df(spark, SF_SMALL)
     assert chunks.columns == view.columns
     assert chunks.count() == view.count() > 0

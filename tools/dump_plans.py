@@ -1,7 +1,9 @@
 """Generate PLANS.md: collapsed physical-plan operator chains for the
 queries bench.py times — the reviewable evidence that each plan has the
 shape SCALE.md claims (pushdown, broadcast, partial top-k, no cartesian).
-PLANS.md is regenerated on demand, not tracked (.gitignore).
+PLANS.md is regenerated on demand, not tracked (.gitignore). The tables
+are read in the bench's layout (tables.load_table picks it from the
+fixture and the core count).
 
 Usage: python tools/dump_plans.py
 """

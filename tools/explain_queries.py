@@ -5,8 +5,9 @@ Usage: python tools/explain_queries.py OUTDIR [SUFFIX] name1 name2 ...
 Writes OUTDIR/<name>_<SUFFIX>.txt (default SUFFIX: "before"): plan
 evidence for a change, e.g. plans/<round>/<query>_before.txt and
 _after.txt. Plan dumps are regenerated on demand, not tracked
-(.gitignore). Runs at sf0.01 with the ingest cache built, matching the
-bench session's table layout so plan shapes are comparable.
+(.gitignore). Runs at sf0.01 (or $SPARK_GRAFT_SF_DIR) on local[8]; the
+tables are read in the bench's layout (tables.load_table picks it from
+the fixture and the core count), so plan shapes are comparable.
 """
 
 from __future__ import annotations
@@ -21,7 +22,6 @@ if str(_REPO) not in sys.path:
 
 from snackfs_spark.registry import load_all  # noqa: E402
 from snackfs_spark.session import get_spark  # noqa: E402
-from snackfs_spark.sources import tables  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -35,7 +35,6 @@ def main() -> None:
     outdir.mkdir(parents=True, exist_ok=True)
     reg = load_all()
     spark = get_spark("explain_queries", cpus=8)
-    tables.build_ingest_cache(spark, SF_DIR)
     for name in args:
         df = reg[name].fn(spark, SF_DIR)
         txt = df._sc._jvm.PythonSQLUtils.explainString(
