@@ -296,7 +296,7 @@ def fs_text_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     still sniffs real container bytes."""
     from pyspark.sql import types as T
 
-    from snackfs_spark.sources.tables import fan_out, load_table
+    from snackfs_spark.sources.tables import load_table
 
     schema = T.StructType(
         [
@@ -314,7 +314,7 @@ def fs_text_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     def fused(batches):
         yield from _decode_text(_compress_text(batches))
 
-    out = fan_out(docs, spark).mapInPandas(fused, schema=schema)
+    out = docs.mapInPandas(fused, schema=schema)
     return out.select("path", "codec", "text_bytes", "text_md5")
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from snackfs_spark.functions import md5_bucket
 from snackfs_spark.memo import materialize_shared, shared
 from snackfs_spark.registry import register
-from snackfs_spark.sources.tables import fan_out, load_table
+from snackfs_spark.sources.tables import load_table
 
 N_PERMS = 16          # minhash signature length
 BAND_SIZE = 4         # 4 bands of 4 rows -> LSH threshold ~ (1/4)^(1/4) ≈ 0.71
@@ -49,7 +49,7 @@ def shingles_df(
     duplicate-insensitive, e.g. min-hashing). The docs scan fans out
     BEFORE the explode so the x300 row amplification lands on every core,
     not the single scan task."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     # Guard the explode: Spark's sequence(0, -1) yields a DESCENDING
     # [0, -1] (not empty), and slice(toks, i+1, 3) with that index throws
@@ -448,7 +448,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     position, sign of the vote sum becomes the fingerprint bit. Near-dups
     at scale = hamming-close fingerprints, indexable by bit-block
     equi-joins (same LSH banding idea as minhash)."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     toks = (
         docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
         .filter(F.col("tok") != "")
@@ -715,7 +715,7 @@ def dedup_chunk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     — one shuffle on a uniform content hash, map-side collapse — just
     on an exploded relation ~2x the token count. At 100 TB this catches
     shared boilerplate/quotes that document-level hashing never sees."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     chunks = (
         docs.select("doc_id", toks.alias("toks"))
@@ -860,7 +860,7 @@ def dedup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation (rows = dup groups x sources present), which is
     duplicate-volume-sized, not corpus-sized. All counts are bigint
     lattice sums — bit-identical under any partitioning."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     chunks = (
         docs.select("source", toks.alias("toks"))
@@ -1302,7 +1302,7 @@ def _gram_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, i, g=md5(k-gram)) for every k-gram start position. Same
     guarded-sequence shape as shingles_df (Spark's sequence(0, -1) is a
     descending two-element array, not empty)."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
         .select(
@@ -1941,7 +1941,7 @@ def winnow_selected(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The winnowed selection relation (doc_id, fp): the building block
     dedup_winnow_fingerprint joins, exposed so tests can pin the sketch
     density independently of the pair report."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     pos = (
         docs.select(

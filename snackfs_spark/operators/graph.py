@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from snackfs_spark.functions import md5_fp
 from snackfs_spark.memo import shared
 from snackfs_spark.registry import register
-from snackfs_spark.sources.tables import fan_out, load_table
+from snackfs_spark.sources.tables import load_table
 
 PR_VOCAB = 150     # node budget: top tokens by term frequency
 PR_ITERS = 3       # fixed power-method rounds => SQL-unrollable
@@ -56,7 +56,7 @@ def _token_graph(spark: SparkSession, sf_dir: str):
     jaccard link prediction, …) each rebuilt the graph, re-running the
     corpus scan + vocab top-k + distinct-edge shuffle; now the battery
     extracts the graph once."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     toks = docs.select(F.explode(words).alias("w")).filter(F.col("w") != "")
     vocab = (
@@ -532,7 +532,7 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     not corpus-sized, after round 1."""
     from snackfs_spark.operators.dedup import candidate_edges_df
 
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     _, und = candidate_edges_df(spark, sf_dir)
     alive = docs.select("doc_id")
     er = und  # e_1: every candidate endpoint is a document, so the

@@ -466,7 +466,15 @@ def mining_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out bounded by basket size), plus two broadcast joins of the
     minsup-bounded item relation and one ppm filter. Rules are <= 2x
     frequent pairs."""
-    li = basket_items_df(spark, sf_dir)
+    return association_rules(basket_items_df(spark, sf_dir), "shuffle_hash")
+
+
+def association_rules(li: DataFrame, join_hint: str | None = None) -> DataFrame:
+    """The rule table over the basket relation ``li`` (distinct
+    l_orderkey, l_partkey rows), with ``join_hint`` on one side of the
+    pair self-join. The one rules body: the registered query runs it
+    over the shuffled baskets, sources.bucketed over the bucketed
+    basket table."""
     n = li.agg(F.count_distinct("l_orderkey").cast("long").alias("n_baskets"))
     item = li.groupBy("l_partkey").agg(
         F.count(F.lit(1)).cast("long").alias("support")
@@ -476,7 +484,7 @@ def mining_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = li.join(F.broadcast(freq.select("l_partkey")), "l_partkey")
     x = b.alias("x")
-    y = b.alias("y").hint("shuffle_hash")
+    y = b.alias("y") if join_hint is None else b.alias("y").hint(join_hint)
     pairs = (
         x.join(
             y,

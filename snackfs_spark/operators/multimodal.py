@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from snackfs_spark.registry import register
-from snackfs_spark.sources.tables import fan_out, load_table
+from snackfs_spark.sources.tables import load_table
 
 
 def binary_assets_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -187,9 +187,7 @@ def _decode_and_featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
 def decode_features_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The mapInPandas decode pipeline: per-partition Arrow batches, no
     shuffle — decode parallelism equals scan parallelism."""
-    # fan_out: decode parallelism must match cores even when the source
-    # is one unsplittable file; at real scale (multi-file) it's a no-op.
-    assets = fan_out(wav_assets_df(spark, sf_dir), spark)
+    assets = wav_assets_df(spark, sf_dir)
     return assets.select("asset_id", "payload").mapInPandas(
         _decode_and_featurize, schema=_FEATURE_SCHEMA
     )
@@ -258,7 +256,7 @@ def frame_sample_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     (asset_id, frame_idx, frame_bytes). Frames stay opaque byte ranges
     here (a video container codec is the one format numpy can't parse);
     the partitioning/explode shape is what matters at scale."""
-    assets = fan_out(binary_assets_df(spark, sf_dir), spark)
+    assets = binary_assets_df(spark, sf_dir)
     return (
         assets.select(
             "asset_id",
@@ -437,7 +435,7 @@ def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def resize_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The raw mapInPandas decode+resize pipeline."""
-    assets = fan_out(bmp_assets_df(spark, sf_dir), spark)
+    assets = bmp_assets_df(spark, sf_dir)
     return assets.select("asset_id", "payload").mapInPandas(
         _resize, schema=_RESIZE_SCHEMA
     )
@@ -583,7 +581,7 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     make the whole chain bit-exact against the oracle. At 100 TB this
     is the template for every samples-domain feature (VAD, loudness,
     clipping detection): one pass, no shuffle, Arrow-vectorized."""
-    assets = fan_out(binary_assets_df(spark, sf_dir), spark)
+    assets = binary_assets_df(spark, sf_dir)
     return assets.select("asset_id", "payload").mapInPandas(
         _pcm_frame_energy, schema=_AUDIO_SCHEMA
     )
@@ -666,7 +664,7 @@ def multimodal_image_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     tile stats live in one mapInPandas pass at scan parallelism;
     integer outputs keep the oracle bit-exact. The ragged tail is
     truncated exactly as the fixed-geometry oracle does."""
-    assets = fan_out(binary_assets_df(spark, sf_dir), spark)
+    assets = binary_assets_df(spark, sf_dir)
     return assets.select("asset_id", "payload").mapInPandas(
         _tile_stats, schema=_TILE_SCHEMA
     )
@@ -819,7 +817,7 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("asset_id") + PHASH_PLANT_OFFSET).alias("asset_id"), "payload"
         )
     )
-    all_assets = fan_out(assets.unionByName(planted), spark)
+    all_assets = assets.unionByName(planted)
     wide = all_assets.select("asset_id", "payload").mapInPandas(
         _ahash_bands, schema=_PHASH_SCHEMA
     )
@@ -1231,7 +1229,7 @@ def multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside its task; no per-sample rows ever leave the worker (the
     oracle's sample explosion exists only to recompute the same
     integers independently)."""
-    assets = fan_out(binary_assets_df(spark, sf_dir), spark)
+    assets = binary_assets_df(spark, sf_dir)
     return assets.select("asset_id", "payload").mapInPandas(
         _pcm_resample_32, schema=_RESAMPLE_SCHEMA
     )
@@ -1443,7 +1441,7 @@ def multimodal_image_simpson(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: binning happens inside the decode pass (bincount per asset,
     <= 16 rows leave each task); the Simpson fold is one asset-keyed
     map-side aggregate — zero data-proportional shuffle."""
-    assets = fan_out(binary_assets_df(spark, sf_dir), spark)
+    assets = binary_assets_df(spark, sf_dir)
     hist = assets.select("asset_id", "payload").mapInPandas(
         _pixel_hist, schema=_PXHIST_SCHEMA
     )

@@ -16,7 +16,7 @@ from snackfs_spark.functions import dsum, dsum_lattice, money, rate
 from snackfs_spark.functions import md5_fp, ts_str
 from snackfs_spark.memo import materialize_shared, shared
 from snackfs_spark.registry import register
-from snackfs_spark.sources.tables import fan_out, load_table
+from snackfs_spark.sources.tables import load_table
 
 
 @register(
@@ -57,9 +57,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation keeps results deterministic under any parallelism.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    filtered = fan_out(
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")), spark
-    )
+    filtered = li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
     # int64-lattice sums (functions.dsum_lattice): these group sums
     # cross 2^53 at large sf, where the direct decimal->double cast is
     # not engine-portable (DESIGN.md rule 8; caught by the r7 sf1
@@ -190,7 +188,7 @@ def q5_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     n = load_table(spark, sf_dir, "nation")
     s = load_table(spark, sf_dir, "supplier")
-    li = fan_out(load_table(spark, sf_dir, "lineitem"), spark)
+    li = load_table(spark, sf_dir, "lineitem")
     dims = (
         s.join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
         .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
@@ -2185,7 +2183,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation")
     s = load_table(spark, sf_dir, "supplier")
     p = load_table(spark, sf_dir, "part").filter(F.col("p_size") == 15)
-    li = fan_out(load_table(spark, sf_dir, "lineitem"), spark)
+    li = load_table(spark, sf_dir, "lineitem")
     eu = (
         s.join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
         .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
@@ -2246,7 +2244,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation")
     s = load_table(spark, sf_dir, "supplier")
     p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%gear%"))
-    li = fan_out(load_table(spark, sf_dir, "lineitem"), spark)
+    li = load_table(spark, sf_dir, "lineitem")
     sn = s.join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"]).select(
         "s_suppkey", "n_name"
     )
@@ -2294,7 +2292,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushed down, but the per-part aggregate collapses map-side first."""
     n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
     s = load_table(spark, sf_dir, "supplier")
-    li = fan_out(load_table(spark, sf_dir, "lineitem"), spark)
+    li = load_table(spark, sf_dir, "lineitem")
     sn = s.join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"]).select("s_suppkey")
     v = (
         li.join(F.broadcast(sn), li["l_suppkey"] == sn["s_suppkey"])
@@ -2333,11 +2331,8 @@ def q12_priority_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem scan; the join shuffles on orderkey and the 3-group count
     collapses map-side."""
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    li = fan_out(
-        load_table(spark, sf_dir, "lineitem").filter(
-            (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
-        ),
-        spark,
+    li = load_table(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
     )
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
@@ -2374,7 +2369,7 @@ def q16_part_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     s_bad = load_table(spark, sf_dir, "supplier").filter(
         F.col("s_name").like("%77%")
     ).select("s_suppkey")
-    li = fan_out(load_table(spark, sf_dir, "lineitem"), spark)
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.join(F.broadcast(s_bad), li["l_suppkey"] == s_bad["s_suppkey"], "left_anti")
         .join(
@@ -2416,7 +2411,7 @@ def q20_bulk_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     n = load_table(spark, sf_dir, "nation")
     s = load_table(spark, sf_dir, "supplier")
-    li = fan_out(load_table(spark, sf_dir, "lineitem"), spark)
+    li = load_table(spark, sf_dir, "lineitem")
     sold = (
         li.join(
             F.broadcast(p.select("p_partkey")),
@@ -2474,7 +2469,7 @@ def q21_straggler_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale where it outgrows the broadcast threshold the same plan
     degrades to an orderkey-co-partitioned hash join — either way the
     fact never self-joins at line granularity."""
-    li = fan_out(load_table(spark, sf_dir, "lineitem"), spark).select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
     # Collapse to one row per (order, supplier) FIRST: every downstream
@@ -2555,7 +2550,7 @@ def type_user_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct count. Materialization strategy: SNACKFS_MEMO_MATERIALIZE
     (r11 VERDICT #3 — "local" default, "reliable"/"none" on a cluster
     where user-proportional state must survive executor loss)."""
-    ev = fan_out(load_table(spark, sf_dir, "events"), spark)
+    ev = load_table(spark, sf_dir, "events")
     return materialize_shared(
         ev.select("event_type", "user_id").distinct(), spark
     )
@@ -2828,7 +2823,7 @@ def events_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholds broadcast between them — the exact two-pass shape a
     robust-metrics job runs at 100 TB, where a sort-based exact
     percentile would be a corpus-wide shuffle."""
-    ev = fan_out(load_table(spark, sf_dir, "events"), spark)
+    ev = load_table(spark, sf_dir, "events")
     bins = (
         ev.filter((F.col("value") >= 0) & (F.col("value") < 500))
         .groupBy(
@@ -2938,7 +2933,7 @@ def dq_check_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     compile to. A snapshot promotes only when n_violations = 0 for
     every gating rule."""
     cust = load_table(spark, sf_dir, "customer")
-    li = fan_out(load_table(spark, sf_dir, "lineitem"), spark)
+    li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     docs = load_table(spark, sf_dir, "documents")
     ev = load_table(spark, sf_dir, "events")
@@ -3200,7 +3195,7 @@ def join_size_estimate_cm(spark: SparkSession, sf_dir: str) -> DataFrame:
         return d.groupBy("i", bucket.alias("bucket")).agg(
             F.count(F.lit(1)).alias("n")
         )
-    ev = fan_out(load_table(spark, sf_dir, "events"), spark)
+    ev = load_table(spark, sf_dir, "events")
     orders = load_table(spark, sf_dir, "orders")
     a = cells(ev, "user_id")
     b = cells(orders, "o_custkey").select(
@@ -4013,7 +4008,7 @@ def approx_hll_daily_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums run over <= |days| rows. The exact reference pays one
     user-keyed min shuffle (first-occurrence pattern). All integer
     until the one portable float estimate per day."""
-    ev = fan_out(load_table(spark, sf_dir, "events"), spark)
+    ev = load_table(spark, sf_dir, "events")
     day = F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd")
     regs = _hll_registers(ev.select(day.alias("day"), "user_id"), "day")
     from pyspark.sql import Window

@@ -32,7 +32,7 @@ from snackfs_spark.operators.dedup import (
 )
 from snackfs_spark.memo import shared
 from snackfs_spark.registry import register
-from snackfs_spark.sources.tables import fan_out, load_table
+from snackfs_spark.sources.tables import load_table
 
 TRAIN_PCT = 80
 VAL_PCT = 10  # test = remainder
@@ -2304,8 +2304,8 @@ def sample_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(s, p) for s, p in SRM_EXPECT], "split string, pct long"
     )
     obs = (
-        F.broadcast(expect)
-        .join(counts, "split", "left")
+        # broadcast the right side: the only side a left outer join can build
+        expect.join(F.broadcast(counts), "split", "left")
         .select("split", "pct", F.coalesce("n", F.lit(0)).cast("long").alias("n_obs"))
         # 3 rows; checkpoint so the four consumers (total, chi fold,
         # final projection) read it instead of re-running the scan
@@ -3110,7 +3110,7 @@ def arm_metric_groups_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     ECDF gap read nothing else. Memoized per (session, sf_dir) so the
     second test skips the events scan and the user-keyed shuffle
     (r11 opt, the kmeans_cents pattern)."""
-    ev = fan_out(load_table(spark, sf_dir, "events"), spark)
+    ev = load_table(spark, sf_dir, "events")
     u = (
         ev.groupBy("user_id")
         .agg(
@@ -3602,7 +3602,7 @@ def source_drift_emd(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources| x 64 rows; the dense-axis CDF and the pairwise join are
     bounded algebra on that lattice (|sources|^2 x 64 peak), never
     corpus-shaped."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     # the histogram is <= |sources| x 64 rows; checkpoint it so the
     # four downstream references (totals, CDF join, both pair sides)
     # share ONE corpus scan instead of re-deriving the subtree
@@ -3729,7 +3729,7 @@ def _pref_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind train_preference_pairs, UNcheckpointed so tests/test_plans.py
     can pin its window shapes (every row_number partitions on
     (source, q, bkt) — never a whole source)."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     # ONE text-tokenize pass: d is the narrow (no text column) per-doc
     # scoring relation, and it feeds THREE consumers — the histogram
     # build and both sides of the rank self-join. Unchckpointed, each
@@ -3888,7 +3888,7 @@ def train_pair_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python. Exactness: token sets are DISTINCT arrays, so intersection
     sizes are integers and the permille is one truncating division."""
     pairs = train_preference_pairs(spark, sf_dir)
-    toks = fan_out(load_table(spark, sf_dir, "documents"), spark).select(
+    toks = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.expr(
             "array_distinct(filter(split(text, ' '), t -> t <> ''))"

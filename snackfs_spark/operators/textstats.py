@@ -23,7 +23,7 @@ from snackfs_spark.functions import (
 )
 from snackfs_spark.memo import shared
 from snackfs_spark.registry import register
-from snackfs_spark.sources.tables import fan_out, load_table
+from snackfs_spark.sources.tables import load_table
 
 # Tiny per-language marker lexicons for the n-gram/stopword heuristic.
 LANG_MARKERS = {
@@ -153,7 +153,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprint: position-weighted character hash (the
     order-sensitive rolling-hash family, but expressible as a plain sum
     so it aggregates map-side and stays deterministic)."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(
             "doc_id",
@@ -182,7 +182,7 @@ def text_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses map-side (vocab cardinality << token count), and the
     top-k is TakeOrderedAndProject — per-partition heaps, never a
     global sort. Tie-break on token keeps the cut deterministic."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(F.explode(F.split("text", " ")).alias("token"))
         .groupBy("token")
@@ -217,7 +217,7 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cut is per-partition heaps (TakeOrderedAndProject); the explode
     runs at scan parallelism. Tie-break on pair keeps the top-100 cut
     deterministic."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     words = docs.select(F.explode(F.split("text", " ")).alias("word")).filter(
         F.length("word") >= 2
     )
@@ -294,7 +294,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     higher-order-function projection: zero shuffles, scan-speed at
     100 TB (contrast with dedup.shingles_df, which explodes because its
     consumers aggregate ACROSS documents; here the stats stay per-doc)."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     # Stage the token array once: each downstream stat references the
     # materialized `toks` column instead of re-splitting text per
     # expression (codegen does not CSE across higher-order functions).
@@ -347,7 +347,7 @@ def text_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     end) and hash-identical across engines and partitionings. Two
     map-combinable aggregations: (doc, token) counts collapse map-side,
     then a per-doc rollup — no sort, no window, scan-bound at 100 TB."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     tc = (
         docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
         .groupBy("doc_id", "tok")
@@ -412,7 +412,7 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     The single-purpose variants (text_lang_id, text_quality_score,
     text_token_count, text_fingerprint) stay registered individually;
     this query is the one-scan composition of the four."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     counts = {lang: _marker_count_spark(lang) for lang in LANG_MARKERS}
     best = F.greatest(*counts.values())
@@ -487,7 +487,7 @@ def text_fingerprint_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
             out.append(int((codes * np.arange(1, len(codes) + 1)).sum() % 2147483647))
         return pd.Series(out, dtype="int64")
 
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select("doc_id", fp("text").alias("fingerprint"))
 
 
@@ -705,7 +705,7 @@ def text_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     token→vocab join is then map-side too, and the per-doc aggregate
     shuffles one row per (doc, partial). Two scans of text, zero
     corpus-sized shuffles."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
     vocab = toks.groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
     return (
@@ -760,7 +760,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     df, like the vocabulary, collapses map-side to vocab size and
     broadcasts; n_docs is a one-row broadcast. The per-doc top-k is a
     ranking window with partial WindowGroupLimit, never a global sort."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
     tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     df = toks.groupBy("token").agg(F.count_distinct("doc_id").alias("df"))
@@ -836,7 +836,7 @@ def text_bigram_prob(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation (perplexity buckets, the AUC/ECE/Brier/isotonic/kappa
     evals, corpus_build_v2, corpus_funnel_report) and each previously
     re-ran the full corpus scan + pair explode + broadcast joins."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     # adjacent pairs without a self-join: zip words with their tail
     pairs = docs.select(
@@ -991,7 +991,7 @@ def doc_quality_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     source tournament); they now share one scan behind a lazy
     localCheckpoint. n_chars rides along (a stored column, no extra
     compute) so the skyline consumer needs no second corpus pass."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         "source",
@@ -1112,7 +1112,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query-terms-sized, broadcast); only matching postings join; top-k is
     TakeOrderedAndProject. avgdl enters as dl·N/total_len — one
     correctly-rounded double chain shared by both engines."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     n = dl.agg(
@@ -1453,7 +1453,7 @@ def _bpe_chain(spark: SparkSession, sf_dir: str):
     chain, re-materializing the word-count shuffle and all K per-round
     checkpoints; now the chain's lazy checkpoints are shared, so the
     battery folds the vocabulary once."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(F.explode(F.split("text", " ")).alias("word"))
         .filter((F.col("word") != "") & ~F.col("word").contains(BPE_FUSE))
@@ -1543,7 +1543,7 @@ def bpe_segment_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus a doc_id roll-up — the corpus is never folded row-by-row. The
     join carries no broadcast hint: vocab is corpus-dependent, AQE
     broadcasts when it is actually small."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     _merges, vocab = _bpe_chain(spark, sf_dir)
     tok = vocab.select(
         "word", F.size(F.split("repr", " ")).cast("long").alias("n_sub")
@@ -1604,7 +1604,7 @@ def source_vocab_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot products); the single float expression per output row divides
     by the product of two correctly-rounded sqrts — identical op order
     in both engines, so 300 cosines hash-match exactly."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     tf = (
         docs.select("source", F.explode(F.split("text", " ")).alias("word"))
         .filter(F.col("word") != "")
@@ -1684,7 +1684,7 @@ def doc_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ZERO shuffles; at 100 TB this is a narrow map stage feeding the
     embedding step. Each chunk is hash-checked (md5 of its re-joined
     tokens), so off-by-one in window/stride arithmetic cannot hide."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     n = F.size(toks)
     n_chunks = F.expr(f"(size(split(text, ' ')) + {CHUNK_S - 1}) div {CHUNK_S}")
@@ -1757,7 +1757,7 @@ def events_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Everything is JVM regex expressions at scan parallelism, zero
     shuffles, zero UDFs; at 100 TB this is the pre-release scrub pass
     over every text/log column."""
-    ev = fan_out(load_table(spark, sf_dir, "events"), spark)
+    ev = load_table(spark, sf_dir, "events")
     line = F.concat(
         F.lit("evt "), F.col("event_id").cast("string"),
         F.lit(" acct "), (F.lit(100000) + F.col("user_id") * 7919).cast("string"),
@@ -2071,7 +2071,7 @@ def _retrieval_rank_rel(spark: SparkSession, sf_dir: str):
 def _retrieval_rank_rel_raw(spark: SparkSession, sf_dir: str):
     """The uncheckpointed pipeline behind ``_retrieval_rank_rel`` —
     what the physical-plan assertions inspect."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     qterms = spark.createDataFrame(
         [
             (qid, t)
@@ -2423,7 +2423,7 @@ def text_collocation_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys. The two count joins run shuffle-hashed because vocabulary
     grows with the corpus; the scalar token total broadcasts. The
     final top-k is one TakeOrderedAndProject, never a global sort."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     toks = docs.select(F.explode(words).alias("w")).filter(F.col("w") != "")
     # NO checkpoint on the unigram relation: the r11 checkpoint (4 scans
@@ -2542,7 +2542,7 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Margin joins run shuffle-hash on the vocab keys — vocab relations
     are corpus-unbounded in the worst case, so never broadcast (the
     100x-sweep OOM lesson); the 1-row B total broadcasts back in-plan."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     pairs = docs.select(
         F.explode(
@@ -3018,7 +3018,7 @@ def bpe_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     one exploded word join against the (word, n_sub) map, and the
     rollup collapses map-side onto |sources| keys. Ratios are exact
     integer permilles, so the report hash-matches at any partitioning."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     _merges, vocab = _bpe_chain(spark, sf_dir)
     tok = vocab.select(
         "word", F.size(F.split("repr", " ")).cast("long").alias("n_sub")
@@ -3108,7 +3108,7 @@ def text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side from codegen bucket exprs). The prefix sums run over the
     <= 64-row bucket table (the documented bounded two-phase
     decomposition). No sort, no join over the corpus."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     dw = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("word")
     ).filter(F.col("word") != "")
@@ -3320,7 +3320,7 @@ def text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     word keys — the same two-level shuffle class as TF-IDF; the 1-row
     doc count broadcasts; zero-count documents are never materialized
     (the n*sum_sq - total^2 identity absorbs them)."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     dw = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("word")
     ).filter(F.col("word") != "")
@@ -3420,7 +3420,7 @@ def text_zipf_octaves(spark: SparkSession, sf_dir: str) -> DataFrame:
     the largest count, ~sqrt-of-corpus distinct values in practice) —
     the score-group decomposition of DESIGN.md, so no global window
     touches the vocab. The final profile is <= 64 rows."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     # vocab-sized; feeds the frequency groups, the rank join AND the
     # token total — unchckpointed the tokenize + vocab collapse ran
     # three times (r11 opt: 3 scans -> 1)
@@ -3570,7 +3570,7 @@ def text_quality_perceptron(spark: SparkSession, sf_dir: str) -> DataFrame:
     bpe_learn_merges posture with the R corpus re-passes gone: zero
     driver collects, per-round state is PERC_NFEAT integers, ONE corpus
     pass total, no sort or window anywhere."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     js = range(PERC_NFEAT)
     n_tokens = F.size(F.split("text", " ")).cast("long")
     feats = (
@@ -4034,7 +4034,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation; the phrase-score join is word-keyed shuffle work, and the
     final cut is a TakeOrdered heap — no global sort of the phrase
     relation."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     stops_sql = ", ".join(f"'{w}'" for w in RAKE_STOPS)
     # maximal runs of consecutive non-stop, non-empty tokens — exactly
     # the rows the old running-stop-count window kept, grouped the same
@@ -4157,7 +4157,7 @@ def text_stop_list_induction(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical shuffle class to text_burstiness — one exploded
     scan collapsing map-side onto (word, doc) then word keys, the 1-row
     doc count broadcast, zero-count docs absorbed algebraically."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     dw = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("word")
     ).filter(F.col("word") != "")
@@ -4914,7 +4914,7 @@ def text_chi2_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     class sizes and per-token df are broadcast-sized; the per-class
     top-k is a ranking window with WindowGroupLimit, never a global
     sort."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     # ONE presence pass (r9 VERDICT #5): pres feeds df_all, the cell
     # counts AND the contingency — unckeckpointed, the physical plan
     # re-derived the tokenize+distinct subtree three times (three
@@ -5138,7 +5138,7 @@ def text_yule_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one token scan -> (source, token) counts (map-side partial),
     then a |sources|-row collapse. The 1e7-scaled numerator is O(N^2)
     -> decimal(38,0) holds past 1e15 tokens per source."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     toks = (
         docs.select("source", F.explode(F.split("text", " ")).alias("token"))
         .filter(F.col("token") != "")

@@ -16,7 +16,7 @@ from snackfs_spark.catalog import SnackCatalog
 from snackfs_spark.functions import ts_str
 from snackfs_spark.registry import register
 from snackfs_spark.sources.fsmodel import content_df, fs_sql
-from snackfs_spark.sources.tables import fan_out, load_table
+from snackfs_spark.sources.tables import load_table
 
 
 @register(
@@ -1514,7 +1514,7 @@ def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the same per-user aggregate. Every relation after that single
     aggregate is <= 4 rows, so the cell lattice and DiD algebra are
     bounded-relation crossJoins by construction."""
-    ev = fan_out(load_table(spark, sf_dir, "events"), spark).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.unix_micros("ts").alias("t_us")
     )
     b = ev.agg(
@@ -1673,7 +1673,7 @@ def events_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-hash), lags collapse onto the bounded hour histogram, and
     every quantile is a prefix-sum lookup over that bounded relation —
     the events_quantiles_binned posture, no sort of the lag relation."""
-    ev = fan_out(load_table(spark, sf_dir, "events"), spark).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.unix_micros("ts").alias("t_us")
     )
     # ONE user-keyed aggregate over ALL users anchors everything (r11
@@ -1921,7 +1921,7 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the unpartitioned suffix-sum window is safe for the same reason
     (<= days-in-window rows). The survival fold is per-row over a
     <= |grid| factor list."""
-    ev = fan_out(load_table(spark, sf_dir, "events"), spark).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.to_date("ts").alias("d")
     )
     # ONE user-keyed aggregate carries all three anchors (first event,
@@ -2051,7 +2051,7 @@ def orders_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     lattice (9.2e16 dollars of monthly headroom); the smoothing trace
     is dyadic-coefficient double arithmetic, deterministic in both
     engines."""
-    o = fan_out(load_table(spark, sf_dir, "orders"), spark)
+    o = load_table(spark, sf_dir, "orders")
     m = o.groupBy(
         F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias("month")
     ).agg(
@@ -2160,7 +2160,7 @@ def orders_open_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpartitioned prefix-sum window is safe because the axis is
     calendar-bounded, not corpus-bounded. The naive months x orders
     stabbing join this replaces is what the oracle-side test recounts."""
-    li = fan_out(load_table(spark, sf_dir, "lineitem"), spark)
+    li = load_table(spark, sf_dir, "lineitem")
     comp = li.groupBy("l_orderkey").agg(F.max("l_shipdate").alias("done"))
     o = (
         load_table(spark, sf_dir, "orders")
@@ -2274,7 +2274,7 @@ def orders_ar_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem max per order, one order-keyed shuffle-hash join), then a
     1-row reference broadcast and a <= 4-key bucket aggregate; cents
     ride the int64 lattice."""
-    li = fan_out(load_table(spark, sf_dir, "lineitem"), spark)
+    li = load_table(spark, sf_dir, "lineitem")
     comp = li.groupBy("l_orderkey").agg(F.max("l_shipdate").alias("done"))
     o = (
         load_table(spark, sf_dir, "orders")
@@ -2381,7 +2381,7 @@ def events_conformance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject top-k — no global sort, no rule-table join
     (the model compiles to codegen CASE arithmetic)."""
     ev = (
-        fan_out(load_table(spark, sf_dir, "events"), spark)
+        load_table(spark, sf_dir, "events")
         .filter(F.col("event_type") != "error")
         .select(
             "user_id",
@@ -2506,7 +2506,7 @@ def orders_seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     run over a CALENDAR-bounded unpartitioned frame (<= |months| rows,
     never corpus-sized). The MASE ratio is one 1-row broadcast back
     over the month rows."""
-    o = fan_out(load_table(spark, sf_dir, "orders"), spark)
+    o = load_table(spark, sf_dir, "orders")
     m = o.groupBy(F.date_trunc("month", "o_orderdate").alias("mo")).agg(
         F.sum((money("o_totalprice") * 100).cast("long")).cast("long").alias("yc")
     )
@@ -2635,7 +2635,7 @@ def orders_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded-axis rule). The excess lattice rides int64
     (|excess| < tot, cum < n*tot; 9.2e18 headroom holds past $900 T
     total revenue); the ppm numerator alone needs decimal(38,0)."""
-    o = fan_out(load_table(spark, sf_dir, "orders"), spark)
+    o = load_table(spark, sf_dir, "orders")
     # <= |months| rows; checkpointed because BOTH the series totals and
     # the excess curve consume it — unchckpointed each re-ran the order
     # scan + month aggregate (r11 opt)

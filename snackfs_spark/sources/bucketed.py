@@ -98,68 +98,6 @@ def association_rules_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange, no sort on the join. This is the 100 TB layout lever the
     r8 sweep flagged (0.67/decade was the steepest exponent in the
     fleet; the self-join shuffle dominates it)."""
-    from snackfs_spark.operators.mining import BASKET_MINSUP, RULE_MIN_CONF_PPM
+    from snackfs_spark.operators.mining import association_rules
 
-    li = spark.table(build_bucketed_baskets(spark, sf_dir))
-    n = li.agg(F.count_distinct("l_orderkey").cast("long").alias("n_baskets"))
-    item = li.groupBy("l_partkey").agg(
-        F.count(F.lit(1)).cast("long").alias("support")
-    )
-    freq = item.filter(F.col("support") >= BASKET_MINSUP).localCheckpoint(
-        eager=False
-    )
-    b = li.join(F.broadcast(freq.select("l_partkey")), "l_partkey")
-    x = b.alias("x")
-    y = b.alias("y")
-    pairs = (
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-        )
-        .groupBy(
-            F.col("x.l_partkey").alias("part_a"),
-            F.col("y.l_partkey").alias("part_b"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("pair_support"))
-        .filter(F.col("pair_support") >= BASKET_MINSUP)
-    )
-    rules = pairs.select(
-        F.col("part_a").alias("antecedent"),
-        F.col("part_b").alias("consequent"),
-        "pair_support",
-    ).unionByName(
-        pairs.select(
-            F.col("part_b").alias("antecedent"),
-            F.col("part_a").alias("consequent"),
-            "pair_support",
-        )
-    )
-    fa = freq.select(
-        F.col("l_partkey").alias("antecedent"), F.col("support").alias("support_ante")
-    )
-    fb = freq.select(
-        F.col("l_partkey").alias("consequent"), F.col("support").alias("support_cons")
-    )
-    return (
-        rules.join(F.broadcast(fa), "antecedent")
-        .join(F.broadcast(fb), "consequent")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "antecedent",
-            "consequent",
-            "pair_support",
-            "support_ante",
-            "support_cons",
-            F.expr("(1000000 * pair_support) div support_ante")
-            .cast("long")
-            .alias("confidence_ppm"),
-            F.expr(
-                "(CAST(1000000 AS decimal(38,0)) * pair_support * n_baskets)"
-                " div (CAST(support_ante AS decimal(38,0)) * support_cons)"
-            )
-            .cast("long")
-            .alias("lift_ppm"),
-        )
-        .filter(F.col("confidence_ppm") >= RULE_MIN_CONF_PPM)
-    )
+    return association_rules(spark.table(build_bucketed_baskets(spark, sf_dir)))

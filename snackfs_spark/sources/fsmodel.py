@@ -42,7 +42,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from snackfs_spark.memo import shared
-from snackfs_spark.sources.tables import fan_out, load_table
+from snackfs_spark.sources.tables import load_table
 
 SUB_CHARS = 64          # sub-block payload size (reference: 8 MB, scaled)
 SUBS_PER_BLOCK = 4      # sub-blocks per block (reference: 128 MB / 8 MB = 16)
@@ -237,7 +237,7 @@ def content_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's sblock layout (one column per sub-block,
     ThriftStore.scala:352-365) re-expressed as rows — chunk_text over
     the documents, cached."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     return chunk_text(docs, doc_path()).cache()
 
 

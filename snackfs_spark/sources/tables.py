@@ -5,9 +5,10 @@ events documents embeddings — one parquet file per table under
 /root/testdata/sf{0.001,0.01,0.1}/.
 
 Reads are plain ``spark.read.parquet`` so Catalyst's parquet scan keeps
-predicate pushdown / column pruning / row-group skipping. A table big
-enough to split is read from a multi-file copy in the work dir
-(load_table), the shape data has at cluster scale; nothing else changes.
+predicate pushdown / column pruning / row-group skipping. A table of at
+least SPLIT_BYTES is read from a copy of one file per core in the work
+dir (load_table), the shape data has at cluster scale: the layout gives
+every scan its tasks, and no query repartitions a table it reads.
 """
 
 from __future__ import annotations
@@ -31,31 +32,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def fan_out(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Restore scan parallelism when the source produced fewer partitions
-    than the cluster has slots (the classic small-file / single-row-group
-    problem: a parquet file with one row group scans as ONE task no
-    matter its size).
-
-    At real scale inputs have >= cores splits and this is a no-op; on the
-    bench's single-row-group files it trades one cheap round-robin
-    shuffle of the (already filtered/pruned) rows for full parallelism in
-    everything downstream. Call it AFTER filters so pushdown is intact.
-
-    Parallelism is probed via the file-source split count
-    (``df.inputFiles()``, a driver-side metadata call) rather than
-    ``df.rdd.getNumPartitions`` — touching ``.rdd`` forces Spark to set
-    up the whole Python deserialization pipeline for the frame (r6
-    VERDICT #7). A non-file-backed frame reports zero input files and is
-    returned unchanged: its parallelism is its parent's, not a scan's.
-    """
-    target = spark.sparkContext.defaultParallelism
-    n_files = len(df.inputFiles())
-    if 0 < n_files < max(2, target // 2):
-        return df.repartition(target)
-    return df
 
 
 def read_events(spark: SparkSession, read: Callable[[], DataFrame]) -> DataFrame:
@@ -91,25 +67,26 @@ def _read_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-# One split per SPLIT_BYTES of raw parquet, capped at the core count: big
-# facts get full parallelism, small tables are NOT shredded into 32 tiny
-# files (per-task overhead would dominate; their CPU-heavy pipelines call
-# fan_out AFTER filtering instead). Read at call time, so tests can lower it.
+# The one parallelism rule: a table of at least SPLIT_BYTES of raw parquet
+# is read from a copy of one file per core, so every scan of it runs as
+# many tasks as the session has slots and no query reshuffles its input;
+# a smaller table reads its raw file as one task, cheaper than the copy's
+# per-task overhead. Read at call time, so tests can lower it.
 SPLIT_BYTES = 512 * 1024
 
 
 def _layout(spark: SparkSession, sf_dir: str) -> tuple[str, dict[str, int]]:
     """(copy root, {table: split count}) for the fixture at ``sf_dir``:
-    every table that splits (count > 1) is read from its copy under the
-    root; the rest, every dimension table included, stay raw."""
-    cap = spark.sparkContext.defaultParallelism
+    the tables read from their copies under the root; the rest, every
+    dimension table included, stay raw. A one-core session splits
+    nothing: its copy would scan as one task, like the raw file."""
+    cores = spark.sparkContext.defaultParallelism
     splits = {}
     for name in TABLES:
         raw = os.path.join(sf_dir, f"{name}.parquet")
         # a fixture may hold only the tables its queries read
-        n = min(os.path.getsize(raw) // SPLIT_BYTES, cap) if os.path.exists(raw) else 0
-        if n > 1:
-            splits[name] = n
+        if cores > 1 and os.path.exists(raw) and os.path.getsize(raw) >= SPLIT_BYTES:
+            splits[name] = cores
     # Joined here, through this module's os, with the ingest kind root as
     # the first argument: perfbench/workloads.py redirects exactly that
     # call to a fresh dir, so every benchmark setup pays a cold ingest.
@@ -146,8 +123,9 @@ def build_ingest_cache(spark: SparkSession, sf_dir: str) -> str:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """The table ``name`` of the fixture at ``sf_dir``, in the one layout
     the fixture and the core count decide (DESIGN.md "Table layout"): a
-    table with one split reads its raw file; a larger one reads its split
-    copy, built first if it is missing."""
+    table under SPLIT_BYTES reads its raw file; a larger one reads its
+    copy of one file per core, built first if it is missing. This is the
+    only place a table read's partition count is decided."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     # Timestamp semantics must match the DuckDB oracle regardless of which

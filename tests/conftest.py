@@ -105,6 +105,20 @@ def testdata_dtype_contract():
         )
 
 
+@pytest.fixture(scope="session", autouse=True)
+def work_root(tmp_path_factory):
+    """Every on-disk cache the tests build (split copies, the connector
+    store, the interchange shards, the warehouse) goes to a session temp
+    dir named ``var``, like the real root, so the redirect test still
+    sees ``/var/ingest``; the repo's own ``var/`` is never written."""
+    from snackfs_spark import workdir
+
+    mp = pytest.MonkeyPatch()
+    mp.setattr(workdir, "ROOT", str(tmp_path_factory.mktemp("work") / "var"))
+    yield
+    mp.undo()
+
+
 @pytest.fixture(scope="session")
 def spark():
     from snackfs_spark.session import get_spark

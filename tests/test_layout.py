@@ -146,24 +146,37 @@ def test_minhash_band_store_incremental_join_no_corpus_shuffle(spark):
 
 
 def test_ingest_cache_identical_results(spark, tmp_path, monkeypatch):
-    """One table layout, decided by the fixture and the core count alone:
-    a table under two SPLIT_BYTES reads its raw file; a larger one reads
-    its split copy, built by the first read (no build_ingest_cache call).
-    The split layout, the one the bench times, hash-matches the oracles.
+    """One parallelism rule, decided by the fixture and the core count
+    alone: a table of at least SPLIT_BYTES reads a copy of exactly
+    defaultParallelism files, built by the first read (no
+    build_ingest_cache call); a smaller table reads its raw file. The
+    split layout, the one the bench times, hash-matches the oracles.
     None of the queries builds a @shared relation over the tmp copies."""
+    import os
+
     from snackfs_spark import workdir
     from snackfs_spark.registry import load_all
     from snackfs_spark.sources import tables
     from tests.oracle_harness import duckdb_connection, run_query_pair
 
-    raw = tables.load_table(spark, SF_ORACLE, "lineitem").inputFiles()
-    assert len(raw) == 1 and raw[0].endswith(f"{SF_ORACLE}/lineitem.parquet"), raw
+    cores = spark.sparkContext.defaultParallelism
+    # at the default threshold only sf0.01's lineitem (1 MB) splits
+    assert tables._layout(spark, SF_ORACLE)[1] == {"lineitem": cores}
 
     monkeypatch.setattr(workdir, "ROOT", str(tmp_path))
     monkeypatch.setattr(tables, "SPLIT_BYTES", 64 * 1024)
-    for name in ("lineitem", "orders", "events"):
+    split = set()
+    for name in tables.TABLES:
+        raw = os.path.join(SF_ORACLE, f"{name}.parquet")
         files = tables.load_table(spark, SF_ORACLE, name).inputFiles()
-        assert len(files) > 1 and all(str(tmp_path) in f for f in files), (name, files)
+        if os.path.getsize(raw) >= tables.SPLIT_BYTES:
+            split.add(name)
+            assert len(files) == cores, (name, files)
+            assert all(str(tmp_path) in f for f in files), (name, files)
+        else:
+            assert len(files) == 1 and files[0].endswith(raw), (name, files)
+    # both sides of the threshold are exercised
+    assert {"lineitem", "orders", "events"} <= split < set(tables.TABLES), split
     reg = load_all()
     con = duckdb_connection(SF_ORACLE)
     try:

@@ -79,17 +79,19 @@ def test_stream_stream_join_equals_batch(spark):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
-def test_incremental_microbatches_converge_to_batch(spark, monkeypatch):
+def test_incremental_microbatches_converge_to_batch(spark, tmp_path, monkeypatch):
     """True incremental execution: stream the multi-file ingest layout
     one file per trigger, so the windowed aggregation is computed across
     SEVERAL micro-batches with state carried between them — and the
     drained result must still equal the batch plan."""
     import glob
 
+    from snackfs_spark import workdir
     from snackfs_spark.sources import tables
     from tests.conftest import SF_ORACLE
 
     with monkeypatch.context() as m:
+        m.setattr(workdir, "ROOT", str(tmp_path))
         m.setattr(tables, "SPLIT_BYTES", 64 * 1024)
         root = tables.build_ingest_cache(spark, SF_ORACLE)
     # the default SPLIT_BYTES is back: the batch side reads the raw file

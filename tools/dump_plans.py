@@ -19,6 +19,7 @@ if str(_REPO) not in sys.path:
     sys.path.insert(0, str(_REPO))
 
 from bench import QUERIES  # noqa: E402
+from snackfs_spark.plans import formatted_plan  # noqa: E402
 from snackfs_spark.registry import load_all  # noqa: E402
 from snackfs_spark.session import get_spark  # noqa: E402
 
@@ -53,9 +54,7 @@ def main() -> None:
     ]
     for name in QUERIES:
         df = reg[name].fn(spark, SF)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
+        plan = formatted_plan(df)
         ops = []
         for l in plan.splitlines():
             m = re.match(r"^\s*\(\d+\)\s+(.*)", l)

@@ -20,6 +20,7 @@ _REPO = Path(__file__).resolve().parent.parent
 if str(_REPO) not in sys.path:
     sys.path.insert(0, str(_REPO))
 
+from snackfs_spark.plans import formatted_plan  # noqa: E402
 from snackfs_spark.registry import load_all  # noqa: E402
 from snackfs_spark.session import get_spark  # noqa: E402
 
@@ -37,10 +38,7 @@ def main() -> None:
     spark = get_spark("explain_queries", cpus=8)
     for name in args:
         df = reg[name].fn(spark, SF_DIR)
-        txt = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        (outdir / f"{name}_{suffix}.txt").write_text(txt)
+        (outdir / f"{name}_{suffix}.txt").write_text(formatted_plan(df))
         print(f"wrote {outdir / f'{name}_{suffix}.txt'}", file=sys.stderr)
     spark.stop()
 
