@@ -282,16 +282,7 @@ class SnackCatalog:
     def block_locations(self) -> DataFrame:
         """Token-ring interval match (ThriftStore.scala:543-605)."""
         b = fsmodel.blocks_df(self.spark, self.sf_dir)
-        r = F.broadcast(fsmodel.ring_df(self.spark, self.sf_dir))
-        normal = (
-            (r["tok_start"] < r["tok_end"])
-            & (b["token"] > r["tok_start"])
-            & (b["token"] <= r["tok_end"])
-        )
-        wrap = (r["tok_start"] >= r["tok_end"]) & (
-            (b["token"] > r["tok_start"]) | (b["token"] <= r["tok_end"])
-        )
-        return b.join(r, normal | wrap).select("path", "block_idx", "host")
+        return fsmodel.place(self.spark, self.sf_dir, b).select("path", "block_idx", "host")
 
     # ---- path utilities ---------------------------------------------
 

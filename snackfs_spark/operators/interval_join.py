@@ -15,17 +15,31 @@ from pyspark.sql import functions as F
 
 from snackfs_spark.catalog import SnackCatalog
 from snackfs_spark.registry import register
-from snackfs_spark.sources.fsmodel import RING_NODES, RING_STEP, fs_sql
+from snackfs_spark.sources.fsmodel import (
+    REPLICATION,
+    RING_NODES,
+    TOKEN_SPACE,
+    blocks_df,
+    files_df,
+    fs_sql,
+    owned_by,
+    owned_by_sql,
+    place,
+    ring_df,
+)
 from snackfs_spark.sources.tables import load_table
+
+
+# Every oracle's block -> host match: owned_by_sql over the ring view.
+RING_ON = owned_by_sql("b.token", "r.tok_start", "r.tok_end")
 
 
 @register(
     "fs_block_locations",
     oracle=fs_sql(
-        """SELECT b.path, b.block_idx, r.host
+        f"""SELECT b.path, b.block_idx, r.host
            FROM blocks b JOIN ring r
-             ON (r.tok_start < r.tok_end AND b.token > r.tok_start AND b.token <= r.tok_end)
-             OR (r.tok_start >= r.tok_end AND (b.token > r.tok_start OR b.token <= r.tok_end))""",
+             ON {RING_ON}""",
         "blocks",
         "ring",
     ),
@@ -87,8 +101,7 @@ RANGE_READ_LEN = 600
                AND bl.block_idx * 256 + least(256, f.fsize - bl.block_idx * 256)
                    > {RANGE_READ_START}
            ) b JOIN ring r
-             ON (r.tok_start < r.tok_end AND b.token > r.tok_start AND b.token <= r.tok_end)
-             OR (r.tok_start >= r.tok_end AND (b.token > r.tok_start OR b.token <= r.tok_end))""",
+             ON {RING_ON}""",
         "blocks",
         "files",
         "ring",
@@ -100,8 +113,6 @@ def fs_block_locations_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate is implemented CORRECTLY — the reference's filter at
     SnackFS.scala:138 only drops blocks before the range and wrongly
     keeps blocks after it; the oracle pins the correct semantics."""
-    from snackfs_spark.sources.fsmodel import blocks_df, files_df, ring_df
-
     lo, hi = RANGE_READ_START, RANGE_READ_START + RANGE_READ_LEN
     b = blocks_df(spark, sf_dir)
     f = files_df(spark, sf_dir).filter(~F.col("is_dir")).select(
@@ -114,22 +125,10 @@ def fs_block_locations_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("b_off") < hi) & (F.col("b_off") + F.col("b_len") > lo))
         .select("path", "block_idx", "token")
     )
-    r = F.broadcast(ring_df(spark, sf_dir))
-    normal = (
-        (r["tok_start"] < r["tok_end"])
-        & (b["token"] > r["tok_start"])
-        & (b["token"] <= r["tok_end"])
-    )
-    wrap = (r["tok_start"] >= r["tok_end"]) & (
-        (b["token"] > r["tok_start"]) | (b["token"] <= r["tok_end"])
-    )
-    return b.join(r, normal | wrap).select("path", "block_idx", "host")
+    return place(spark, sf_dir, b).select("path", "block_idx", "host")
 
 
 # ----------------------------------------------------------- replica sets ----
-
-REPLICATION_FACTOR = 3  # Cassandra SimpleStrategy: owner + RF-1 ring successors
-
 
 @register(
     "fs_replica_sets",
@@ -140,14 +139,13 @@ REPLICATION_FACTOR = 3  # Cassandra SimpleStrategy: owner + RF-1 ring successors
                    CAST(n0.n_nationkey AS BIGINT) AS owner_key
             FROM blocks b
             JOIN ring r
-              ON (r.tok_start < r.tok_end AND b.token > r.tok_start AND b.token <= r.tok_end)
-              OR (r.tok_start >= r.tok_end AND (b.token > r.tok_start OR b.token <= r.tok_end))
+              ON {RING_ON}
             JOIN nation n0 ON r.host = n0.n_name
         ),
         placed AS (
             SELECT o.path, o.block_idx, rk.rank,
                    (o.owner_key + rk.rank) % {RING_NODES} AS replica_key
-            FROM owners o, (SELECT unnest(range(0, {REPLICATION_FACTOR})) AS rank) rk
+            FROM owners o, (SELECT unnest(range(0, {REPLICATION})) AS rank) rk
         )
         SELECT n.n_name AS host,
                CAST(SUM(CASE WHEN p.rank = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_primary,
@@ -168,18 +166,6 @@ def fs_replica_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     report. The ring is broadcast (as the reference broadcasts
     describe_ring to clients); the explode is x3; the rollup is 25 keys —
     block-count-proportional work, host-count-proportional output."""
-    from snackfs_spark.sources.fsmodel import blocks_df, ring_df
-
-    b = blocks_df(spark, sf_dir)
-    r = F.broadcast(ring_df(spark, sf_dir))
-    normal = (
-        (r["tok_start"] < r["tok_end"])
-        & (b["token"] > r["tok_start"])
-        & (b["token"] <= r["tok_end"])
-    )
-    wrap = (r["tok_start"] >= r["tok_end"]) & (
-        (b["token"] > r["tok_start"]) | (b["token"] <= r["tok_end"])
-    )
     # the owner's node key comes from the HOST IDENTITY (join back to
     # nation), not from dividing tok_start by RING_STEP: the division is
     # exact only while ranges start at exact multiples, and Spark's cast
@@ -191,14 +177,14 @@ def fs_replica_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     owners = (
-        b.join(r, normal | wrap)
+        place(spark, sf_dir, blocks_df(spark, sf_dir))
         .join(owner_keys, "host")
         .select("path", "block_idx", F.col("owner_key").cast("long").alias("owner_key"))
     )
     placed = owners.select(
         "path",
         "block_idx",
-        F.explode(F.sequence(F.lit(0), F.lit(REPLICATION_FACTOR - 1))).alias("rank"),
+        F.explode(F.sequence(F.lit(0), F.lit(REPLICATION - 1))).alias("rank"),
         "owner_key",
     ).select(
         "path",
@@ -240,8 +226,8 @@ EC_M = 2   # parity units per stripe
                (n_blocks + {EC_K - 1}) // {EC_K} AS stripes,
                {EC_M} * ((n_blocks + {EC_K - 1}) // {EC_K}) AS parity_blocks,
                n_blocks + {EC_M} * ((n_blocks + {EC_K - 1}) // {EC_K}) AS stored_ec,
-               3 * n_blocks AS stored_rf3,
-               3 * n_blocks
+               {REPLICATION} * n_blocks AS stored_rf3,
+               {REPLICATION} * n_blocks
                  - (n_blocks + {EC_M} * ((n_blocks + {EC_K - 1}) // {EC_K}))
                  AS savings_blocks,
                (1000 * (n_blocks + {EC_M} * ((n_blocks + {EC_K - 1}) // {EC_K})))
@@ -251,8 +237,7 @@ EC_M = 2   # parity units per stripe
                     CAST(COUNT(*) AS BIGINT) AS n_blocks,
                     CAST(COUNT(DISTINCT r.host) AS BIGINT) AS distinct_hosts
              FROM blocks b JOIN ring r
-               ON (r.tok_start < r.tok_end AND b.token > r.tok_start AND b.token <= r.tok_end)
-               OR (r.tok_start >= r.tok_end AND (b.token > r.tok_start OR b.token <= r.tok_end))
+               ON {RING_ON}
              GROUP BY b.path
            )""",
         "blocks",
@@ -273,20 +258,8 @@ def fs_erasure_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     is post-aggregation int64 arithmetic. The sub-stripe small-file
     penalty this surfaces is the real operational driver for packing
     small files before EC (cf. HDFS EC policy guidance)."""
-    from snackfs_spark.sources.fsmodel import blocks_df, ring_df
-
-    b = blocks_df(spark, sf_dir)
-    r = F.broadcast(ring_df(spark, sf_dir))
-    wrapless = (
-        (r["tok_start"] < r["tok_end"])
-        & (b["token"] > r["tok_start"])
-        & (b["token"] <= r["tok_end"])
-    )
-    wrapping = (r["tok_start"] >= r["tok_end"]) & (
-        (b["token"] > r["tok_start"]) | (b["token"] <= r["tok_end"])
-    )
     per_file = (
-        b.join(r, wrapless | wrapping)
+        place(spark, sf_dir, blocks_df(spark, sf_dir))
         .groupBy("path")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_blocks"),
@@ -300,8 +273,9 @@ def fs_erasure_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"(n_blocks + {EC_K - 1}) div {EC_K} AS stripes",
         f"{EC_M} * ((n_blocks + {EC_K - 1}) div {EC_K}) AS parity_blocks",
         f"n_blocks + {EC_M} * ((n_blocks + {EC_K - 1}) div {EC_K}) AS stored_ec",
-        "3 * n_blocks AS stored_rf3",
-        f"3 * n_blocks - (n_blocks + {EC_M} * ((n_blocks + {EC_K - 1}) div {EC_K}))"
+        f"{REPLICATION} * n_blocks AS stored_rf3",
+        f"{REPLICATION} * n_blocks"
+        f" - (n_blocks + {EC_M} * ((n_blocks + {EC_K - 1}) div {EC_K}))"
         " AS savings_blocks",
         f"(1000 * (n_blocks + {EC_M} * ((n_blocks + {EC_K - 1}) div {EC_K})))"
         " div n_blocks AS overhead_permille",
@@ -323,13 +297,10 @@ def fs_erasure_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "fs_hotspot_rebalance_plan",
     oracle=fs_sql(
-        """, matched AS (
+        f""", matched AS (
       SELECT r.host, CAST(COUNT(b.token) AS BIGINT) AS load
       FROM ring r LEFT JOIN blocks b
-        ON (r.tok_start < r.tok_end AND b.token > r.tok_start
-            AND b.token <= r.tok_end)
-        OR (r.tok_start >= r.tok_end AND (b.token > r.tok_start
-            OR b.token <= r.tok_end))
+        ON {RING_ON}
       GROUP BY r.host
     ),
     t AS (SELECT CAST(SUM(load) // COUNT(*) AS BIGINT) AS target FROM matched),
@@ -364,21 +335,10 @@ def fs_hotspot_rebalance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses map-side onto host keys, and everything after — target,
     ranks, pairing — is algebra over <= RING_NODES rows (the bounded
     windows are 25 rows by construction)."""
-    from snackfs_spark.sources.fsmodel import blocks_df, ring_df
-
-    b = blocks_df(spark, sf_dir)
-    r = F.broadcast(ring_df(spark, sf_dir))
-    normal = (
-        (r["tok_start"] < r["tok_end"])
-        & (b["token"] > r["tok_start"])
-        & (b["token"] <= r["tok_end"])
-    )
-    wrap = (r["tok_start"] >= r["tok_end"]) & (
-        (b["token"] > r["tok_start"]) | (b["token"] <= r["tok_end"])
-    )
+    placed = place(spark, sf_dir, blocks_df(spark, sf_dir)).select("host", "token")
     matched = (
         ring_df(spark, sf_dir)
-        .join(b.join(r, normal | wrap).select("host", "token"), "host", "left")
+        .join(placed, "host", "left")
         .groupBy("host")
         .agg(F.count("token").cast("long").alias("load"))
     )
@@ -445,24 +405,20 @@ def fs_hotspot_rebalance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT r.host, r.tok_start, r.tok_end,
              CAST(COUNT(b.token) AS BIGINT) AS load
       FROM ring r LEFT JOIN blocks b
-        ON (r.tok_start < r.tok_end AND b.token > r.tok_start
-            AND b.token <= r.tok_end)
-        OR (r.tok_start >= r.tok_end AND (b.token > r.tok_start
-            OR b.token <= r.tok_end))
+        ON {RING_ON}
       GROUP BY r.host, r.tok_start, r.tok_end
     ),
     donor AS (
       SELECT host, tok_start, tok_end,
-             CAST((tok_start + ((tok_end - tok_start + 4294967296) % 4294967296) // 2)
-                  % 4294967296 AS BIGINT) AS mid
+             CAST((tok_start + ((tok_end - tok_start + {TOKEN_SPACE}) % {TOKEN_SPACE}) // 2)
+                  % {TOKEN_SPACE} AS BIGINT) AS mid
       FROM matched
       QUALIFY ROW_NUMBER() OVER (ORDER BY load DESC, host) = 1
     ),
     moved AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n_moved
       FROM blocks b CROSS JOIN donor d
-      WHERE (d.tok_start < d.mid AND b.token > d.tok_start AND b.token <= d.mid)
-         OR (d.tok_start >= d.mid AND (b.token > d.tok_start OR b.token <= d.mid))
+      WHERE {owned_by_sql("b.token", "d.tok_start", "d.mid")}
     ),
     tot AS (SELECT CAST(SUM(load) AS BIGINT) AS total FROM matched),
     after AS (
@@ -499,21 +455,10 @@ def fs_ring_scaling_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction)."""
     from pyspark.sql import Window
 
-    from snackfs_spark.sources.fsmodel import TOKEN_SPACE, blocks_df, ring_df
-
     b = blocks_df(spark, sf_dir)
-    r = F.broadcast(ring_df(spark, sf_dir))
-    normal = (
-        (r["tok_start"] < r["tok_end"])
-        & (b["token"] > r["tok_start"])
-        & (b["token"] <= r["tok_end"])
-    )
-    wrap = (r["tok_start"] >= r["tok_end"]) & (
-        (b["token"] > r["tok_start"]) | (b["token"] <= r["tok_end"])
-    )
     matched = (
         ring_df(spark, sf_dir)
-        .join(b.join(r, normal | wrap).select("host", "token"), "host", "left")
+        .join(place(spark, sf_dir, b).select("host", "token"), "host", "left")
         .groupBy("host")
         .agg(F.count("token").cast("long").alias("load"))
         .join(ring_df(spark, sf_dir), "host")
@@ -535,16 +480,8 @@ def fs_ring_scaling_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     dj = F.broadcast(donor)
-    in_half = (
-        (dj["d_start"] < dj["mid"])
-        & (b["token"] > dj["d_start"])
-        & (b["token"] <= dj["mid"])
-    ) | (
-        (dj["d_start"] >= dj["mid"])
-        & ((b["token"] > dj["d_start"]) | (b["token"] <= dj["mid"]))
-    )
     moved = (
-        b.join(dj, in_half)
+        b.join(dj, owned_by(b["token"], dj["d_start"], dj["mid"]))
         .agg(F.count(F.lit(1)).cast("long").alias("n_moved"))
     )
     tot = matched.agg(F.sum("load").cast("long").alias("total"))

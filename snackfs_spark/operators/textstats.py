@@ -4523,7 +4523,14 @@ def retrieval_boolean_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
     wr = Window.orderBy(F.count(F.lit(1)).desc(), F.col("token"))
-    ranked = tf.groupBy("token").agg(F.row_number().over(wr).alias("rnk"))
+    # Only ranks up to max(BOOL_RANKS) are read: the filter lets Spark
+    # rank a top-k (TakeOrderedAndProject under the Window) instead of
+    # sorting the whole vocabulary in one task.
+    ranked = (
+        tf.groupBy("token")
+        .agg(F.row_number().over(wr).alias("rnk"))
+        .filter(F.col("rnk") <= max(BOOL_RANKS))
+    )
     q = ranked.agg(
         F.max(F.when(F.col("rnk") == BOOL_RANKS[0], F.col("token"))).alias("ta"),
         F.max(F.when(F.col("rnk") == BOOL_RANKS[1], F.col("token"))).alias("tb"),

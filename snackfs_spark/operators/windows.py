@@ -1,9 +1,12 @@
 """Window-function operators (SURVEY.md §2.B Q-SUBOFF/Q-LOCK + the
 star-schema window family): ranking, running totals, sessionization.
 
-Every window partitions by a key (path / customer / order / user) — no
-global windows, so state per partition stays bounded at 100 TB and the
-only shuffle is the hash exchange on the partition key.
+Windows over rows partition by a key (path / customer / order / user),
+so state per partition stays bounded at 100 TB and the only shuffle is
+the hash exchange on the partition key. The 5 windows with no
+partitionBy rank a calendar axis (tenure days or months; SCALE.md
+"Windows without `partitionBy`"): their input is bounded by the
+calendar, not by the row count.
 """
 
 from __future__ import annotations

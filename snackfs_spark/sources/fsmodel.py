@@ -26,7 +26,10 @@ deterministically from the driver's tables:
 This module owns the content layout: SUB_CHARS/BLOCK_CHARS and
 chunk_text, the one text -> sub-block mapping (the writer, append and
 the content view all call it; an empty text has no chunk rows). The
-inverse, chunks -> text, is catalog.reassemble_chunks.
+inverse, chunks -> text, is catalog.reassemble_chunks. It owns the
+placement rule too: owned_by (owned_by_sql in DuckDB) is the one
+token-in-ring-range test, and place the broadcast-ring join that every
+block-location query calls.
 
 Each relation exists twice, by construction identical: a Spark DataFrame
 builder and a DuckDB CTE string. Queries compose the Spark side; oracles
@@ -48,6 +51,7 @@ SUB_CHARS = 64          # sub-block payload size (reference: 8 MB, scaled)
 SUBS_PER_BLOCK = 4      # sub-blocks per block (reference: 128 MB / 8 MB = 16)
 BLOCK_CHARS = SUB_CHARS * SUBS_PER_BLOCK
 TOKEN_SPACE = 4294967296  # 2^32 token ring
+REPLICATION = 3           # Cassandra SimpleStrategy: owner + RF-1 ring successors
 RING_NODES = 25           # one range per nation row
 RING_STEP = TOKEN_SPACE // RING_NODES  # 171798691
 EPOCH = "2024-01-01 00:00:00"
@@ -321,6 +325,35 @@ def blocks_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("block_idx").cast("int").alias("block_idx"),
         F.expr(_TOKEN_SQL).alias("token"),
     ).cache()
+
+
+# ------------------------------------------------------------ placement ----
+
+
+def owned_by(token: Column, lo: Column, hi: Column) -> Column:
+    """token in the half-open ring range (lo, hi], wrapping past 2^32 when
+    lo >= hi: the one ownership rule (ThriftStore.scala:543-605)."""
+    normal = (lo < hi) & (token > lo) & (token <= hi)
+    wrap = (lo >= hi) & ((token > lo) | (token <= hi))
+    return normal | wrap
+
+
+def owned_by_sql(token: str, lo: str, hi: str) -> str:
+    """owned_by's DuckDB twin, over column expressions given as SQL."""
+    return (
+        f"({lo} < {hi} AND {token} > {lo} AND {token} <= {hi})"
+        f" OR ({lo} >= {hi} AND ({token} > {lo} OR {token} <= {hi}))"
+    )
+
+
+def place(spark: SparkSession, sf_dir: str, blocks: DataFrame) -> DataFrame:
+    """Add the owning ring row (host, tok_start, tok_end) to every row of
+    `blocks` by its `token` column. The ring is 25 rows at any scale, so
+    it is broadcast: a BroadcastNestedLoopJoin with no shuffle of
+    `blocks` (the reference ships describe_ring to every client for the
+    same reason)."""
+    r = F.broadcast(ring_df(spark, sf_dir))
+    return blocks.join(r, owned_by(blocks["token"], r["tok_start"], r["tok_end"]))
 
 
 # --------------------------------------------------------------- helpers ----

@@ -101,6 +101,8 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from snackfs_spark import pyworker, workdir
+from snackfs_spark.sources import fsmodel
+from snackfs_spark.sources.fsmodel import REPLICATION, TOKEN_SPACE
 
 # Spark starts the Python Data Source planner workers (define, pushdown,
 # plan, write commit) from its stock daemon, not from snackfs_spark.pyworker.
@@ -110,8 +112,6 @@ pyworker.trim_worker()
 
 DEFAULT_BUCKETS = 8
 LISTING_CAP = 100_000   # reference's hard listing cap (ThriftStore.scala:509)
-TOKEN_SPACE = 4294967296  # 2^32 ring, same space as sources/fsmodel.py
-REPLICATION = 3           # RF=3 SimpleStrategy-style replica walk
 
 SCHEMA = (
     "path string, sub_offset bigint, length bigint, payload string"
@@ -224,7 +224,9 @@ def bucket_replicas(bucket: int, buckets: int, hosts: list[str]) -> tuple[str, .
     the ring (equal ranges per host, wraparound at the top, exactly the
     fsmodel ring layout), owner = containing range, replicas = owner + the
     next RF-1 hosts clockwise — Cassandra SimpleStrategy, the locality
-    walk of ThriftStore.scala:543-605."""
+    walk of ThriftStore.scala:543-605. The owner test is fsmodel.owned_by
+    in plain Python: the planner workers that call this have no Spark
+    session to evaluate a Column in."""
     if not hosts:
         return ()
     token = (bucket * TOKEN_SPACE + TOKEN_SPACE // 2) // max(buckets, 1)
@@ -615,8 +617,6 @@ def store_for(spark, sf_dir: str) -> str:
     The ring's hosts are not in the key: they derive from the fixture's
     nation table, which the key covers, and collecting them costs a
     Spark job (~200 ms) that a reused store would pay on every call."""
-    from snackfs_spark.sources import fsmodel  # noqa: PLC0415
-
     register(spark)
 
     def write(root: str) -> None:

@@ -93,6 +93,21 @@ def test_vocab_topk_no_global_sort(spark):
     assert "TakeOrderedAndProject" in plan, plan
 
 
+def test_boolean_query_ranks_a_top_k_not_the_vocabulary(spark):
+    """retrieval_boolean_query reads only df ranks <= max(BOOL_RANKS), so
+    its global rank window sits on a TakeOrderedAndProject of that
+    limit: no single task sorts the whole vocabulary, and no exchange
+    gathers it into one partition."""
+    from snackfs_spark.operators.textstats import BOOL_RANKS
+
+    plan = formatted_plan(REG["retrieval_boolean_query"].fn(spark, SF_ORACLE))
+    tree = [l.strip(" :|+-") for l in plan.split("\n\n")[0].splitlines()]
+    at = tree.index(next(l for l in tree if l.startswith("Window")))
+    assert tree[at + 1].startswith("TakeOrderedAndProject"), plan
+    assert f"Arguments: {max(BOOL_RANKS)}, " in plan, plan
+    assert "SinglePartition" not in plan, plan
+
+
 def test_salted_join_spreads_key(spark):
     """The salted join must join on (custkey, salt), not custkey alone."""
     df = REG["rel_salted_skew_join"].fn(spark, SF_ORACLE)

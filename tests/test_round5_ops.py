@@ -245,14 +245,13 @@ def test_replica_sets_conservation_and_balance(spark):
     """Every block places exactly RF replicas: per-host totals sum to
     RF x #blocks, primaries sum to #blocks, and the LCG token dispersion
     must put load on every host."""
-    from snackfs_spark.operators.interval_join import REPLICATION_FACTOR
-    from snackfs_spark.sources.fsmodel import RING_NODES, blocks_df
+    from snackfs_spark.sources.fsmodel import REPLICATION, RING_NODES, blocks_df
 
     rows = REG["fs_replica_sets"].fn(spark, SF_SMALL).collect()
     n_blocks = blocks_df(spark, SF_SMALL).count()
     assert len(rows) == RING_NODES
     assert sum(r["n_primary"] for r in rows) == n_blocks
-    assert sum(r["n_total"] for r in rows) == REPLICATION_FACTOR * n_blocks
+    assert sum(r["n_total"] for r in rows) == REPLICATION * n_blocks
     for r in rows:
         assert r["n_total"] == r["n_primary"] + r["n_replica"]
         assert r["n_total"] > 0, f"host {r['host']} has no replicas"
